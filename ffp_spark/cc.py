@@ -8,7 +8,8 @@ per-round (local)checkpoints to truncate lineage.
 
 Node ids are strings; component representative = lexicographic min.
 Convergence detection: (count, sum(xxhash64(src,dst))) fingerprint of
-the edge set — deterministic for a given dataset.
+the edge set, observed on each round's checkpoint job — deterministic
+for a given dataset.
 """
 
 from __future__ import annotations
@@ -46,19 +47,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return relinked.where(F.col("src") != F.col("dst")).dropDuplicates(["src", "dst"])
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count("*").alias("n"),
-        F.coalesce(
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
-        ).alias("h"),
-    ).collect()[0]
-    return int(row.n), int(row.h)
-
-
-def connected_components(
-    edges: DataFrame, max_iter: int = 20, checkpoint: bool = True
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Edge list (src, dst) -> (node_id, component_id).
 
     component_id is the lexicographically smallest node id in the
@@ -67,60 +56,45 @@ def connected_components(
     cur = cur.select(
         F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
     ).dropDuplicates(["src", "dst"])
-    scoped_p = None
-    if checkpoint:
-        # materialize the input ONCE: each star round references its
-        # input several times (the union + two consumers of nbrs), and
-        # Spark does not dedupe common subtrees — without this the whole
-        # upstream edge-building pipeline executes ~4x inside round 0
-        # (measured 150s -> 32s for CC at 100k pages).  The edge count
-        # rides the same job and sizes the star rounds' shuffles
-        # (graph._iter_parts, guide §2.2) — star-round work is a few
-        # narrow columns of trivial per-row cost, so partitioning it by
-        # bytes instead of one-per-core removes the tiny-task overhead
-        # that dominates each round at small scale without costing
-        # parallelism at web scale.
-        obs0 = Observation()
-        cur = cur.observe(obs0, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
-        from .graph import _iter_parts
-
-        scoped_p = _iter_parts(
-            int(obs0.get["n"]),
-            edges.sparkSession.sparkContext.defaultParallelism,
-        )
+    # materialize the input ONCE: each star round references its
+    # input several times (the union + two consumers of nbrs), and
+    # Spark does not dedupe common subtrees — without this the whole
+    # upstream edge-building pipeline executes ~4x inside round 0
+    # (measured 150s -> 32s for CC at 100k pages).  The edge count
+    # rides the same job and sizes the star rounds' shuffles
+    # (graph._iter_parts, guide §2.2) — star-round work is a few
+    # narrow columns of trivial per-row cost, so partitioning it by
+    # bytes instead of one-per-core removes the tiny-task overhead
+    # that dominates each round at small scale without costing
+    # parallelism at web scale.
+    obs0 = Observation()
+    cur = cur.observe(obs0, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    from .graph import _iter_parts
 
     spark = edges.sparkSession
+    scoped_p = _iter_parts(int(obs0.get["n"]), spark.sparkContext.defaultParallelism)
     old_p = spark.conf.get("spark.sql.shuffle.partitions")
-    if scoped_p is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(scoped_p))
+    spark.conf.set("spark.sql.shuffle.partitions", str(scoped_p))
     try:
         prev_fp = None
         for _ in range(max_iter):
-            cur = _small_star(_large_star(cur))
-            if checkpoint:
-                # fold the convergence fingerprint into the checkpoint
-                # materialization via an observed metric — one job per
-                # round instead of two (checkpoint + separate agg scan)
-                obs = Observation()
-                cur = cur.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.coalesce(
-                        F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
-                    ).alias("h"),
-                )
-                cur = cur.localCheckpoint(eager=True)
-                fp = (int(obs.get["n"]), int(obs.get["h"]))
-            else:
-                fp = _fingerprint(cur)
+            # fold the convergence fingerprint into the checkpoint
+            # materialization via an observed metric — one job per
+            # round instead of two (checkpoint + separate agg scan)
+            obs = Observation()
+            cur = _small_star(_large_star(cur)).observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(
+                    F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
+                ).alias("h"),
+            ).localCheckpoint(eager=True)
+            fp = (int(obs.get["n"]), int(obs.get["h"]))
             if fp == prev_fp:
                 break
             prev_fp = fp
     finally:
-        if scoped_p is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_p)
+        spark.conf.set("spark.sql.shuffle.partitions", old_p)
 
     # After convergence the edge set is a star forest: dst is the root.
     members = cur.select(F.col("src").alias("node_id"), F.col("dst").alias("component_id"))

@@ -1070,9 +1070,9 @@ def hits(
         # aggregation subtree TWICE per half-step (Spark does not
         # dedupe common subtrees, guide §7.2).
         obs = Observation()
-        mat = raw.observe(obs, F.sum("raw").alias("tot")).localCheckpoint(
-            eager=True
-        )
+        mat = raw.observe(
+            obs, F.coalesce(F.sum("raw"), F.lit(0)).alias("tot")
+        ).localCheckpoint(eager=True)
         tot = int(obs.get["tot"])
         return _maybe_b(
             mat.select(

@@ -1,6 +1,9 @@
-"""Entity linking (operators K3-K6): mention extraction, MinHash
-signatures, LSH banding/blocking, candidate scoring, salted broadcast
-joins for hot keys.
+"""Entity linking (operators K3, K4, K6): author-mention extraction,
+MinHash signatures, LSH banding/blocking and candidate scoring.
+
+Only author mentions are linked: they are the one entity kind whose
+canonical id the materialized graph reads.  Site entities are keyed by
+``feed.id``/``feed.link`` and are not linked.
 
 Spark-first split of work:
 * MinHash signatures: vectorized numpy inside ONE pandas UDF (the only
@@ -10,9 +13,11 @@ Spark-first split of work:
   pure JVM expressions (posexplode/hash/zip_with/aggregate) — no Python
   in the shuffle-heavy path.
 
-At 100 TB the candidate join is the hot spot: banding bounds each block,
-``spark.sql.adaptive.skewJoin`` splits stragglers, and `salted_broadcast_join`
-covers the hot-small-dim pattern (K5) explicitly.
+At 100 TB the candidate join is the hot spot: banding bounds each block
+and ``spark.sql.adaptive.skewJoin`` splits stragglers.  The canonical
+dictionary join (K5, ``pipeline.materialize_graph``) is a plain
+broadcast: a broadcast hash join never shuffles its probe side, so a hot
+author key has no hot task to split.
 """
 
 from __future__ import annotations
@@ -20,7 +25,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
@@ -136,31 +141,23 @@ def minhash_udf(
 
 
 def extract_mentions(parsed: DataFrame) -> DataFrame:
-    """Author + site mentions from PARSED (north_star: author/site
-    canonicalization).  mention_id is a deterministic content hash."""
-    entries = exploded_entries(parsed)
-    authors = entries.filter(F.col("entry.author").isNotNull()).select(
-        F.col("entry.author").alias("surface"),
-        F.lit("author").alias("kind"),
-        F.col("url").alias("src_url"),
-        F.col("entry.id").alias("subject_id"),
-    )
-    sites = (
-        parsed.filter(F.col("error").isNull() & F.col("feed.title").isNotNull())
+    """Author mentions from PARSED, one row per entry with an author:
+    (surface, kind, src_url, subject_id, norm)."""
+    return (
+        exploded_entries(parsed)
+        .filter(F.col("entry.author").isNotNull())
         .select(
-            F.col("feed.title").alias("surface"),
-            F.lit("site").alias("kind"),
+            F.col("entry.author").alias("surface"),
+            F.lit("author").alias("kind"),
             F.col("url").alias("src_url"),
-            F.coalesce(F.col("feed.id"), F.col("feed.link")).alias("subject_id"),
+            F.col("entry.id").alias("subject_id"),
         )
-    )
-    mentions = authors.unionByName(sites)
-    return mentions.withColumn(
-        "mention_id",
-        F.sha2(F.concat_ws("", "kind", "surface", "src_url", "subject_id"), 256),
-    ).withColumn(
-        "norm",
-        F.trim(F.regexp_replace(F.lower(F.col("surface")), r"[^\p{L}\p{Nd}]+", " ")),
+        .withColumn(
+            "norm",
+            F.trim(
+                F.regexp_replace(F.lower(F.col("surface")), r"[^\p{L}\p{Nd}]+", " ")
+            ),
+        )
     )
 
 
@@ -169,6 +166,34 @@ def with_signatures(
 ) -> DataFrame:
     sig = minhash_udf(k=k, seed=seed, mode=mode)
     return mentions.withColumn("sig", sig(F.col("norm")))
+
+
+def _banded(signed: DataFrame, bands: int, k: int) -> DataFrame:
+    """One row per (surface, LSH band): the band's hash over its slice of
+    ``k // bands`` signature rows.  NULL signatures (surfaces shorter
+    than a shingle) are never blocked."""
+    rows_per_band = k // bands
+    return signed.filter(F.col("sig").isNotNull()).select(
+        "mention_id",
+        "norm",
+        "sig",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: F.hash(F.slice("sig", b * rows_per_band + 1, rows_per_band)),
+            )
+        ).alias("band_id", "band_hash"),
+    )
+
+
+def _agreement(sig_a: str, sig_b: str, k: int) -> Column:
+    """Signature-estimated Jaccard: the fraction of the k MinHash rows on
+    which two signatures agree."""
+    return F.aggregate(
+        F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    ) / F.lit(k)
 
 
 def candidate_pairs(
@@ -182,18 +207,7 @@ def candidate_pairs(
     Returns (a, b, norm_a, norm_b, score) with a < b.  All JVM-side:
     band hashes via slice+hash, similarity via zip_with/aggregate.
     """
-    rows_per_band = k // bands
-    banded = signed.filter(F.col("sig").isNotNull()).select(
-        "mention_id",
-        "norm",
-        "sig",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.hash(F.slice("sig", b * rows_per_band + 1, rows_per_band)),
-            )
-        ).alias("band_id", "band_hash"),
-    )
+    banded = _banded(signed, bands, k)
     # shuffle-hash, never broadcast: both sides descend from a Python UDF
     # whose cardinality Catalyst can't estimate — left alone, AQE guesses
     # "tiny" and broadcasts hundreds of MB of signatures (observed: 1 GB
@@ -220,14 +234,7 @@ def candidate_pairs(
             F.col("r.mention_id").alias("b"),
             F.col("l.norm").alias("norm_a"),
             F.col("r.norm").alias("norm_b"),
-            (
-                F.aggregate(
-                    F.zip_with("l.sig", "r.sig", lambda x, y: (x == y).cast("int")),
-                    F.lit(0),
-                    lambda acc, v: acc + v,
-                )
-                / F.lit(k)
-            ).alias("score"),
+            _agreement("l.sig", "r.sig", k).alias("score"),
         )
         .filter(F.col("score") >= min_jaccard)
     )
@@ -243,24 +250,13 @@ def bucket_star_edges(
     """Scale path for *clustering*: per LSH bucket, link every member to
     the bucket representative (min id) instead of all pairs.
 
-    All-pairs is O(bucket^2) — a hot domain whose feed titles all share
-    a bucket turns 6k members into 18M pairs.  The star keeps O(bucket)
-    edges while preserving connectivity for connected components (any
-    two members of a bucket are joined through the representative; the
-    per-edge Jaccard filter still prunes false bucket collisions).
+    All-pairs is O(bucket^2) — a hot bucket of 6k near-identical
+    surfaces turns into 18M pairs.  The star keeps O(bucket) edges while
+    preserving connectivity for connected components (any two members of
+    a bucket are joined through the representative; the per-edge Jaccard
+    filter still prunes false bucket collisions).
     """
-    rows_per_band = k // bands
-    banded = signed.filter(F.col("sig").isNotNull()).select(
-        "mention_id",
-        "norm",
-        "sig",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.hash(F.slice("sig", b * rows_per_band + 1, rows_per_band)),
-            )
-        ).alias("band_id", "band_hash"),
-    )
+    banded = _banded(signed, bands, k)
     reps = banded.groupBy("band_id", "band_hash").agg(
         F.min_by(F.struct("mention_id", "norm", "sig"), "mention_id").alias("rep")
     )
@@ -277,14 +273,7 @@ def bucket_star_edges(
             F.col("mention_id").alias("b"),
             F.col("rep.norm").alias("norm_a"),
             F.col("norm").alias("norm_b"),
-            (
-                F.aggregate(
-                    F.zip_with("rep.sig", "sig", lambda x, y: (x == y).cast("int")),
-                    F.lit(0),
-                    lambda acc, v: acc + v,
-                )
-                / F.lit(k)
-            ).alias("score"),
+            _agreement("rep.sig", "sig", k).alias("score"),
         )
         .filter(F.col("score") >= min_jaccard)
     )
@@ -297,24 +286,3 @@ def best_candidate(scored: DataFrame) -> DataFrame:
         F.max_by("b", "score").alias("best_match"),
         F.max("score").alias("best_score"),
     )
-
-
-def salted_broadcast_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    how: str = "left",
-) -> DataFrame:
-    """K5: explicit hot-key salting beyond AQE.  The small side is
-    replicated n_salts times (explode of a salt sequence) and broadcast;
-    the big side picks a deterministic salt from xxhash64(key), spreading
-    one hot key across n_salts parallel probe streams."""
-    salted_small = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    salted_big = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(key)), F.lit(n_salts)).cast("int")
-    )
-    joined = salted_big.join(F.broadcast(salted_small), on=[key, "_salt"], how=how)
-    return joined.drop("_salt")

@@ -10,21 +10,25 @@ Scale design notes (100 TB / 1000 executors):
   (pmod(xxhash64(url), n_parts)) — the same page always lands in the
   same part_id, which is what makes lineage-based resume (K9) sound;
 * the parse stage is the only Python hop; everything after is JVM
-  DataFrame ops (AQE handles skew-join splitting; hot-domain dimension
-  joins go through linking.salted_broadcast_join);
+  DataFrame ops (AQE handles skew-join splitting where a shuffle has a
+  hot key; the canonical author dictionary is a plain broadcast join,
+  whose probe side is never shuffled);
+* only author mentions are linked — site entities are keyed by
+  feed.id/feed.link and need no canonicalization;
 * per-stage caching is limited to the parsed DF which is consumed by
   both the triple and linking branches.
 """
 
 from __future__ import annotations
 
+import logging
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .cc import connected_components
 from .linking import bucket_star_edges, extract_mentions, with_signatures
-from .metrics import error_histogram
+from .metrics import error_histogram, partition_lineage
 from .schemas import PRED_AUTHOR
 from .snapshots import (
     read_snapshot,
@@ -195,7 +199,12 @@ def build_session(app: str, master: Optional[str] = None, shuffle_partitions: in
         .getOrCreate()
     )
     warm_collation(spark)
-    warm_python_workers(spark)
+    try:
+        warm_python_workers(spark)
+    except Exception:  # a warm-up is an optimization, not a contract
+        logging.getLogger(__name__).warning(
+            "Python worker warm-up failed, continuing without it", exc_info=True
+        )
     return spark
 
 
@@ -324,11 +333,12 @@ def resolve_meta_refresh(
 
 
 def link_and_canonicalize(parsed: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
-    """Mentions -> (norm, canonical norm) mapping via LSH + CC.
+    """Author mentions -> (norm, canonical norm) mapping via LSH + CC.
 
-    Clustering runs over *distinct normalized surfaces* (far smaller than
-    the mention set: the groupBy is the dedup), then mentions re-join the
-    mapping; canonical id = lexicographic min surface in the component.
+    Clustering runs over *distinct normalized author surfaces* (far
+    smaller than the mention set: the groupBy is the dedup), then
+    mentions re-join the mapping; canonical id = lexicographic min
+    surface in the component.
 
     Returns an eagerly-materialized CACHED mapping (tiny: one row per
     distinct surface) — callers join it repeatedly and must not replay
@@ -377,15 +387,11 @@ def materialize_graph(
         .withColumn("part_id", F.pmod(F.xxhash64("src_url"), F.lit(n_parts)).cast("int"))
     )
 
-    from .linking import salted_broadcast_join
-
-    mentions = extract_mentions(parsed)
-    # canonical dictionary join (K5): the canon mapping is the small side
-    # and author surfaces are Zipf-skewed (a few prolific authors own a
-    # large share of mentions) — replicate+salt the broadcast so one hot
-    # norm fans out across n_salts probe streams instead of one task
-    author_mentions = salted_broadcast_join(
-        mentions.filter(F.col("kind") == "author"), canon, "norm", n_salts=8
+    # canonical dictionary join (K5): the canon mapping is the small side.
+    # A broadcast hash join never shuffles the probe side, so a prolific
+    # author's hot norm costs no straggler task and needs no salting.
+    author_mentions = extract_mentions(parsed).join(
+        F.broadcast(canon), "norm", "left"
     )
     author_nodes = (
         author_mentions.groupBy(
@@ -549,7 +555,7 @@ def _run_snapshot_body(
     # the parse stage's artifact; this adds one V-sized local write.
     parsed = parsed.localCheckpoint(eager=True)
     # link_and_canonicalize runs its CC jobs eagerly and returns a
-    # cached mapping (the broadcast dimension of the salted author join,
+    # cached mapping (the broadcast dimension of the author join,
     # consumed by three write jobs); unpersisted after the commits
     canon = link_and_canonicalize(parsed)
     try:
@@ -585,21 +591,17 @@ def _commit_snapshot(
         stage_timings["link_cc_sec"] = round(time.perf_counter() - t0, 3)
 
     lineage_new = (
-        parsed.groupBy("part_id")
-        .agg(
-            F.count("*").alias("n_pages"),
-            F.count(F.when(F.col("error").isNull(), 1)).alias("n_parsed"),
-            F.count(F.when(F.col("error").isNotNull(), 1)).alias("n_errors"),
-            F.sum(F.coalesce(F.size("entries"), F.lit(0))).alias("n_entries"),
-        )
+        partition_lineage(parsed, snapshot_id)
         .join(
             triples.groupBy("part_id").agg(F.count("*").alias("n_triples")),
             "part_id",
             "left",
         )
-        .withColumn("n_triples", F.coalesce("n_triples", F.lit(0)))
-        .withColumn("snapshot_id", F.lit(snapshot_id))
-        .withColumn("status", F.lit("done"))
+        .select(
+            "part_id", "n_pages", "n_parsed", "n_errors", "n_entries",
+            F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
+            "snapshot_id", "status",
+        )
     )
 
     bucket = F.pmod(F.xxhash64("node_id"), F.lit(n_buckets)).cast("int")

@@ -643,14 +643,19 @@ def test_hits_matches_python_reference(spark):
 
     rng = random.Random(53)
     nodes = [f"h{i}" for i in range(18)]
-    pairs = [
+    random_pairs = [
         (x, y)
         for x, y in {(rng.choice(nodes), rng.choice(nodes)) for _ in range(80)}
         if x != y
     ]
-    got = {r.node: (r.hub_q, r.auth_q) for r in hits(_edges(spark, pairs), iters=3).collect()}
-    eh, ea = _reference_hits(pairs, iters=3, scale=HITS_SCALE)
-    assert got == {v: (eh[v], ea[v]) for v in eh}
+    # the empty edge set must give an empty frame, not raise
+    for pairs in (random_pairs, []):
+        got = {
+            r.node: (r.hub_q, r.auth_q)
+            for r in hits(_edges(spark, pairs), iters=3).collect()
+        }
+        eh, ea = _reference_hits(pairs, iters=3, scale=HITS_SCALE)
+        assert got == {v: (eh[v], ea[v]) for v in eh}
 
 
 def test_hits_bipartite_separates_hubs_from_authorities(spark):

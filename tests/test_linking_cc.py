@@ -10,7 +10,6 @@ from ffp_spark.linking import (
     best_candidate,
     candidate_pairs,
     minhash_udf,
-    salted_broadcast_join,
     with_signatures,
 )
 from ffp_spark.udfs import parse_pages
@@ -108,27 +107,6 @@ class TestMinHashLSH:
         assert len(got) == 1 and got[0].best_match == "c" and got[0].best_score == 0.9
 
 
-class TestSaltedBroadcastJoin:
-    def test_same_result_as_plain_join(self, spark):
-        big = spark.range(0, 1000).select(
-            F.concat(F.lit("k"), (F.col("id") % 7).cast("string")).alias("key"),
-            F.col("id").alias("v"),
-        )
-        small = spark.createDataFrame(
-            [(f"k{i}", f"label{i}") for i in range(7)], "key string, label string"
-        )
-        plain = big.join(small, "key").groupBy("label").count()
-        salted = salted_broadcast_join(big, small, "key", n_salts=4, how="inner")
-        got = salted.groupBy("label").count()
-        assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, got.collect()))
-
-    def test_plan_contains_broadcast(self, spark):
-        big = spark.range(0, 100).select(F.lit("k").alias("key"), "id")
-        small = spark.createDataFrame([("k", "v")], "key string, label string")
-        plan = salted_broadcast_join(big, small, "key")._jdf.queryExecution().executedPlan().toString()
-        assert "Broadcast" in plan
-
-
 class TestEndToEndLinking:
     def test_author_clusters_recovered_from_synth_corpus(self, spark):
         from ffp_spark.pipeline import link_and_canonicalize
@@ -154,6 +132,65 @@ class TestEndToEndLinking:
         for cluster, canons in by_cluster.items():
             for c in canons:
                 assert seen.setdefault(c, cluster) == cluster, (c, cluster, seen[c])
+
+
+def _one_feed_author_edges(spark, title, authors):
+    """Parse one Atom feed titled `title` with one entry per name in
+    `authors`; return the executed edges plan and the author-edge dsts."""
+    import datetime as dt
+
+    from ffp_spark.pipeline import link_and_canonicalize, materialize_graph
+    from ffp_spark.schemas import PAGES_SCHEMA, PRED_AUTHOR
+
+    entries = "".join(
+        f"""<entry>
+<id>tag:jane.example,2025:/e/{i}</id>
+<title>Entry {i}</title>
+<link rel="alternate" href="https://jane.example/e/{i}"/>
+<updated>2025-01-01T00:00:00Z</updated>
+<author><name>{name}</name></author>
+</entry>"""
+        for i, name in enumerate(authors)
+    )
+    xml = f"""<?xml version="1.0" encoding="UTF-8"?>
+<feed xmlns="http://www.w3.org/2005/Atom">
+<title>{title}</title>
+<id>tag:jane.example,2025:/feed</id>
+<link rel="alternate" href="https://jane.example/"/>
+{entries}
+</feed>""".encode()
+    pages = spark.createDataFrame(
+        [("https://jane.example/feed.xml", dt.datetime(2025, 1, 1), xml, None, "en")],
+        PAGES_SCHEMA,
+    )
+    parsed = parse_pages(pages)
+    canon = link_and_canonicalize(parsed)
+    try:
+        _, _, edges = materialize_graph(parsed, canon, snapshot_id=1, n_parts=4)
+        plan = edges._jdf.queryExecution().executedPlan().toString()
+        dsts = [r.dst for r in edges.filter(F.col("pred") == PRED_AUTHOR).collect()]
+    finally:
+        canon.unpersist()
+    return plan, dsts
+
+
+class TestSaltedBroadcastJoin:
+    # the author canon join replaced the salted broadcast join; its plan
+    # check now runs on the real join
+    def test_plan_contains_broadcast(self, spark):
+        """One hot author key: the canon join is still a broadcast, and
+        every mention of the hot key gets its edge."""
+        plan, dsts = _one_feed_author_edges(spark, "Site", ["Jane Doe"] * 12)
+        assert "BroadcastHashJoin" in plan, plan
+        assert dsts == ["author:jane doe"] * 12
+
+
+class TestAuthorOnlyLinking:
+    def test_site_title_never_sets_an_author_canonical_id(self, spark):
+        """A feed titled like an author is a site entity, not a mention:
+        its title must not join the author's linking component."""
+        _, dsts = _one_feed_author_edges(spark, "Jane Doe", ["Jane Doex"])
+        assert dsts == ["author:jane doex"]
 
 
 class TestClusteringMetric:

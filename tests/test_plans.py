@@ -70,15 +70,19 @@ def test_triples_single_python_stage(spark, tmp_path):
 
 
 def test_salted_join_broadcasts_small_side(spark):
-    from ffp_spark.linking import salted_broadcast_join
+    # the canonical author dictionary is the broadcast side of the
+    # author-edge join; the mention (probe) side is never shuffled.
+    # (The name predates the plain broadcast that replaced the salted join.)
+    from ffp_spark.datagen import synth_pages
+    from ffp_spark.pipeline import link_and_canonicalize, materialize_graph
 
-    big = spark.range(1000).select(
-        F.concat(F.lit("k"), (F.col("id") % 3).cast("string")).alias("key"), "id"
-    )
-    small = spark.createDataFrame(
-        [(f"k{i}", f"v{i}") for i in range(3)], "key string, label string"
-    )
-    plan = _plan(salted_broadcast_join(big, small, "key"))
+    parsed = parse_pages(synth_pages(spark, 40))
+    canon = link_and_canonicalize(parsed)
+    try:
+        _, _, edges = materialize_graph(parsed, canon, snapshot_id=1, n_parts=4)
+        plan = _plan(edges)
+    finally:
+        canon.unpersist()
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 

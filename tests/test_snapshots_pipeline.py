@@ -202,6 +202,34 @@ class TestPipeline:
         assert ta.exceptAll(tb).isEmpty() and tb.exceptAll(ta).isEmpty()
 
 
+def test_build_session_survives_failed_worker_warmup(spark, monkeypatch, caplog):
+    # workers that cannot import ffp_spark fail the warm-up job; the
+    # session must still be built, with a warning in the log
+    import logging
+
+    from ffp_spark import pipeline
+
+    def unimportable(_spark):
+        raise ModuleNotFoundError("No module named 'ffp_spark'")
+
+    monkeypatch.setattr(pipeline, "warm_python_workers", unimportable)
+    before = spark.conf.getAll
+    try:
+        with caplog.at_level(logging.WARNING, logger="ffp_spark.pipeline"):
+            session = pipeline.build_session("warmup-failure")
+    finally:
+        # build_session reuses the test session: put its SQL confs back
+        after = spark.conf.getAll
+        for k in set(before) | set(after):
+            if before.get(k) != after.get(k) and spark.conf.isModifiable(k):
+                if k in before:
+                    spark.conf.set(k, before[k])
+                else:
+                    spark.conf.unset(k)
+    assert session.range(3).count() == 3
+    assert "warm-up failed" in caplog.text
+
+
 def test_compact_changelog_latest_wins_and_tombstones(spark):
     from ffp_spark.snapshots import compact_changelog
 
