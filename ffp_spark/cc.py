@@ -60,41 +60,28 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     # input several times (the union + two consumers of nbrs), and
     # Spark does not dedupe common subtrees — without this the whole
     # upstream edge-building pipeline executes ~4x inside round 0
-    # (measured 150s -> 32s for CC at 100k pages).  The edge count
-    # rides the same job and sizes the star rounds' shuffles
-    # (graph._iter_parts, guide §2.2) — star-round work is a few
-    # narrow columns of trivial per-row cost, so partitioning it by
-    # bytes instead of one-per-core removes the tiny-task overhead
-    # that dominates each round at small scale without costing
-    # parallelism at web scale.
-    obs0 = Observation()
-    cur = cur.observe(obs0, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-    from .graph import _iter_parts
-
-    spark = edges.sparkSession
-    scoped_p = _iter_parts(int(obs0.get["n"]), spark.sparkContext.defaultParallelism)
-    old_p = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(scoped_p))
-    try:
-        prev_fp = None
-        for _ in range(max_iter):
-            # fold the convergence fingerprint into the checkpoint
-            # materialization via an observed metric — one job per
-            # round instead of two (checkpoint + separate agg scan)
-            obs = Observation()
-            cur = _small_star(_large_star(cur)).observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
-                ).alias("h"),
-            ).localCheckpoint(eager=True)
-            fp = (int(obs.get["n"]), int(obs.get["h"]))
-            if fp == prev_fp:
-                break
-            prev_fp = fp
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_p)
+    # (measured 150s -> 32s for CC at 100k pages).  The star rounds'
+    # shuffles take the session partition count, which AQE coalesces
+    # by size; CC never changes session config, because the commit and
+    # analyze pools submit jobs from other threads concurrently.
+    cur = cur.localCheckpoint(eager=True)
+    prev_fp = None
+    for _ in range(max_iter):
+        # fold the convergence fingerprint into the checkpoint
+        # materialization via an observed metric — one job per
+        # round instead of two (checkpoint + separate agg scan)
+        obs = Observation()
+        cur = _small_star(_large_star(cur)).observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(
+                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
+            ).alias("h"),
+        ).localCheckpoint(eager=True)
+        fp = (int(obs.get["n"]), int(obs.get["h"]))
+        if fp == prev_fp:
+            break
+        prev_fp = fp
 
     # After convergence the edge set is a star forest: dst is the root.
     members = cur.select(F.col("src").alias("node_id"), F.col("dst").alias("component_id"))

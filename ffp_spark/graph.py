@@ -751,47 +751,9 @@ def scc(
     # sets rides the materialization jobs as observed counts — the
     # former per-round isEmpty() probe jobs are gone (round-7).
     parts = [active.limit(0).select("node", F.col("node").alias("scc_id"))]
-    # size the coloring rounds' shuffles from the observed edge count
-    # (same scoped discipline as cc.connected_components): label
-    # propagation is narrow integer/string rows of trivial per-row
-    # cost, so byte/row-floor sizing beats one-partition-per-core
-    spark = edges.sparkSession
-    old_p = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_iter_parts(n_e, spark.sparkContext.defaultParallelism)),
-    )
-    try:
-        drained, n_active = _scc_loop(
-            e, active, parts, n_e, n_active, max_outer, max_inner
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_p)
-    if not drained and n_active > 0:
-        # ADVICE r5: nodes still active when the outer loop exhausts
-        # must never be silently omitted from the assignment
-        raise RuntimeError(
-            f"scc did not assign every node within max_outer={max_outer} "
-            f"rounds; raise max_outer"
-        )
-    assigned = parts[0]
-    for part in parts[1:]:
-        assigned = assigned.unionByName(part)
-    return assigned
-
-
-def _scc_loop(
-    e: DataFrame,
-    active: DataFrame,
-    parts: list,
-    n_e: int,
-    n_active: int,
-    max_outer: int,
-    max_inner: int,
-) -> tuple[bool, int]:
-    """The scc() outer loop, split out so the caller can scope the
-    shuffle-partition override with try/finally around it.  Appends
-    settled frames to ``parts``; returns (drained, n_active)."""
+    # the coloring rounds' shuffles take the session partition count,
+    # which AQE coalesces by size; scc never changes session config,
+    # because other threads may submit jobs concurrently
     drained = False
     for _ in range(max_outer):
         if n_active == 0:
@@ -870,7 +832,17 @@ def _scc_loop(
             .localCheckpoint(eager=True)
         )
         n_e = int(obs_ne.get["n"])
-    return drained, n_active
+    if not drained and n_active > 0:
+        # ADVICE r5: nodes still active when the outer loop exhausts
+        # must never be silently omitted from the assignment
+        raise RuntimeError(
+            f"scc did not assign every node within max_outer={max_outer} "
+            f"rounds; raise max_outer"
+        )
+    assigned = parts[0]
+    for part in parts[1:]:
+        assigned = assigned.unionByName(part)
+    return assigned
 
 
 def label_propagation(

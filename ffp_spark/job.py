@@ -29,11 +29,12 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--no-resume", action="store_true")
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from ffp_spark.pipeline import build_session, run_snapshot
 
-    from ffp_spark.pipeline import run_snapshot
-
-    spark = SparkSession.builder.appName("ffp-kg-pipeline").getOrCreate()
+    # the master comes from spark-submit; build_session adds the UTC
+    # session time zone the lineage stamps assume, AQE skew join, the
+    # Arrow/Parquet batch sizes and the worker warm-ups
+    spark = build_session("ffp-kg-pipeline")
     spark.sparkContext.setLogLevel("WARN")
     report = run_snapshot(
         spark,

@@ -15,16 +15,24 @@ Scale design notes (100 TB / 1000 executors):
   whose probe side is never shuffled);
 * only author mentions are linked — site entities are keyed by
   feed.id/feed.link and need no canonicalization;
-* per-stage caching is limited to the parsed DF which is consumed by
-  both the triple and linking branches.
+* per-stage caching is limited to the raw parse and one checkpoint of
+  the redirect-resolved parse, which both the triple and linking
+  branches consume; the report's page count rides that checkpoint;
+* ``run_snapshot`` is one straight-line function: the data tables
+  commit concurrently, lineage last (the completion marker).  Nodes and
+  edges go through the catalog-bucketed writer, whose bucket id lives
+  in the file names and the catalog spec, not in a data column.
 """
 
 from __future__ import annotations
 
 import logging
+import time
+from concurrent.futures import ThreadPoolExecutor
+from datetime import datetime, timezone
 from typing import Any, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .cc import connected_components
 from .linking import bucket_star_edges, extract_mentions, with_signatures
@@ -35,6 +43,7 @@ from .snapshots import (
     remaining_pages,
     snapshots_of,
     write_snapshot,
+    write_snapshot_bucketed,
 )
 from .triples import emit_triples
 from .udfs import parse_pages
@@ -452,6 +461,38 @@ def materialize_graph(
     return triples, nodes, edges
 
 
+def _utc_now() -> datetime:
+    """Naive UTC wall clock, matching the session time zone convention."""
+    return datetime.now(timezone.utc).replace(tzinfo=None)
+
+
+def _carry_forward(
+    spark: SparkSession,
+    out_root: str,
+    snapshot_id: int,
+    triples: DataFrame,
+    nodes: DataFrame,
+    edges: DataFrame,
+    done_parts: Optional[DataFrame] = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Union a committed snapshot's triples, nodes and edges into this
+    run's.  ``done_parts`` keeps only the committed triples of those
+    parts; nodes and edges are not part-keyed and stay idempotent by
+    dropDuplicates."""
+    old_triples = read_snapshot(spark, out_root, "triples", snapshot_id)
+    if done_parts is not None:
+        old_triples = old_triples.join(done_parts, "part_id", "left_semi")
+    old_nodes = read_snapshot(spark, out_root, "nodes", snapshot_id)
+    old_edges = read_snapshot(spark, out_root, "edges", snapshot_id)
+    return (
+        triples.unionByName(old_triples.select(*triples.columns)),
+        nodes.unionByName(old_nodes.select(*nodes.columns)).dropDuplicates(["node_id"]),
+        edges.unionByName(old_edges.select(*edges.columns)).dropDuplicates(
+            ["src", "dst", "pred"]
+        ),
+    )
+
+
 def run_snapshot(
     spark: SparkSession,
     pages: DataFrame,
@@ -459,9 +500,7 @@ def run_snapshot(
     snapshot_id: int,
     n_parts: int = DEFAULT_PARTS,
     resume: bool = True,
-    n_buckets: int = 16,
     incremental_from: Optional[int] = None,
-    resolve_redirects: bool = True,
     stage_timings: Optional[dict[str, float]] = None,
 ) -> dict[str, Any]:
     """Process one snapshot of the PAGES table into committed KG tables.
@@ -472,14 +511,16 @@ def run_snapshot(
     parent already saw are anti-joined away and the parent's triples are
     merged into this snapshot's committed tables (append-only logical
     snapshot over a physical delta, Iceberg-style).
-    Pass ``stage_timings={}`` to collect per-stage wall seconds
-    (parse / link_cc / agg / write) for round-over-round attribution."""
-    from datetime import datetime, timezone
-
-    # lineage schema carries the run's wall-clock bracket; captured here
-    # (run start), finished_ts at commit time.  Naive UTC to match the
-    # session timezone convention.
-    started_ts = datetime.now(timezone.utc).replace(tzinfo=None)
+    Pass ``stage_timings={}`` to collect per-stage wall seconds:
+    ``parse_sec`` (the raw parse), ``link_cc_sec`` (checkpointing the
+    resolved parse, linking and CC), ``agg_sec`` (the error histogram
+    only, which overlaps the data commits) and ``write_sec`` (the
+    commits, lineage last)."""
+    # lineage rows carry the run's wall-clock bracket (SURVEY §1.2
+    # schema): started_ts = run entry, finished_ts = after the data
+    # commits.  Commit metadata is the one place wall clock is allowed
+    # (datagen and linking stay deterministic).
+    started_ts = _utc_now()
     pages = add_part_id(pages, n_parts)
     # redirect targets resolve against the FULL corpus, not the
     # incremental delta: a page redirecting to a url the parent snapshot
@@ -495,250 +536,144 @@ def run_snapshot(
         # K9 incremental: only urls never seen by the parent snapshot
         prior_seen = read_snapshot(spark, out_root, "pages_seen", incremental_from)
         pages = pages.join(prior_seen.select("url"), "url", "left_anti")
-    todo = remaining_pages(pages, prior_lineage)
-
     # explicit url-hash partitioning before the Python stage (K11)
-    todo = todo.repartition(n_parts, "part_id")
+    todo = remaining_pages(pages, prior_lineage).repartition(n_parts, "part_id")
+
     # cache the RAW parse (the expensive Python stage) — the redirect
     # resolution union re-reads this cache, never re-runs the parse
-    raw = parse_pages(todo)
-    raw.cache()
+    raw = parse_pages(todo).cache()
     caches: list = [raw]
-    parsed = (
-        resolve_meta_refresh(raw, pages_full, cache_registry=caches)
-        if resolve_redirects
-        else raw
-    )
-    parsed = parsed.withColumn(
-        "part_id", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
-    )
-    if stage_timings is not None:
-        import time
+    try:
+        if stage_timings is not None:
+            t0 = time.perf_counter()
+            raw.count()  # materializes the cache: this IS the parse stage
+            stage_timings["parse_sec"] = round(time.perf_counter() - t0, 3)
 
         t0 = time.perf_counter()
-        raw.count()  # materializes the cache: this IS the parse stage
-        stage_timings["parse_sec"] = round(time.perf_counter() - t0, 3)
-    try:
-        return _run_snapshot_body(
-            spark, pages, parsed, out_root, snapshot_id, n_parts, n_buckets,
-            prior_lineage, prior_seen, incremental_from, stage_timings,
-            started_ts=started_ts,
+        # materialize the redirect-resolved PARSED table ONCE: every
+        # downstream job (linking/CC, lineage, error histogram, the
+        # commits) scans it, and Spark would otherwise re-evaluate the
+        # resolve union per job.  The page count rides this job: parse
+        # emits one row per input page, errors included.
+        obs = Observation()
+        parsed = (
+            resolve_meta_refresh(raw, pages_full, cache_registry=caches)
+            .withColumn("part_id", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int"))
+            .observe(obs, F.count(F.lit(1)).alias("pages"))
+            .localCheckpoint(eager=True)
         )
+        n_pages = int(obs.get["pages"])
+        # link_and_canonicalize runs its CC jobs eagerly and returns a
+        # cached mapping (the broadcast dimension of the author join)
+        canon = link_and_canonicalize(parsed)
+        caches.append(canon)
+        triples, nodes, edges = materialize_graph(parsed, canon, snapshot_id, n_parts)
+        if stage_timings is not None:
+            stage_timings["link_cc_sec"] = round(time.perf_counter() - t0, 3)
+
+        lineage_new = (
+            partition_lineage(parsed, snapshot_id)
+            .join(
+                triples.groupBy("part_id").agg(F.count("*").alias("n_triples")),
+                "part_id",
+                "left",
+            )
+            .select(
+                "part_id", "n_pages", "n_parsed", "n_errors", "n_entries",
+                F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
+                "snapshot_id", "status",
+            )
+        )
+
+        # incremental merge: the parent snapshot's committed graph is
+        # carried forward; this run only parsed the delta
+        if incremental_from is not None and incremental_from in snapshots_of(out_root, "triples"):
+            triples, nodes, edges = _carry_forward(
+                spark, out_root, incremental_from, triples, nodes, edges
+            )
+        # resume merge: a re-commit of the same snapshot keeps work already
+        # done by the interrupted run.  Ownership is by PARTITION: committed
+        # triples are kept only for parts the committed lineage marks done;
+        # this run re-parsed every other part.  The two sets are disjoint,
+        # so the union cannot double-count — even if a prior run crashed
+        # after committing triples but before lineage (then no parts are
+        # "done" and this run's full re-parse wins).
+        if prior_lineage is not None and snapshot_id in snapshots_of(out_root, "triples"):
+            done_parts = (
+                prior_lineage.filter(F.col("status") == "done").select("part_id").distinct()
+            )
+            triples, nodes, edges = _carry_forward(
+                spark, out_root, snapshot_id, triples, nodes, edges, done_parts
+            )
+
+        # fresh runs read the seen-url set off the MATERIALIZED parsed
+        # table (row-identical to the source: one row per input page, same
+        # url-hash part_id) — re-scanning a generated/WARC source would
+        # re-run its Python ingest.  Resumed runs keep the source scan:
+        # parsed covers only the re-done parts.
+        seen = (parsed if prior_lineage is None else pages).select("url", "part_id")
+        if prior_seen is not None:
+            seen = seen.unionByName(prior_seen.select("url", "part_id")).dropDuplicates(["url"])
+
+        def _errors() -> dict[str, int]:
+            t0 = time.perf_counter()
+            errors = {r.error_class: r["count"] for r in error_histogram(parsed).collect()}
+            if stage_timings is not None:
+                stage_timings["agg_sec"] = round(time.perf_counter() - t0, 3)
+            return errors
+
+        # commit protocol: data tables first, lineage LAST — the lineage
+        # commit marks this snapshot's work complete, so a crash anywhere
+        # earlier re-derives everything idempotently (resume merge above).
+        # The data tables and the error histogram run CONCURRENTLY
+        # (independent dirs and jobs): overlapping them hides per-job
+        # latency.  nodes/edges commit through the catalog-bucketed writer
+        # (K11), so the serving join node_id == src needs no exchange.
+        t0 = time.perf_counter()
+        with ThreadPoolExecutor(max_workers=5) as pool:
+            f_errors = pool.submit(_errors)
+            f_triples = pool.submit(
+                write_snapshot, triples, out_root, "triples", snapshot_id,
+                partition_by=["part_id"],
+            )
+            f_nodes = pool.submit(
+                write_snapshot_bucketed, nodes, out_root, "nodes", snapshot_id,
+                bucket_col="node_id",
+            )
+            f_edges = pool.submit(
+                write_snapshot_bucketed, edges, out_root, "edges", snapshot_id,
+                bucket_col="src",
+            )
+            f_seen = pool.submit(write_snapshot, seen, out_root, "pages_seen", snapshot_id)
+            m_triples = f_triples.result()
+            m_nodes = f_nodes.result()
+            m_edges = f_edges.result()
+            f_seen.result()
+            errors = f_errors.result()
+        lineage = lineage_new.withColumn("started_ts", F.lit(started_ts)).withColumn(
+            "finished_ts", F.lit(_utc_now())
+        )
+        if prior_lineage is not None:
+            prior = prior_lineage
+            for c in ("started_ts", "finished_ts"):  # pre-schema tables
+                if c not in prior.columns:
+                    prior = prior.withColumn(c, F.lit(None).cast("timestamp"))
+            lineage = lineage.unionByName(prior.select(*lineage.columns))
+        m_lineage = write_snapshot(
+            lineage, out_root, "lineage", snapshot_id,
+            extra={"n_pages": n_pages, "errors": errors},
+        )
+        if stage_timings is not None:
+            stage_timings["write_sec"] = round(time.perf_counter() - t0, 3)
     finally:
         for df in caches:
             df.unpersist()
-
-
-def _run_snapshot_body(
-    spark: SparkSession,
-    pages: DataFrame,
-    parsed: DataFrame,
-    out_root: str,
-    snapshot_id: int,
-    n_parts: int,
-    n_buckets: int,
-    prior_lineage: Optional[DataFrame],
-    prior_seen: Optional[DataFrame],
-    incremental_from: Optional[int],
-    stage_timings: Optional[dict[str, float]] = None,
-    started_ts=None,
-) -> dict[str, Any]:
-    import time
-
-    t0 = time.perf_counter()
-    # materialize the redirect-resolved PARSED table ONCE (round 7):
-    # every downstream job — the ~10 linking/CC jobs, the lineage
-    # aggregate, the error histogram, and the triples/nodes/edges
-    # commits — scans ``parsed``, and Spark re-evaluates the resolve
-    # union (raw-cache scan + redirect-layer joins) per job; one eager
-    # checkpoint turns those into RDD scans.  The raw parse cache stays
-    # the parse stage's artifact; this adds one V-sized local write.
-    parsed = parsed.localCheckpoint(eager=True)
-    # link_and_canonicalize runs its CC jobs eagerly and returns a
-    # cached mapping (the broadcast dimension of the author join,
-    # consumed by three write jobs); unpersisted after the commits
-    canon = link_and_canonicalize(parsed)
-    try:
-        return _commit_snapshot(
-            spark, pages, parsed, canon, out_root, snapshot_id, n_parts,
-            n_buckets, prior_lineage, prior_seen, incremental_from,
-            stage_timings, t0, started_ts,
-        )
-    finally:
-        canon.unpersist()
-
-
-def _commit_snapshot(
-    spark: SparkSession,
-    pages: DataFrame,
-    parsed: DataFrame,
-    canon: DataFrame,
-    out_root: str,
-    snapshot_id: int,
-    n_parts: int,
-    n_buckets: int,
-    prior_lineage: Optional[DataFrame],
-    prior_seen: Optional[DataFrame],
-    incremental_from: Optional[int],
-    stage_timings: Optional[dict[str, float]],
-    t0: float,
-    started_ts=None,
-) -> dict[str, Any]:
-    import time
-
-    triples, nodes, edges = materialize_graph(parsed, canon, snapshot_id, n_parts)
-    if stage_timings is not None:
-        stage_timings["link_cc_sec"] = round(time.perf_counter() - t0, 3)
-
-    lineage_new = (
-        partition_lineage(parsed, snapshot_id)
-        .join(
-            triples.groupBy("part_id").agg(F.count("*").alias("n_triples")),
-            "part_id",
-            "left",
-        )
-        .select(
-            "part_id", "n_pages", "n_parsed", "n_errors", "n_entries",
-            F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
-            "snapshot_id", "status",
-        )
-    )
-
-    bucket = F.pmod(F.xxhash64("node_id"), F.lit(n_buckets)).cast("int")
-
-    # page count from the (cached) parsed lineage aggregate — not a
-    # separate todo.count() job over the raw pages source.  The two
-    # stats jobs are independent of the data-table commits, so they run
-    # CONCURRENTLY with them in the commit pool below (guide §2.6) —
-    # only the lineage write (which embeds the stats) must wait.
-    def _collect_stats() -> dict[str, Any]:
-        t0 = time.perf_counter()
-        n_pages_run = (
-            lineage_new.agg(F.sum("n_pages").alias("p")).collect()[0].p or 0
-        )
-        out = {
-            "n_pages": int(n_pages_run),
-            "errors": {
-                r.error_class: r["count"] for r in error_histogram(parsed).collect()
-            },
-        }
-        if stage_timings is not None:
-            stage_timings["agg_sec"] = round(time.perf_counter() - t0, 3)
-        return out
-
-    # incremental merge: the parent snapshot's committed graph is carried
-    # forward; this run only parsed the delta
-    if incremental_from is not None and incremental_from in snapshots_of(out_root, "triples"):
-        parent_triples = read_snapshot(spark, out_root, "triples", incremental_from)
-        triples = triples.unionByName(parent_triples.select(*triples.columns))
-        parent_nodes = read_snapshot(spark, out_root, "nodes", incremental_from).drop("bucket")
-        nodes = nodes.unionByName(parent_nodes.select(*nodes.columns)).dropDuplicates(["node_id"])
-        parent_edges = read_snapshot(spark, out_root, "edges", incremental_from).drop("bucket")
-        edges = edges.unionByName(parent_edges.select(*edges.columns)).dropDuplicates(["src", "dst", "pred"])
-
-    # resume merge: a re-commit of the same snapshot keeps work already
-    # done by the interrupted run.  Ownership is by PARTITION: previously
-    # committed triples are kept only for parts the committed lineage
-    # marks done; this run re-parsed every other part.  The two sets are
-    # disjoint by construction, so the union cannot double-count — even
-    # if a prior run crashed after committing triples but before lineage
-    # (then no parts are "done", the stale triples contribute nothing,
-    # and this run's full re-parse wins).
-    if prior_lineage is not None and snapshot_id in snapshots_of(out_root, "triples"):
-        done_parts = (
-            prior_lineage.filter(F.col("status") == "done").select("part_id").distinct()
-        )
-        prev_triples = read_snapshot(spark, out_root, "triples", snapshot_id).join(
-            done_parts, "part_id", "left_semi"
-        )
-        triples = triples.unionByName(prev_triples.select(*triples.columns))
-        # nodes/edges are not part-keyed; idempotent by dropDuplicates
-        prev_nodes = read_snapshot(spark, out_root, "nodes", snapshot_id).drop("bucket")
-        nodes = nodes.unionByName(prev_nodes.select(*nodes.columns)).dropDuplicates(
-            ["node_id"]
-        )
-        prev_edges = read_snapshot(spark, out_root, "edges", snapshot_id).drop("bucket")
-        edges = edges.unionByName(prev_edges.select(*edges.columns)).dropDuplicates(
-            ["src", "dst", "pred"]
-        )
-
-    nodes_b = nodes.withColumn("bucket", bucket)
-    edges_b = edges.withColumn(
-        "bucket", F.pmod(F.xxhash64("src"), F.lit(n_buckets)).cast("int")
-    )
-
-    # commit protocol: data tables first, lineage LAST — the lineage
-    # commit is the marker that this snapshot's work is complete.  A
-    # crash anywhere earlier leaves lineage without "done" rows, so a
-    # re-run re-derives everything idempotently (see resume merge above).
-    # The four data tables commit CONCURRENTLY (independent dirs and
-    # jobs; Spark schedules multi-threaded jobs fine) — overlapping the
-    # writes hides per-job latency; ordering only matters for lineage.
-    from concurrent.futures import ThreadPoolExecutor
-
-    t0 = time.perf_counter()
-    # fresh runs read the seen-url set off the MATERIALIZED parsed table
-    # (row-identical: parse emits one row per input page, errors
-    # included, and part_id is the same deterministic url hash) instead
-    # of re-scanning the pages SOURCE — for generated/WARC sources that
-    # re-scan re-runs the whole Python ingest at commit time.  Resumed
-    # runs keep the source scan: parsed covers only the re-done parts.
-    seen_src = parsed if prior_lineage is None else pages
-    seen = seen_src.select("url", "part_id")
-    if prior_seen is not None:
-        seen = seen.unionByName(prior_seen.select("url", "part_id")).dropDuplicates(["url"])
-    from .snapshots import write_snapshot_bucketed
-
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        f_stats = pool.submit(_collect_stats)
-        f_triples = pool.submit(
-            write_snapshot, triples, out_root, "triples", snapshot_id,
-            partition_by=["part_id"],
-        )
-        # nodes/edges commit THROUGH the catalog-bucketed writer (K11):
-        # the serving join key (node_id == src) reads co-located buckets
-        # with zero exchange by default — at 100 TB the repeated
-        # node/edge joins are the dominant shuffle this removes
-        f_nodes = pool.submit(
-            write_snapshot_bucketed, nodes_b, out_root, "nodes", snapshot_id,
-            bucket_col="node_id", n_buckets=n_buckets,
-        )
-        f_edges = pool.submit(
-            write_snapshot_bucketed, edges_b, out_root, "edges", snapshot_id,
-            bucket_col="src", n_buckets=n_buckets,
-        )
-        f_seen = pool.submit(write_snapshot, seen, out_root, "pages_seen", snapshot_id)
-        m_triples = f_triples.result()
-        m_nodes = f_nodes.result()
-        m_edges = f_edges.result()
-        f_seen.result()
-        stats = f_stats.result()
-    # lineage rows carry the run's wall-clock bracket (SURVEY §1.2
-    # schema): started_ts = run_snapshot entry, finished_ts = after the
-    # data-table commits, i.e. when this snapshot's work was durable.
-    # Commit metadata is the one place wall clock is allowed (datagen
-    # and linking stay deterministic); prior rows keep their own stamps.
-    from datetime import datetime, timezone
-
-    finished_ts = datetime.now(timezone.utc).replace(tzinfo=None)
-    lineage = lineage_new.withColumn(
-        "started_ts", F.lit(started_ts)
-    ).withColumn("finished_ts", F.lit(finished_ts))
-    if prior_lineage is not None:
-        prior = prior_lineage
-        for c in ("started_ts", "finished_ts"):  # pre-schema tables
-            if c not in prior.columns:
-                prior = prior.withColumn(c, F.lit(None).cast("timestamp"))
-        lineage = lineage.unionByName(prior.select(*lineage.columns))
-    m_lineage = write_snapshot(lineage, out_root, "lineage", snapshot_id, extra=stats)
-    if stage_timings is not None:
-        stage_timings["write_sec"] = round(time.perf_counter() - t0, 3)
     return {
         "snapshot_id": snapshot_id,
-        "pages": stats["n_pages"],
+        "pages": n_pages,
         "triples": m_triples["row_count"],
         "nodes": m_nodes["row_count"],
         "edges": m_edges["row_count"],
         "lineage_rows": m_lineage["row_count"],
-        "errors": stats["errors"],
+        "errors": errors,
     }

@@ -24,9 +24,10 @@ import json
 import os
 import shutil
 from pathlib import Path
-from typing import Any, Optional
+from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def _table_dir(root: str | Path, name: str) -> Path:
@@ -48,15 +49,19 @@ def _fsync_replace(tmp: Path, final: Path) -> None:
         os.close(dfd)
 
 
-def write_snapshot(
+def _commit(
     df: DataFrame,
     root: str | Path,
     table: str,
     snapshot_id: int,
-    partition_by: Optional[list[str]] = None,
-    extra: Optional[dict[str, Any]] = None,
+    stage: Callable[[DataFrame, Path], None],
+    spec: dict[str, Any],
+    extra: Optional[dict[str, Any]],
 ) -> dict[str, Any]:
-    """Atomically commit ``df`` as snapshot ``snapshot_id`` of ``table``."""
+    """The commit protocol both writers share: ``stage`` writes the data
+    under ``_tmp-<id>``, which is ``os.replace``'d into ``snap-<id>``;
+    then the manifest and CURRENT swap in with fsync.  ``spec`` lists
+    the writer's layout fields for the manifest."""
     tdir = _table_dir(root, table)
     tdir.mkdir(parents=True, exist_ok=True)
     tmp = tdir / f"_tmp-{snapshot_id}"
@@ -67,18 +72,13 @@ def write_snapshot(
     # post-write re-read (at 100 TB that second scan of the triples
     # table per snapshot was the commit path's scale-killer)
     obs = Observation()
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    writer = observed.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(str(tmp))
-    n_rows = int(obs.get["n"])
+    stage(df.observe(obs, F.count(F.lit(1)).alias("n")), tmp)
     manifest = {
         "table": table,
         "snapshot_id": snapshot_id,
         "parent_snapshot_id": current_snapshot_id(root, table),
-        "row_count": n_rows,
-        "partition_by": partition_by or [],
+        "row_count": int(obs.get["n"]),
+        **spec,
         "schema": df.schema.jsonValue(),
     }
     if extra:
@@ -97,6 +97,27 @@ def write_snapshot(
     ctmp.write_text(str(snapshot_id))
     _fsync_replace(ctmp, tdir / "CURRENT")
     return manifest
+
+
+def write_snapshot(
+    df: DataFrame,
+    root: str | Path,
+    table: str,
+    snapshot_id: int,
+    partition_by: Optional[list[str]] = None,
+    extra: Optional[dict[str, Any]] = None,
+) -> dict[str, Any]:
+    """Atomically commit ``df`` as snapshot ``snapshot_id`` of ``table``."""
+
+    def stage(observed: DataFrame, tmp: Path) -> None:
+        writer = observed.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(str(tmp))
+
+    return _commit(
+        df, root, table, snapshot_id, stage, {"partition_by": partition_by or []}, extra
+    )
 
 
 def current_snapshot_id(root: str | Path, table: str) -> Optional[int]:
@@ -118,7 +139,17 @@ def read_snapshot(
     sid = snapshot_id if snapshot_id is not None else current_snapshot_id(root, table)
     if sid is None:
         raise FileNotFoundError(f"no committed snapshot for table {table} under {root}")
-    return spark.read.parquet(str(_table_dir(root, table) / f"snap-{sid}"))
+    path = _table_dir(root, table) / f"snap-{sid}"
+    if not any(path.rglob("*.parquet")):
+        # an empty partitioned or bucketed commit leaves no file to infer
+        # the schema from; the manifest has it (partition columns last,
+        # as a directory read orders them)
+        manifest = read_manifest(root, table, sid)
+        schema = StructType.fromJson(manifest["schema"])
+        parts = manifest["partition_by"]
+        fields = [f for f in schema.fields if f.name not in parts]
+        return spark.createDataFrame([], StructType(fields + [schema[c] for c in parts]))
+    return spark.read.parquet(str(path))
 
 
 def read_manifest(root: str | Path, table: str, snapshot_id: int) -> dict[str, Any]:
@@ -192,73 +223,39 @@ def write_snapshot_bucketed(
     (`read_snapshot_bucketed`) joins/aggregates on ``bucket_col`` with
     ZERO exchange — bucketing is the default, not a demo.
 
-    Protocol matches `write_snapshot`: data lands in ``_tmp-<id>`` (via
-    a staging catalog entry, since bucketBy requires saveAsTable), is
-    os.replace'd into ``snap-<id>`` — bucket file names survive the
-    rename, which is what lets the final CLUSTERED BY table re-point at
-    them — then manifest and CURRENT swap in with fsync."""
+    Same protocol as `write_snapshot`; the staging write goes through a
+    staging catalog entry, since bucketBy requires saveAsTable.  Bucket
+    file names survive the rename into ``snap-<id>``, which is what lets
+    the final CLUSTERED BY table point at them."""
     spark = df.sparkSession
-    tdir = _table_dir(root, table)
-    tdir.mkdir(parents=True, exist_ok=True)
-    tmp = tdir / f"_tmp-{snapshot_id}"
-    final = tdir / f"snap-{snapshot_id}"
-    if tmp.exists():
-        shutil.rmtree(tmp)
     stg = _catalog_name(root, table, snapshot_id, staging=True)
-    obs = Observation()
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    spark.sql(f"DROP TABLE IF EXISTS {stg}")
-    try:
-        (
-            observed.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(n_buckets, bucket_col)
-            .sortBy(bucket_col)
-            .option("path", str(tmp))
-            .saveAsTable(stg)
-        )
-        n_rows = int(obs.get["n"])
-        if final.exists():
-            shutil.rmtree(final)
-        os.replace(tmp, final)
-    finally:
-        # external table: dropping removes metadata only, never the
-        # (already renamed) data files
+
+    def stage(observed: DataFrame, tmp: Path) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {stg}")
+        try:
+            write_bucketed_table(observed, stg, tmp, bucket_col, n_buckets)
+        finally:
+            # external table: dropping removes metadata only, never the
+            # data files
+            spark.sql(f"DROP TABLE IF EXISTS {stg}")
 
     name = _catalog_name(root, table, snapshot_id)
-    ddl = _bucket_ddl(df)
+    final = _table_dir(root, table) / f"snap-{snapshot_id}"
     create = (
-        f"CREATE TABLE {name} ({ddl}) USING parquet "
+        f"CREATE TABLE {name} ({_bucket_ddl(df)}) USING parquet "
         f"CLUSTERED BY (`{bucket_col}`) SORTED BY (`{bucket_col}`) "
         f"INTO {n_buckets} BUCKETS LOCATION '{final}'"
     )
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sql(create)
-
-    manifest = {
-        "table": table,
-        "snapshot_id": snapshot_id,
-        "parent_snapshot_id": current_snapshot_id(root, table),
-        "row_count": n_rows,
+    spec = {
         "partition_by": [],
         "bucket_by": bucket_col,
         "n_buckets": n_buckets,
         "catalog_table": name,
         "create_ddl": create,
-        "schema": df.schema.jsonValue(),
     }
-    if extra:
-        manifest["extra"] = extra
-
-    mpath = tdir / f"manifest-{snapshot_id}.json"
-    mtmp = tdir / f"_manifest-{snapshot_id}.json.tmp"
-    mtmp.write_text(json.dumps(manifest, indent=2))
-    _fsync_replace(mtmp, mpath)
-
-    ctmp = tdir / "_CURRENT.tmp"
-    ctmp.write_text(str(snapshot_id))
-    _fsync_replace(ctmp, tdir / "CURRENT")
+    manifest = _commit(df, root, table, snapshot_id, stage, spec, extra)
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.sql(create)
     return manifest
 
 

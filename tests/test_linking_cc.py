@@ -65,6 +65,28 @@ class TestConnectedComponents:
         assert a == b
 
 
+def test_cc_and_scc_never_set_session_config(spark, monkeypatch):
+    # the commit and analyze pools submit jobs from other threads: a
+    # library operator that changes session-global config (e.g. the
+    # shuffle partition count) leaks it into those jobs
+    from pyspark.sql.conf import RuntimeConfig
+
+    from ffp_spark.graph import scc
+
+    def refuse(self, key, value):
+        raise AssertionError(f"session config set: {key}={value}")
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("x", "y")],
+        "src string, dst string",
+    )
+    monkeypatch.setattr(RuntimeConfig, "set", refuse)
+    comps = {r.node_id: r.component_id for r in connected_components(edges).collect()}
+    sccs = {r.node: r.scc_id for r in scc(edges).collect()}
+    assert comps == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
+    assert sccs == {"a": "a", "b": "a", "c": "a", "d": "d", "x": "x", "y": "y"}
+
+
 class TestMinHashLSH:
     def test_signature_deterministic_and_similarity_ordering(self, spark):
         df = spark.createDataFrame(

@@ -109,6 +109,10 @@ class TestPipeline:
         run_snapshot(spark, pages, str(tmp_path), snapshot_id=1, n_parts=8)
         nodes = read_snapshot_bucketed(spark, tmp_path, "nodes")
         edges = read_snapshot_bucketed(spark, tmp_path, "edges")
+        # exactly the graph columns: bucket placement lives in the file
+        # names and the catalog spec, never in a data column
+        assert nodes.columns == ["node_id", "kind", "canonical_id", "label"]
+        assert edges.columns == ["src", "dst", "pred", "weight"]
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -193,6 +197,49 @@ class TestPipeline:
         # time travel: snapshot 1 still readable underneath
         assert read_snapshot(spark, tmp_path, "triples", snapshot_id=1).count() == r1["triples"]
 
+    def test_degenerate_corpora_commit_and_n_parts_agree(self, spark, tmp_path):
+        """An empty corpus, an all-error corpus and a one-page corpus all
+        commit, with report and lineage page counts equal to the input;
+        the committed triple set does not depend on n_parts."""
+
+        def commit(pages, name, n_parts=8):
+            root = str(tmp_path / name)
+            report = run_snapshot(spark, pages, root, snapshot_id=1, n_parts=n_parts)
+            lineage_pages = (
+                read_snapshot(spark, root, "lineage")
+                .agg(F.coalesce(F.sum("n_pages"), F.lit(0)).alias("s"))
+                .collect()[0]
+                .s
+            )
+            triples = {
+                tuple(r) for r in read_snapshot(spark, root, "triples")
+                .select("subj", "pred", "obj", "src_url").collect()
+            }
+            return report, lineage_pages, triples
+
+        pages = synth_pages(spark, 40, seed=3)
+
+        report, lineage_pages, triples = commit(pages.limit(0), "empty")
+        assert report["pages"] == lineage_pages == 0
+        assert report["triples"] == 0 and not triples
+
+        not_feeds = pages.withColumn("html", F.lit(b"plain bytes, not a feed"))
+        report, lineage_pages, triples = commit(not_feeds, "all_error")
+        assert report["pages"] == lineage_pages == 40
+        assert sum(report["errors"].values()) == 40
+        assert report["triples"] == 0 and not triples
+
+        report, lineage_pages, triples = commit(pages.limit(1), "one_page")
+        assert report["pages"] == lineage_pages == 1
+        assert report["triples"] == len(triples) > 0
+
+        sets = []
+        for n_parts in (1, 7, 64):
+            report, lineage_pages, triples = commit(pages, f"parts{n_parts}", n_parts)
+            assert report["pages"] == lineage_pages == 40
+            sets.append(triples)
+        assert sets[0] and sets[0] == sets[1] == sets[2]
+
     def test_deterministic_triples_across_runs(self, spark, tmp_path):
         pages = synth_pages(spark, 80, seed=5)
         run_snapshot(spark, pages, str(tmp_path / "a"), snapshot_id=1, n_parts=4)
@@ -228,6 +275,50 @@ def test_build_session_survives_failed_worker_warmup(spark, monkeypatch, caplog)
                     spark.conf.unset(k)
     assert session.range(3).count() == 3
     assert "warm-up failed" in caplog.text
+
+
+def test_job_main_builds_its_session_through_build_session(monkeypatch):
+    # the spark-submit entry point must run under build_session's
+    # settings (UTC time zone, AQE skew join, batch sizes, warm-ups)
+    from types import SimpleNamespace
+
+    from pyspark.sql import SparkSession
+
+    from ffp_spark import job, pipeline
+
+    class NoBareBuilder:
+        def __getattr__(self, name):
+            raise AssertionError("job.main built a bare SparkSession")
+
+    built, runs = [], []
+
+    class FakeSession:
+        read = SimpleNamespace(parquet=lambda path: f"pages@{path}")
+        sparkContext = SimpleNamespace(setLogLevel=lambda level: None)
+
+        def stop(self):
+            built.append("stopped")
+
+    def fake_build_session(app, master=None, shuffle_partitions=64):
+        built.append((app, master))
+        return FakeSession()
+
+    def fake_run_snapshot(spark, pages, out_root, **kw):
+        runs.append((pages, out_root, kw))
+        return {"snapshot_id": kw["snapshot_id"]}
+
+    monkeypatch.setattr(SparkSession, "builder", NoBareBuilder())
+    monkeypatch.setattr(pipeline, "build_session", fake_build_session)
+    monkeypatch.setattr(pipeline, "run_snapshot", fake_run_snapshot)
+    job.main([
+        "--pages", "/in", "--out", "/out", "--snapshot-id", "3",
+        "--n-parts", "7", "--no-resume", "--incremental-from", "2",
+    ])
+    assert built == [("ffp-kg-pipeline", None), "stopped"]
+    assert runs == [(
+        "pages@/in", "/out",
+        {"snapshot_id": 3, "n_parts": 7, "resume": False, "incremental_from": 2},
+    )]
 
 
 def test_compact_changelog_latest_wins_and_tombstones(spark):
