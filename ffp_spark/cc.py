@@ -10,9 +10,14 @@ Node ids are strings; component representative = lexicographic min.
 Convergence detection: (count, sum(xxhash64(src,dst))) fingerprint of
 the edge set, observed on each round's checkpoint job — deterministic
 for a given dataset.
+
+``components_local`` is the same contract as a driver-side union-find;
+``pipeline.link_and_canonicalize`` runs it on the author star edges.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
@@ -89,3 +94,29 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         "component_id", F.col("node_id")
     )
     return members.unionByName(roots).dropDuplicates(["node_id"])
+
+
+def components_local(pairs: Iterable[tuple[str, str]]) -> dict[str, str]:
+    """Driver-side :func:`connected_components` for edge lists that fit
+    in driver memory: union-find whose root is the lexicographically smallest node, so
+    ``{node_id: component_id}`` equals the DataFrame result row for row
+    (self-loops are dropped and isolated nodes are absent, as there)."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        if a == b:
+            continue
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        if ra != rb:
+            # attaching the larger root under the smaller keeps every
+            # root the minimum of its set
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}

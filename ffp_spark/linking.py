@@ -5,13 +5,18 @@ Only author mentions are linked: they are the one entity kind whose
 canonical id the materialized graph reads.  Site entities are keyed by
 ``feed.id``/``feed.link`` and are not linked.
 
-Spark-first split of work:
-* MinHash signatures: vectorized numpy inside ONE pandas UDF (the only
-  Python hop) with fixed-seed permutations broadcast as constants —
-  deterministic across workers and runs.
+Split of work:
+* MinHash signatures: one plain function, ``minhash_signatures``
+  (vectorized numpy per string, fixed-seed permutations) — deterministic
+  across workers, runs and callers.  On Spark it runs inside ONE pandas
+  UDF, the only Python hop.
 * banding, bucketing, candidate self-join, Jaccard estimation, scoring:
   pure JVM expressions (posexplode/hash/zip_with/aggregate) — no Python
   in the shuffle-heavy path.
+* driver-side: ``local_star_edges`` forms the same buckets and star
+  edges as ``bucket_star_edges`` (``spark_hash_longs`` replicates
+  Spark's band hash).  ``pipeline.link_and_canonicalize`` links a
+  snapshot's distinct author surfaces this way after one collect job.
 
 At 100 TB the candidate join is the hot spot: banding bounds each block
 and ``spark.sql.adaptive.skewJoin`` splits stragglers.  The canonical
@@ -21,6 +26,10 @@ author key has no hot task to split.
 """
 
 from __future__ import annotations
+
+import hashlib
+from collections.abc import Iterable, Sequence
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -62,15 +71,18 @@ def shingle_hash32(s: str) -> int:
     with CAST(('0x' || substr(md5(s), 1, 8)) AS BIGINT), so the whole
     MinHash signature (k affine permutations mod a Mersenne prime over
     these hashes) is replayable as pure integer SQL in any engine."""
-    import hashlib
-
     return int.from_bytes(hashlib.md5(s.encode("utf-8")).digest()[:4], "big")
 
 
-def minhash_udf(
-    k: int = MINHASH_K, seed: int = 42, width: int = _SHINGLE_W, mode: str = "char"
-):
-    """Series[str] -> Series[array<long>] MinHash signatures.
+def minhash_signatures(
+    strings: Iterable[Optional[str]],
+    k: int = MINHASH_K,
+    seed: int = 42,
+    width: int = _SHINGLE_W,
+    mode: str = "char",
+) -> list[Optional[np.ndarray]]:
+    """MinHash signature (int64 array of ``k``) of each string; None for
+    a NULL string or one shorter than a single shingle.
 
     ``mode='char'``: character ``width``-grams — right for short surfaces
     (author names) where edits are sub-token.  ``mode='word'``: token
@@ -85,57 +97,54 @@ def minhash_udf(
     signatures value-for-value (the driver's DuckDB oracle does).
     """
     a, b = _permutations(k, seed)
+    # per-call shingle-hash memo (guide §4.5): shingle TYPES repeat
+    # heavily across rows (shared vocabulary), so the md5 — the dominant
+    # per-shingle cost — runs once per distinct shingle seen by this call
+    # instead of once per occurrence.  Values are identical by
+    # construction; the cap bounds worker memory on adversarial corpora.
+    hcache: dict[str, int] = {}
+
+    def h32(sh: str) -> int:
+        v = hcache.get(sh)
+        if v is None:
+            v = shingle_hash32(sh)
+            if len(hcache) > 2_000_000:
+                hcache.clear()
+            hcache[sh] = v
+        return v
+
+    out: list[Optional[np.ndarray]] = []
+    for s in strings:
+        if s is None:
+            out.append(None)
+            continue
+        if mode == "word":
+            toks = s.split()
+            if len(toks) < width:
+                out.append(None)
+                continue
+            shingles = {" ".join(toks[i : i + width]) for i in range(len(toks) - width + 1)}
+        else:
+            if len(s) < width:
+                out.append(None)
+                continue
+            shingles = {s[i : i + width] for i in range(len(s) - width + 1)}
+        h = np.fromiter((h32(sh) for sh in shingles), dtype=np.int64, count=len(shingles))
+        # (k, n) affine transforms; min over shingles per permutation.
+        # a < 2^31 and h < 2^32 keep a*h + b < 2^63: exact, no wrap.
+        out.append(((a[:, None] * h[None, :] + b[:, None]) % MINHASH_PRIME).min(axis=1))
+    return out
+
+
+def minhash_udf(
+    k: int = MINHASH_K, seed: int = 42, width: int = _SHINGLE_W, mode: str = "char"
+):
+    """Series[str] -> Series[array<long>] MinHash signatures: the pandas
+    UDF form of :func:`minhash_signatures`, one call per Arrow batch."""
 
     @pandas_udf(ArrayType(LongType()))
     def _sig(col: pd.Series) -> pd.Series:
-        import hashlib
-
-        md5 = hashlib.md5
-        # per-task shingle-hash memo (guide §4.5): shingle TYPES repeat
-        # heavily across rows (shared vocabulary), so the md5 — the
-        # dominant per-shingle cost — runs once per distinct shingle
-        # seen by this task instead of once per occurrence.  Values are
-        # identical by construction; the cap bounds worker memory on
-        # adversarial corpora.
-        hcache: dict[str, int] = {}
-
-        def h32(sh: str) -> int:
-            v = hcache.get(sh)
-            if v is None:
-                v = int.from_bytes(md5(sh.encode("utf-8")).digest()[:4], "big")
-                if len(hcache) > 2_000_000:
-                    hcache.clear()
-                hcache[sh] = v
-            return v
-
-        out = []
-        for s in col:
-            if s is None:
-                out.append(None)
-                continue
-            if mode == "word":
-                toks = s.split()
-                if len(toks) < width:
-                    out.append(None)
-                    continue
-                shingles = {
-                    " ".join(toks[i : i + width]) for i in range(len(toks) - width + 1)
-                }
-            else:
-                if len(s) < width:
-                    out.append(None)
-                    continue
-                shingles = {s[i : i + width] for i in range(len(s) - width + 1)}
-            h = np.fromiter(
-                (h32(sh) for sh in shingles),
-                dtype=np.int64,
-                count=len(shingles),
-            )
-            # (k, n) affine transforms; min over shingles per permutation.
-            # a < 2^31 and h < 2^32 keep a*h + b < 2^63: exact, no wrap.
-            sig = ((a[:, None] * h[None, :] + b[:, None]) % MINHASH_PRIME).min(axis=1)
-            out.append(sig)
-        return pd.Series(out)
+        return pd.Series(minhash_signatures(col, k, seed, width, mode))
 
     return _sig
 
@@ -278,6 +287,76 @@ def bucket_star_edges(
         .filter(F.col("score") >= min_jaccard)
     )
     return linked.dropDuplicates(["a", "b"])
+
+
+_M3_C1 = np.uint32(0xCC9E2D51)
+_M3_C2 = np.uint32(0x1B873593)
+
+
+def _rotl32(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
+
+
+def spark_hash_longs(rows: np.ndarray) -> np.ndarray:
+    """Spark's ``hash(array<bigint>)`` of each row of an (n, m) int64
+    matrix, as int32 — the band key :func:`_banded` computes.
+
+    Murmur3_x86_32 with seed 42, chained over the elements: each element
+    is ``hashLong`` (mixK1/mixH1 on its low word, then its high word,
+    then ``fmix`` with length 8) seeded with the previous element's hash.
+    uint32 arithmetic wraps exactly like Java ``int``."""
+    words = np.ascontiguousarray(rows, dtype=np.int64).view(np.uint64)
+    h = np.full(words.shape[0], 42, dtype=np.uint32)
+    for j in range(words.shape[1]):
+        for word in (words[:, j] & np.uint64(0xFFFFFFFF), words[:, j] >> np.uint64(32)):
+            k1 = _rotl32(word.astype(np.uint32) * _M3_C1, 15) * _M3_C2
+            h = _rotl32(h ^ k1, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+        h ^= np.uint32(8)
+        h ^= h >> np.uint32(16)
+        h *= np.uint32(0x85EBCA6B)
+        h ^= h >> np.uint32(13)
+        h *= np.uint32(0xC2B2AE35)
+        h ^= h >> np.uint32(16)
+    return h.view(np.int32)
+
+
+def local_star_edges(
+    norms: Sequence[str],
+    bands: int = LSH_BANDS,
+    k: int = MINHASH_K,
+    min_jaccard: float = 0.5,
+) -> list[tuple[str, str]]:
+    """Driver-side :func:`bucket_star_edges` over distinct surfaces, each
+    its own mention id: the same (norm_a, norm_b) edge set.
+
+    Same buckets: Spark's band hash (:func:`spark_hash_longs`), not the
+    slice itself — a 32-bit collision changes a bucket's members and so
+    its representative.  Same representative, the bucket's minimum
+    surface: Python ``str`` order is code-point order, which equals
+    Spark's UTF-8 byte order.  Same agreement rule and NULL-signature
+    exclusion."""
+    signed = sorted(
+        ((s, sig) for s, sig in zip(norms, minhash_signatures(norms, k)) if sig is not None),
+        key=lambda t: t[0],
+    )
+    if not signed:
+        return []
+    names = [s for s, _ in signed]
+    sigs = np.stack([sig for _, sig in signed])
+    n, rows = len(names), k // bands
+    # surfaces are sorted, so a bucket's minimum surface is its minimum index
+    idx = np.arange(n)
+    codes = []
+    for b in range(bands):
+        _, bucket = np.unique(spark_hash_longs(sigs[:, b * rows : (b + 1) * rows]), return_inverse=True)
+        rep = np.full(bucket.max() + 1, n)
+        np.minimum.at(rep, bucket, idx)
+        rep = rep[bucket]
+        member = idx[idx > rep]
+        rep = rep[member]
+        keep = (sigs[member] == sigs[rep]).sum(axis=1) / k >= min_jaccard
+        codes.append(rep[keep] * n + member[keep])
+    return [(names[c // n], names[c % n]) for c in np.unique(np.concatenate(codes)).tolist()]
 
 
 def best_candidate(scored: DataFrame) -> DataFrame:

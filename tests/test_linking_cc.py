@@ -1,15 +1,24 @@
 """Entity linking + connected components, validated against plain-Python
 oracles (FIXTURES.md §4)."""
 
+import random
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from ffp_spark.cc import connected_components
+from ffp_spark.cc import components_local, connected_components
 from ffp_spark.datagen import AUTHOR_CLUSTERS, author_cluster_oracle, synth_pages
 from ffp_spark.linking import (
+    LSH_BANDS,
+    MINHASH_K,
+    _banded,
     best_candidate,
+    bucket_star_edges,
     candidate_pairs,
+    local_star_edges,
     minhash_udf,
+    spark_hash_longs,
     with_signatures,
 )
 from ffp_spark.udfs import parse_pages
@@ -154,6 +163,134 @@ class TestEndToEndLinking:
         for cluster, canons in by_cluster.items():
             for c in canons:
                 assert seen.setdefault(c, cluster) == cluster, (c, cluster, seen[c])
+
+
+def _surface_set(seed):
+    """Seeded author surfaces: spelling-variant clusters, surfaces of one
+    or two characters (NULL signature), non-ASCII and CJK names, one hot
+    bucket of near-identical surfaces and unrelated noise."""
+    rng = random.Random(seed)
+    alphabet = "aeiouxyzłü"
+    out = set()
+    for base in ("david bau", "emma brown", "wei chen", "łódź nowak", "istanbul kaya",
+                 "张伟 李娜", "maría garcía", "josé müller"):
+        out.add(base)
+        for _ in range(6):
+            s = list(base)
+            i = rng.randrange(len(s))
+            op = rng.randrange(3)
+            if op == 0:
+                del s[i]
+            elif op == 1:
+                s.insert(i, rng.choice(alphabet))
+            else:
+                s[i] = rng.choice(alphabet)
+            out.add("".join(s))
+    out |= {"a", "jo", "李", "łó", "x y"}
+    out |= {f"jane doe {rng.choice('abcdefgh')}{i}" for i in range(40)}
+    out |= {
+        f"{rng.choice('bcdfgk')}{rng.choice('aeiou')}{rng.choice('lmnrs')} {rng.randrange(1000)}"
+        for _ in range(60)
+    }
+    return sorted(out)
+
+
+def _local_link(norms, min_jaccard):
+    """(norm, canonical_norm) pairs as ``link_and_canonicalize`` forms them."""
+    comp = components_local(local_star_edges(norms, min_jaccard=min_jaccard))
+    return [(n, comp.get(n, n)) for n in norms]
+
+
+def _spark_link(surfaces, min_jaccard):
+    """The same mapping from the DataFrame operators: signature UDF,
+    bucket star edges and large-star/small-star CC."""
+    signed = with_signatures(surfaces.withColumn("mention_id", F.col("norm"))).cache()
+    try:
+        edges = bucket_star_edges(signed, min_jaccard=min_jaccard).select(
+            F.col("norm_a").alias("src"), F.col("norm_b").alias("dst")
+        )
+        components = connected_components(edges).withColumnRenamed("node_id", "norm")
+        return [
+            (r.norm, r.canonical_norm)
+            for r in signed.select("norm")
+            .join(components, "norm", "left")
+            .select("norm", F.coalesce("component_id", "norm").alias("canonical_norm"))
+            .collect()
+        ]
+    finally:
+        signed.unpersist()
+
+
+class TestDriverLinking:
+    """The driver link path against the DataFrame linking operators: each
+    helper on both sides called directly."""
+
+    def test_band_hash_equals_spark_hash_of_the_slice(self, spark):
+        rng = np.random.RandomState(7)
+        pool = np.concatenate([
+            rng.randint(-(2**63), 2**63 - 1, size=3000, dtype=np.int64),
+            2**32 + rng.randint(-8, 8, size=500),
+            rng.randint(-8, 8, size=500),
+            np.array([-(2**63), 2**63 - 1, 2**31, -(2**31) - 1, 2**32 - 1], dtype=np.int64),
+        ])
+        sigs = rng.choice(pool, size=(200, MINHASH_K))
+        df = spark.createDataFrame(
+            [(str(i), str(i), [int(x) for x in row]) for i, row in enumerate(sigs)],
+            "mention_id string, norm string, sig array<bigint>",
+        )
+        got = {
+            (int(r.mention_id), r.band_id): r.band_hash
+            for r in _banded(df, LSH_BANDS, MINHASH_K).collect()
+        }
+        rows = MINHASH_K // LSH_BANDS
+        want = {
+            (i, b): int(h)
+            for b in range(LSH_BANDS)
+            for i, h in enumerate(spark_hash_longs(sigs[:, b * rows : (b + 1) * rows]))
+        }
+        assert got == want
+
+    @pytest.mark.parametrize("min_jaccard", [0.35, 0.5])
+    def test_local_linking_equals_spark_linking(self, spark, min_jaccard):
+        for norms in (_surface_set(int(min_jaccard * 100)), []):
+            surfaces = spark.createDataFrame([(s,) for s in norms], "norm string")
+            want = sorted(_spark_link(surfaces, min_jaccard))
+            assert sorted(_local_link(norms, min_jaccard)) == want
+        # the sets exercise merges, NULL signatures and the hot bucket
+        got = dict(_local_link(_surface_set(50), min_jaccard))
+        assert got["a"] == "a" and got["李"] == "李"
+        assert len({c for s, c in got.items() if s.startswith("jane doe")}) < 40
+
+    @pytest.mark.parametrize("case", ["random-1", "random-2", "empty", "hot-star"])
+    def test_components_local_equals_connected_components(self, spark, case):
+        if case == "empty":
+            edges = []
+        elif case == "hot-star":
+            edges = [("hub", f"leaf{i:03d}") for i in range(300)] + [("hub", "hub")]
+        else:
+            rng = random.Random(case)
+            nodes = [f"n{i:02d}" for i in range(80)]
+            edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(60)]
+        df = spark.createDataFrame(edges, "src string, dst string")
+        want = {r.node_id: r.component_id for r in connected_components(df).collect()}
+        assert components_local(edges) == want
+        assert components_local(edges) == _union_find([e for e in edges if e[0] != e[1]])
+
+    def test_author_linking_runs_at_most_three_jobs(self, spark):
+        from ffp_spark.pipeline import link_and_canonicalize, warm_collation
+
+        parsed = parse_pages(synth_pages(spark, 40))
+        warm_collation(spark)
+        sc = spark.sparkContext
+        sc.setJobGroup("link-jobs", "link_and_canonicalize")
+        try:
+            canon = link_and_canonicalize(parsed)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert canon.count() > 0
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup("link-jobs")
+        assert 0 < len(jobs) <= 3, sorted(jobs)
 
 
 def _one_feed_author_edges(spark, title, authors):

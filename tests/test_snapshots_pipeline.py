@@ -197,6 +197,26 @@ class TestPipeline:
         # time travel: snapshot 1 still readable underneath
         assert read_snapshot(spark, tmp_path, "triples", snapshot_id=1).count() == r1["triples"]
 
+    def test_resumed_incremental_snapshot_recommits_the_same_rows(self, spark, tmp_path):
+        # a resumed re-run keeps the done parts' committed triples, which
+        # already hold the parent's: the parent must not be carried again
+        from collections import Counter
+
+        def committed():
+            return {
+                t: Counter(map(tuple, read_snapshot(spark, tmp_path, t, snapshot_id=2).collect()))
+                for t in ("triples", "nodes", "edges")
+            }
+
+        run_snapshot(spark, synth_pages(spark, 60, seed=9), str(tmp_path), snapshot_id=1, n_parts=8)
+        grown = synth_pages(spark, 100, seed=9)
+        first = run_snapshot(spark, grown, str(tmp_path), snapshot_id=2, n_parts=8, incremental_from=1)
+        before = committed()
+        again = run_snapshot(spark, grown, str(tmp_path), snapshot_id=2, n_parts=8, incremental_from=1)
+        assert again["pages"] == 0
+        assert again["triples"] == first["triples"]
+        assert committed() == before
+
     def test_degenerate_corpora_commit_and_n_parts_agree(self, spark, tmp_path):
         """An empty corpus, an all-error corpus and a one-page corpus all
         commit, with report and lineage page counts equal to the input;
