@@ -18,9 +18,12 @@ Scale design notes (100 TB / 1000 executors):
   lexicographic-min components as the DataFrame linking operators);
 * only author mentions are linked — site entities are keyed by
   feed.id/feed.link and need no canonicalization;
-* per-stage caching is limited to the raw parse and one checkpoint of
-  the redirect-resolved parse, which both the triple and linking
-  branches consume; the report's page count rides that checkpoint;
+* meta-refresh resolution is one job when no page redirects; otherwise
+  it parses only the target pages and walks the chains on the driver;
+* per-stage caching is limited to the raw parse, the redirect targets'
+  parse and one checkpoint of the redirect-resolved parse, which both
+  the triple and linking branches consume; the report's page count
+  rides that checkpoint;
 * ``run_snapshot`` is one straight-line function: the data tables
   commit concurrently, lineage last (the completion marker).  Nodes and
   edges go through the catalog-bucketed writer, whose bucket id lives
@@ -33,6 +36,7 @@ import logging
 import time
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
+from functools import reduce
 from typing import Any, Optional
 
 import pyarrow as pa
@@ -221,128 +225,72 @@ def build_session(app: str, master: Optional[str] = None, shuffle_partitions: in
     return spark
 
 
-def _parse_targets(pages: DataFrame, targets: DataFrame) -> DataFrame:
-    """Parse the corpus pages whose url appears in ``targets``.
-
-    With AQE on, an empty broadcast build side collapses the semi-join
-    to an empty relation — the common no-redirects case never scans
-    PAGES.  dropDuplicates on url: a target appearing twice in the
-    corpus (re-crawl) must not fan out the redirecting row's output."""
-    target_pages = pages.join(F.broadcast(targets), "url", "left_semi").dropDuplicates(
-        ["url"]
-    )
-    return parse_pages(target_pages).select(
-        F.col("url").alias("target_url"),
-        F.col("feed_type").alias("t_feed_type"),
-        F.col("feed").alias("t_feed"),
-        F.col("entries").alias("t_entries"),
-        F.col("error").alias("t_error"),
-        F.col("error_class").alias("t_error_class"),
-        F.lit(True).alias("t_hit"),
-    )
+# hops followed per redirecting page: a longer chain or a cycle ends on
+# the meta_refresh row of the last page reached
+REDIRECT_HOPS = 3
 
 
 def resolve_meta_refresh(
-    parsed: DataFrame,
-    pages: DataFrame,
-    cache_registry: Optional[list] = None,
-    max_hops: int = 3,
+    parsed: DataFrame, pages: DataFrame, cache_registry: Optional[list] = None
 ) -> DataFrame:
     """Resolve meta-refresh redirects against the at-rest PAGES table.
 
     Offline analogue of the reference's redirect retry
-    (/root/reference/src/fastfeedparser/main.py:877-893): a row whose
-    ``error_class='meta_refresh'`` carries its target in
-    ``error='meta_refresh:<url>'``.  The targets (distinct, typically a
-    tiny fraction of the corpus) are semi-joined against PAGES, the
-    matching target pages are parsed ONCE, and each redirecting row is
-    rewritten with its target's parse result — keyed by the ORIGINAL
-    url, exactly like the reference returning the redirected parse for
-    the requested url.  Targets missing from the corpus keep their
-    meta_refresh error row.
+    (fastfeedparser ``main.py:877-893``): a row with
+    ``error='meta_refresh:<url>'`` takes, under its own url, the parse of
+    the last corpus page its chain reaches within ``REDIRECT_HOPS`` hops;
+    a target missing from the corpus leaves the row naming it.
 
-    Scale: the only full scan is the semi-join probe of PAGES (no
-    shuffle of the big side — the distinct target set is broadcast);
-    the re-parse touches only matched target pages.
+    Eager: one job collects the redirect targets; with none, ``parsed``
+    comes back as is.  Each hop parses the corpus pages of the targets
+    not yet probed (broadcast semi-join) into a cache (``cache_registry``)
+    and collects their own targets; the driver walks the chains, and one
+    broadcast join rewrites the redirecting rows.  The driver holds one
+    url per redirecting row and two per parsed target page, and the
+    target pages' parse rows are broadcast to that join.
     """
-    redirects = parsed.filter(F.col("error_class") == "meta_refresh").select(
-        F.col("url").alias("orig_url"),
-        F.col("warc_ts").alias("orig_ts"),
-        F.col("lang").alias("orig_lang"),
-        F.col("error").alias("orig_error"),
-        F.expr("substring(error, 14)").alias("target_url"),
-    )
-    targets = redirects.select(F.col("target_url").alias("url")).distinct()
-    parsed_targets = _parse_targets(pages, targets).cache()
-    if cache_registry is not None:
-        cache_registry.append(parsed_targets)
-
-    # follow redirect CHAINS inside the (tiny) target set: a target that
-    # itself meta-refreshes is rewritten by ITS target's parse, like the
-    # reference's recursive retry — bounded by max_hops, so cycles
-    # (A -> B -> A) terminate with the error row intact.  The hop layers
-    # are built LAZILY and unconditionally: an emptiness probe here would
-    # be an action at plan-construction time (it forced the whole parse
-    # before the stage timers), while an empty next-target set costs
-    # nothing at execution — AQE collapses the empty-build-side joins.
-    for _ in range(max_hops - 1):
-        t_red = parsed_targets.filter(
-            F.col("t_error_class") == "meta_refresh"
-        ).select("target_url", F.expr("substring(t_error, 14)").alias("next_url"))
-        next_targets = t_red.select(F.col("next_url").alias("url")).distinct()
-        nxt = _parse_targets(pages, next_targets).select(
-            F.col("target_url").alias("next_url"),
-            F.col("t_feed_type").alias("n_feed_type"),
-            F.col("t_feed").alias("n_feed"),
-            F.col("t_entries").alias("n_entries"),
-            F.col("t_error").alias("n_error"),
-            F.col("t_error_class").alias("n_error_class"),
-            F.col("t_hit").alias("n_hit"),
-        )
-        rewritten = t_red.join(F.broadcast(nxt), "next_url", "left").select(
-            "target_url",
-            F.when(F.col("n_hit"), F.col("n_feed_type")).alias("t_feed_type"),
-            F.when(F.col("n_hit"), F.col("n_feed")).alias("t_feed"),
-            F.when(F.col("n_hit"), F.col("n_entries")).alias("t_entries"),
-            F.when(F.col("n_hit"), F.col("n_error"))
-            .otherwise(F.concat(F.lit("meta_refresh:"), F.col("next_url")))
-            .alias("t_error"),
-            F.when(F.col("n_hit"), F.col("n_error_class"))
-            .otherwise(F.lit("meta_refresh"))
-            .alias("t_error_class"),
-            F.lit(True).alias("t_hit"),
-        )
-        parsed_targets = (
-            parsed_targets.filter(
-                F.col("t_error_class").isNull()
-                | (F.col("t_error_class") != "meta_refresh")
-            )
-            .unionByName(rewritten.select(*parsed_targets.columns))
-            .cache()
-        )
+    redirect = F.col("error_class") == "meta_refresh"
+    next_url = F.expr("substring(error, 14)")
+    firsts = {r[0] for r in parsed.where(redirect).select(next_url).collect()}
+    if not firsts:
+        return parsed
+    spark = parsed.sparkSession
+    hop: dict[str, Optional[str]] = {}  # parsed target -> its own target
+    targets: list[DataFrame] = []
+    probed: set[str] = set()
+    todo = firsts
+    while todo and len(targets) < REDIRECT_HOPS:
+        probed |= todo
+        urls = spark.createDataFrame(pa.table({"url": pa.array(sorted(todo), pa.string())}))
+        # dropDuplicates: a re-crawled target is parsed once
+        targets.append(parse_pages(
+            pages.join(F.broadcast(urls), "url", "left_semi").dropDuplicates(["url"])
+        ).cache())
         if cache_registry is not None:
-            cache_registry.append(parsed_targets)
-    resolved = (
-        redirects.join(F.broadcast(parsed_targets), "target_url", "left")
-        .select(
-            F.col("orig_url").alias("url"),
-            F.col("orig_ts").alias("warc_ts"),
-            F.col("orig_lang").alias("lang"),
-            F.when(F.col("t_hit"), F.col("t_feed_type")).alias("feed_type"),
-            F.when(F.col("t_hit"), F.col("t_feed")).alias("feed"),
-            F.when(F.col("t_hit"), F.col("t_entries")).alias("entries"),
-            F.when(F.col("t_hit"), F.col("t_error"))
-            .otherwise(F.col("orig_error"))
-            .alias("error"),
-            F.when(F.col("t_hit"), F.col("t_error_class"))
-            .otherwise(F.lit("meta_refresh"))
-            .alias("error_class"),
-        )
+            cache_registry.append(targets[-1])
+        found = dict(targets[-1].select("url", F.when(redirect, next_url)).collect())
+        hop.update(found)
+        todo = {u for u in found.values() if u} - probed
+
+    ends = {}  # first target -> last corpus page its chain reaches
+    for first in firsts:
+        nxt = first
+        for _ in range(REDIRECT_HOPS):
+            if nxt not in hop:
+                break
+            ends[first], nxt = nxt, hop[nxt]
+    end_of = F.broadcast(spark.createDataFrame(pa.table({
+        "first_url": pa.array(list(ends), pa.string()),
+        "end_url": pa.array(list(ends.values()), pa.string()),
+    })))
+    ended = redirect & (next_url == F.col("first_url"))
+    target_rows = reduce(DataFrame.unionByName, targets).withColumnRenamed("url", "end_url")
+    moved = (
+        parsed.join(end_of, ended)
+        .select("url", "warc_ts", "lang", "end_url")
+        .join(F.broadcast(target_rows.drop("warc_ts", "lang")), "end_url")
     )
-    kept = parsed.filter(
-        F.col("error_class").isNull() | (F.col("error_class") != "meta_refresh")
-    )
-    return kept.select(*parsed.columns).unionByName(resolved.select(*parsed.columns))
+    return parsed.join(end_of, ended, "left_anti").unionByName(moved.select(*parsed.columns))
 
 
 def link_and_canonicalize(parsed: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
@@ -502,7 +450,8 @@ def run_snapshot(
     merged into this snapshot's committed tables (append-only logical
     snapshot over a physical delta, Iceberg-style).
     Pass ``stage_timings={}`` to collect per-stage wall seconds:
-    ``parse_sec`` (the raw parse), ``link_cc_sec`` (checkpointing the
+    ``parse_sec`` (the raw parse and the redirect resolution, which
+    parses the redirect targets), ``link_cc_sec`` (checkpointing the
     resolved parse, linking and CC), ``agg_sec`` (the error histogram
     only, which overlaps the data commits) and ``write_sec`` (the
     commits, lineage last)."""
@@ -530,13 +479,14 @@ def run_snapshot(
     todo = remaining_pages(pages, prior_lineage).repartition(n_parts, "part_id")
 
     # cache the RAW parse (the expensive Python stage) — the redirect
-    # resolution union re-reads this cache, never re-runs the parse
+    # resolution re-reads this cache, never re-runs the parse
     raw = parse_pages(todo).cache()
     caches: list = [raw]
     try:
+        t0 = time.perf_counter()
+        # eager: collecting the redirect targets fills the raw cache
+        resolved = resolve_meta_refresh(raw, pages_full, cache_registry=caches)
         if stage_timings is not None:
-            t0 = time.perf_counter()
-            raw.count()  # materializes the cache: this IS the parse stage
             stage_timings["parse_sec"] = round(time.perf_counter() - t0, 3)
 
         t0 = time.perf_counter()
@@ -547,8 +497,7 @@ def run_snapshot(
         # emits one row per input page, errors included.
         obs = Observation()
         parsed = (
-            resolve_meta_refresh(raw, pages_full, cache_registry=caches)
-            .withColumn("part_id", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int"))
+            resolved.withColumn("part_id", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int"))
             .observe(obs, F.count(F.lit(1)).alias("pages"))
             .localCheckpoint(eager=True)
         )

@@ -65,6 +65,17 @@ def _redirect_html(target: str) -> bytes:
     )
 
 
+def _u(name: str) -> str:
+    return f"https://{name}.example/"
+
+
+def _mr(name: str) -> str:
+    return f"meta_refresh:{_u(name)}"
+
+
+_HTML_ERROR = "Content appears to be HTML, not a valid RSS/Atom feed"
+
+
 class TestMetaRefreshResolution:
     def test_redirect_to_in_corpus_feed_resolves(self, spark):
         from ffp_spark.pipeline import resolve_meta_refresh
@@ -131,6 +142,106 @@ class TestMetaRefreshResolution:
         assert rep["pages"] == 2
         # both rows parsed: the redirect was resolved, so no error classes
         assert rep["errors"] == {}
+
+    @pytest.mark.parametrize(
+        "links, expected",
+        [
+            pytest.param(
+                {"a": "b", "b": "c", "c": "d", "d": "f", "f": None},
+                [
+                    # three hops reach d, which still redirects: d's row
+                    ("a", _mr("f"), "meta_refresh", None),
+                    ("b", None, None, "Target Feed"),
+                    ("c", None, None, "Target Feed"),
+                    ("d", None, None, "Target Feed"),
+                    ("f", None, None, "Target Feed"),
+                ],
+                id="chain-longer-than-budget",
+            ),
+            pytest.param(
+                {"a": "a", "o": "a"},
+                [
+                    # the parse drops a self-referential refresh: a is a
+                    # plain HTML page, and so is what o resolves to
+                    ("a", _HTML_ERROR, "html_page", None),
+                    ("o", _HTML_ERROR, "html_page", None),
+                ],
+                id="self-redirect",
+            ),
+            pytest.param(
+                {"a": "b", "b": "gone"},
+                [
+                    ("a", _mr("gone"), "meta_refresh", None),
+                    ("b", _mr("gone"), "meta_refresh", None),
+                ],
+                id="chain-to-missing-target",
+            ),
+            pytest.param(
+                {"a": "f", "b": "f", "f": None},
+                [
+                    ("a", None, None, "Target Feed"),
+                    ("b", None, None, "Target Feed"),
+                    ("f", None, None, "Target Feed"),
+                ],
+                id="two-origins-one-target",
+            ),
+            pytest.param(
+                {"a": "b", "b": "c", "c": "d", "d": "f", "x": "d", "f": None},
+                [
+                    # d is a's third hop and x's first
+                    ("a", _mr("f"), "meta_refresh", None),
+                    ("b", None, None, "Target Feed"),
+                    ("c", None, None, "Target Feed"),
+                    ("d", None, None, "Target Feed"),
+                    ("f", None, None, "Target Feed"),
+                    ("x", None, None, "Target Feed"),
+                ],
+                id="target-at-two-depths",
+            ),
+            pytest.param({}, [], id="empty-parse"),
+        ],
+    )
+    def test_chain_shapes(self, spark, links, expected):
+        from ffp_spark.pipeline import resolve_meta_refresh
+
+        pages = spark.createDataFrame(
+            [
+                (_u(name), None, bytearray(_redirect_html(_u(to)) if to else _RSS), None, "en")
+                for name, to in links.items()
+            ],
+            _PAGES_DDL,
+        )
+        rows = sorted(
+            (r.url, r.error, r.error_class, r.feed.title if r.feed else None)
+            for r in resolve_meta_refresh(parse_pages(pages), pages).collect()
+        )
+        assert rows == [(_u(name), *rest) for name, *rest in expected]
+
+    def test_redirect_free_parse_runs_at_most_one_job(self, spark):
+        from ffp_spark.datagen import synth_pages
+        from ffp_spark.pipeline import resolve_meta_refresh
+
+        pages = synth_pages(spark, 40)
+        parsed = parse_pages(pages).cache()
+        try:
+            assert parsed.where("error_class = 'meta_refresh'").count() == 0
+            sc = spark.sparkContext
+
+            def jobs(group, run):
+                sc.setJobGroup(group, group)
+                try:
+                    run()
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                return len(sc.statusTracker().getJobIdsForGroup(group))
+
+            # the jobs resolve_meta_refresh adds to reading its input
+            plain = jobs("parse-only", lambda: parsed.collect())
+            resolved = jobs("resolve", lambda: resolve_meta_refresh(parsed, pages).collect())
+            assert resolved - plain <= 1, (plain, resolved)
+        finally:
+            parsed.unpersist()
 
 
 class TestStoredPayloadDecompression:

@@ -5,8 +5,9 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from ffp_spark.datagen import synth_pages
+from ffp_spark.datagen import synth_page, synth_pages
 from ffp_spark.pipeline import add_part_id, run_snapshot
+from ffp_spark.schemas import PAGES_SCHEMA
 from ffp_spark.snapshots import (
     current_snapshot_id,
     read_manifest,
@@ -253,12 +254,30 @@ class TestPipeline:
         assert report["pages"] == lineage_pages == 1
         assert report["triples"] == len(triples) > 0
 
+        # redirect pages: a chain r1 -> r2 -> a corpus feed, and a refresh
+        # to a page missing from the corpus
+        def refresh(url, target):
+            html = b'<html><head><meta http-equiv="refresh" content="0; url=%s"></head></html>'
+            return (url, None, html % target.encode(), None, "en")
+
+        redirects = spark.createDataFrame(
+            [
+                refresh("https://r1.example/", "https://r2.example/"),
+                refresh("https://r2.example/", synth_page(3, 0)["url"]),
+                refresh("https://r3.example/", "https://gone.example/"),
+            ],
+            PAGES_SCHEMA,
+        )
         sets = []
         for n_parts in (1, 7, 64):
-            report, lineage_pages, triples = commit(pages, f"parts{n_parts}", n_parts)
-            assert report["pages"] == lineage_pages == 40
+            report, lineage_pages, triples = commit(
+                pages.unionByName(redirects), f"parts{n_parts}", n_parts
+            )
+            assert report["pages"] == lineage_pages == 43
+            assert report["errors"].get("meta_refresh") == 1
             sets.append(triples)
         assert sets[0] and sets[0] == sets[1] == sets[2]
+        assert {"https://r1.example/", "https://r2.example/"} <= {t[3] for t in sets[0]}
 
     def test_deterministic_triples_across_runs(self, spark, tmp_path):
         pages = synth_pages(spark, 80, seed=5)
