@@ -81,6 +81,8 @@ def analyze_snapshot(
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     from .snapshots import read_snapshot_bucketed
 
     edges = read_snapshot_bucketed(spark, root, "edges", snapshot_id)
@@ -110,10 +112,12 @@ def analyze_snapshot(
     def _tri() -> DataFrame:
         return triangle_count(edges).localCheckpoint(eager=True)
 
+    # each worker thread gets its own copy of the caller's local
+    # properties (job group, description), as in run_snapshot
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_deg = pool.submit(_deg)
-        f_top = pool.submit(_top)
-        f_tri = pool.submit(_tri)
+        f_deg, f_top, f_tri = (
+            pool.submit(inheritable_thread_target(spark)(f)) for f in (_deg, _top, _tri)
+        )
         return {
             "degree_histogram": f_deg.result(),
             "top_pagerank": f_top.result(),

@@ -149,6 +149,12 @@ def minhash_udf(
     return _sig
 
 
+def author_norm(surface: Column) -> Column:
+    """The key an author surface links on: lower-cased, each run of
+    characters that are neither letters nor digits one space, trimmed."""
+    return F.trim(F.regexp_replace(F.lower(surface), r"[^\p{L}\p{Nd}]+", " "))
+
+
 def extract_mentions(parsed: DataFrame) -> DataFrame:
     """Author mentions from PARSED, one row per entry with an author:
     (surface, kind, src_url, subject_id, norm)."""
@@ -161,12 +167,7 @@ def extract_mentions(parsed: DataFrame) -> DataFrame:
             F.col("url").alias("src_url"),
             F.col("entry.id").alias("subject_id"),
         )
-        .withColumn(
-            "norm",
-            F.trim(
-                F.regexp_replace(F.lower(F.col("surface")), r"[^\p{L}\p{Nd}]+", " ")
-            ),
-        )
+        .withColumn("norm", author_norm(F.col("surface")))
     )
 
 

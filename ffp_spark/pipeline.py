@@ -17,7 +17,10 @@ Scale design notes (100 TB / 1000 executors):
   and linked on the driver (same signatures, band buckets and
   lexicographic-min components as the DataFrame linking operators);
 * only author mentions are linked — site entities are keyed by
-  feed.id/feed.link and need no canonicalization;
+  feed.id/feed.link; the link input, edges, author nodes and lineage's
+  n_triples all derive from the one ``emit_triples`` frame, and every
+  run (fresh, incremental, resumed) commits a set of edges and one
+  least-labelled row per node;
 * meta-refresh resolution is one job when no page redirects; otherwise
   it parses only the target pages and walks the chains on the driver;
 * per-stage caching is limited to the raw parse, the redirect targets'
@@ -25,7 +28,8 @@ Scale design notes (100 TB / 1000 executors):
   the triple and linking branches consume; the report's page count
   rides that checkpoint;
 * ``run_snapshot`` is one straight-line function: the data tables
-  commit concurrently, lineage last (the completion marker).  Nodes and
+  commit concurrently, under the caller's job group, lineage last (the
+  completion marker).  Nodes and
   edges go through the catalog-bucketed writer, whose bucket id lives
   in the file names and the catalog spec, not in a data column.
 """
@@ -41,9 +45,10 @@ from typing import Any, Optional
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from .cc import components_local
-from .linking import extract_mentions, local_star_edges
+from .linking import author_norm, local_star_edges
 from .metrics import error_histogram, partition_lineage
 from .schemas import PRED_AUTHOR
 from .snapshots import (
@@ -294,12 +299,11 @@ def resolve_meta_refresh(
 
 
 def link_and_canonicalize(parsed: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
-    """Author mentions -> (norm, canonical norm) mapping via LSH + CC.
+    """Author triples -> (norm, canonical norm) mapping via LSH + CC.
 
-    Clustering runs over *distinct normalized author surfaces* (far
-    smaller than the mention set: the groupBy is the dedup), then
-    mentions re-join the mapping; canonical id = lexicographic min
-    surface in the component.
+    Clustering runs over the distinct non-empty normalized objects of
+    the ``author`` triples; canonical id = lexicographic min surface in
+    the component.
 
     One job collects the distinct surfaces; the driver links them
     (:func:`linking.local_star_edges`, :func:`cc.components_local`) with
@@ -317,9 +321,10 @@ def link_and_canonicalize(parsed: DataFrame, min_jaccard: float = 0.5) -> DataFr
     warm_collation(spark)  # before the wide lower() stage
     norms = [
         r.norm
-        for r in extract_mentions(parsed)
-        .select("norm")
-        .where(F.col("norm").isNotNull() & (F.col("norm") != ""))
+        for r in emit_triples(parsed)
+        .where(F.col("pred") == PRED_AUTHOR)
+        .select(author_norm(F.col("obj")).alias("norm"))
+        .where(F.col("norm") != "")
         .distinct()
         .collect()
     ]
@@ -334,10 +339,30 @@ def link_and_canonicalize(parsed: DataFrame, min_jaccard: float = 0.5) -> DataFr
     )
 
 
+def _node_set(nodes: DataFrame) -> DataFrame:
+    """One row per (node_id, kind), labelled with the least candidate
+    label: a rule that no partitioning, run order or merge can change."""
+    return nodes.groupBy("node_id", "kind").agg(F.min("label").alias("label")).select(
+        "node_id", "kind", F.col("node_id").alias("canonical_id"), "label"
+    )
+
+
+def _edge_set(edges: DataFrame) -> DataFrame:
+    """The distinct (src, dst, pred, weight) rows."""
+    return edges.select("src", "dst", "pred", "weight").distinct()
+
+
 def materialize_graph(
     parsed: DataFrame, canon: DataFrame, snapshot_id: int, n_parts: int
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(triples, nodes, edges) with canonicalized author entities."""
+    """(triples, nodes, edges) with canonicalized author entities.
+
+    Edges and author nodes derive from the ``emit_triples`` frame: an
+    ``author`` triple points at its canonical author node, every other
+    triple is a structural edge.  Entry and feed nodes take their titles
+    from ``parsed`` (titles are not in the triples).  Edges are a set and
+    a node's label is the least candidate, so neither n_parts nor a
+    page parsed twice (a redirect and its target) changes the graph."""
     triples = (
         emit_triples(parsed)
         .withColumn("snapshot_id", F.lit(snapshot_id))
@@ -347,65 +372,32 @@ def materialize_graph(
     # canonical dictionary join (K5): the canon mapping is the small side.
     # A broadcast hash join never shuffles the probe side, so a prolific
     # author's hot norm costs no straggler task and needs no salting.
-    author_mentions = extract_mentions(parsed).join(
-        F.broadcast(canon), "norm", "left"
-    )
-    author_nodes = (
-        author_mentions.groupBy(
-            F.coalesce("canonical_norm", "norm").alias("canonical_norm")
-        )
-        .agg(F.min("surface").alias("label"))
+    # Only author triples carry a norm; every other triple passes through
+    # as a structural edge.
+    is_author = F.col("pred") == PRED_AUTHOR
+    linked = (
+        triples.withColumn("norm", F.when(is_author, author_norm(F.col("obj"))))
+        .join(F.broadcast(canon), "norm", "left")
         .select(
-            F.concat(F.lit("author:"), "canonical_norm").alias("node_id"),
-            F.lit("author").alias("kind"),
-            F.concat(F.lit("author:"), "canonical_norm").alias("canonical_id"),
-            F.col("label"),
+            F.col("subj").alias("src"),
+            F.when(is_author, F.concat(F.lit("author:"), F.coalesce("canonical_norm", "norm")))
+            .otherwise(F.col("obj"))
+            .alias("dst"),
+            "pred",
+            F.col("obj").alias("surface"),
         )
     )
-    entry_nodes = (
-        parsed.filter(F.col("error").isNull())
-        .select(F.explode("entries").alias("e"))
-        .select(
-            F.col("e.id").alias("node_id"),
-            F.lit("item").alias("kind"),
-            F.col("e.id").alias("canonical_id"),
-            F.col("e.title").alias("label"),
-        )
-        .where(F.col("node_id").isNotNull())
-        .dropDuplicates(["node_id"])
-    )
-    feed_nodes = (
-        parsed.filter(F.col("error").isNull())
-        .select(
-            F.coalesce(F.col("feed.id"), F.col("feed.link")).alias("node_id"),
-            F.lit("feed").alias("kind"),
-            F.coalesce(F.col("feed.id"), F.col("feed.link")).alias("canonical_id"),
-            F.col("feed.title").alias("label"),
-        )
-        .where(F.col("node_id").isNotNull())
-        .dropDuplicates(["node_id"])
-    )
-    nodes = author_nodes.unionByName(entry_nodes).unionByName(feed_nodes)
+    edges = _edge_set(linked.withColumn("weight", F.lit(1.0)))
 
-    # structural edges from non-author triples; author edges re-pointed at
-    # the canonical author node
-    structural = triples.filter(F.col("pred") != PRED_AUTHOR).select(
-        F.col("subj").alias("src"),
-        F.col("obj").alias("dst"),
-        "pred",
-        F.lit(1.0).alias("weight"),
-    )
-    author_edges = (
-        author_mentions.select(
-            F.col("subject_id").alias("src"),
-            F.concat(F.lit("author:"), F.coalesce("canonical_norm", "norm")).alias("dst"),
-            F.lit(PRED_AUTHOR).alias("pred"),
-            F.lit(1.0).alias("weight"),
+    ok = parsed.where(F.col("error").isNull())
+    nodes = _node_set(reduce(DataFrame.unionByName, (
+        df.select(node_id.alias("node_id"), F.lit(kind).alias("kind"), label.alias("label"))
+        for df, kind, node_id, label in (
+            (linked.where(is_author), "author", F.col("dst"), F.col("surface")),
+            (ok.select(F.explode("entries").alias("e")), "item", F.col("e.id"), F.col("e.title")),
+            (ok, "feed", F.coalesce("feed.id", "feed.link"), F.col("feed.title")),
         )
-        .where(F.col("src").isNotNull())
-        .dropDuplicates(["src", "dst", "pred"])
-    )
-    edges = structural.unionByName(author_edges)
+    )).where(F.col("node_id").isNotNull()))
     return triples, nodes, edges
 
 
@@ -419,15 +411,12 @@ def _carry_forward(
     committed: tuple[DataFrame, DataFrame, DataFrame],
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Union a committed snapshot's (triples, nodes, edges) into this
-    run's.  Nodes and edges are not part-keyed and stay idempotent by
-    dropDuplicates."""
+    run's; nodes and edges through the node and edge rules of a fresh run."""
     (triples, nodes, edges), (old_triples, old_nodes, old_edges) = run, committed
     return (
         triples.unionByName(old_triples.select(*triples.columns)),
-        nodes.unionByName(old_nodes.select(*nodes.columns)).dropDuplicates(["node_id"]),
-        edges.unionByName(old_edges.select(*edges.columns)).dropDuplicates(
-            ["src", "dst", "pred"]
-        ),
+        _node_set(nodes.unionByName(old_nodes.select(*nodes.columns))),
+        _edge_set(edges.unionByName(old_edges.select(*edges.columns))),
     )
 
 
@@ -554,10 +543,6 @@ def run_snapshot(
                 read_snapshot(spark, out_root, t, snapshot_id)
                 for t in ("triples", "nodes", "edges")
             )
-            # a committed node wins over this run's node of the same id:
-            # dropDuplicates keeps an arbitrary row per id, and a re-run
-            # must re-commit the labels the first run committed
-            nodes = nodes.join(old_nodes.select("node_id"), "node_id", "left_anti")
             triples, nodes, edges = _carry_forward(
                 (triples, nodes, edges),
                 (old_triples.join(done_parts, "part_id", "left_semi"), old_nodes, old_edges),
@@ -586,22 +571,28 @@ def run_snapshot(
         # (independent dirs and jobs): overlapping them hides per-job
         # latency.  nodes/edges commit through the catalog-bucketed writer
         # (K11), so the serving join node_id == src needs no exchange.
+        # Each worker thread gets its own copy of the caller's local
+        # properties (job group, description): one shared copy would
+        # carry one thread's call site into another's jobs.
         t0 = time.perf_counter()
         with ThreadPoolExecutor(max_workers=5) as pool:
-            f_errors = pool.submit(_errors)
-            f_triples = pool.submit(
+            def submit(fn, *args, **kwargs):
+                return pool.submit(inheritable_thread_target(spark)(fn), *args, **kwargs)
+
+            f_errors = submit(_errors)
+            f_triples = submit(
                 write_snapshot, triples, out_root, "triples", snapshot_id,
                 partition_by=["part_id"],
             )
-            f_nodes = pool.submit(
+            f_nodes = submit(
                 write_snapshot_bucketed, nodes, out_root, "nodes", snapshot_id,
                 bucket_col="node_id",
             )
-            f_edges = pool.submit(
+            f_edges = submit(
                 write_snapshot_bucketed, edges, out_root, "edges", snapshot_id,
                 bucket_col="src",
             )
-            f_seen = pool.submit(write_snapshot, seen, out_root, "pages_seen", snapshot_id)
+            f_seen = submit(write_snapshot, seen, out_root, "pages_seen", snapshot_id)
             m_triples = f_triples.result()
             m_nodes = f_nodes.result()
             m_edges = f_edges.result()

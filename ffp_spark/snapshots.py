@@ -31,7 +31,10 @@ from pyspark.sql.types import StructType
 
 
 def _table_dir(root: str | Path, name: str) -> Path:
-    return Path(root) / name
+    """A table's directory, absolute: the parquet writers resolve a
+    relative path against the working directory, but a catalog table's
+    LOCATION against the warehouse dir."""
+    return Path(root).resolve() / name
 
 
 def _fsync_replace(tmp: Path, final: Path) -> None:

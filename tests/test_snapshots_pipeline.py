@@ -63,6 +63,19 @@ class TestSnapshots:
         assert m["row_count"] == 0
         assert read_snapshot(spark, tmp_path, "empty").count() == 0
 
+    def test_bucketed_commit_under_a_relative_root(self, spark, tmp_path, monkeypatch):
+        from ffp_spark.snapshots import read_snapshot_bucketed, write_snapshot_bucketed
+
+        monkeypatch.chdir(tmp_path)
+        df = spark.range(50).select(
+            F.col("id").cast("string").alias("node_id"), (F.col("id") % 3).alias("k")
+        )
+        m = write_snapshot_bucketed(df, "rel", "nodes", snapshot_id=1, bucket_col="node_id")
+        assert m["row_count"] == 50
+        assert (tmp_path / "rel" / "nodes" / "snap-1").is_dir()
+        assert read_snapshot_bucketed(spark, "rel", "nodes").count() == 50
+        assert read_snapshot(spark, "rel", "nodes").count() == 50
+
     def test_remaining_pages_anti_join(self, spark):
         pages = add_part_id(synth_pages(spark, 100), n_parts=8)
         lineage = spark.createDataFrame(
@@ -177,24 +190,47 @@ class TestPipeline:
         assert t.count() == ref["triples"]
 
     def test_incremental_snapshot_processes_only_new_urls(self, spark, tmp_path):
+        from collections import Counter
+
         from ffp_spark.snapshots import read_manifest
 
         base = synth_pages(spark, 100, seed=9)
-        grown = synth_pages(spark, 150, seed=9)  # superset: same first 100
+        # the delta: 50 new pages and a meta-refresh page whose target is
+        # a base-corpus feed, so its parse repeats edges the parent holds
+        refresh = spark.createDataFrame(
+            [(
+                "https://refresh.example/",
+                None,
+                b'<html><head><meta http-equiv="refresh" content="0; url=%s"></head></html>'
+                % synth_page(9, 0)["url"].encode(),
+                None,
+                "en",
+            )],
+            PAGES_SCHEMA,
+        )
+        grown = synth_pages(spark, 150, seed=9).unionByName(refresh)  # same first 100
         r1 = run_snapshot(spark, base, str(tmp_path), snapshot_id=1, n_parts=8)
         r2 = run_snapshot(
             spark, grown, str(tmp_path), snapshot_id=2, n_parts=8, incremental_from=1
         )
-        assert r2["pages"] == 50  # only the delta parsed
-        # snapshot 2 is the full logical graph: its triples cover both runs
-        full = run_snapshot(
-            spark, grown, str(tmp_path / "full"), snapshot_id=2, n_parts=8
-        )
-        t_inc = read_snapshot(spark, tmp_path, "triples", snapshot_id=2)
-        t_full = read_snapshot(spark, tmp_path / "full", "triples", snapshot_id=2)
-        inc_set = {(r.subj, r.pred, r.obj, r.src_url) for r in t_inc.collect()}
-        full_set = {(r.subj, r.pred, r.obj, r.src_url) for r in t_full.collect()}
-        assert inc_set == full_set
+        assert r2["pages"] == 51  # only the delta parsed
+        # snapshot 2 is the full logical graph: the same rows as a full build
+        run_snapshot(spark, grown, str(tmp_path / "full"), snapshot_id=2, n_parts=8)
+
+        def rows(root, table, cols):
+            return Counter(
+                map(tuple, read_snapshot(spark, root, table, snapshot_id=2).select(*cols).collect())
+            )
+
+        for table, cols in (
+            ("triples", ["subj", "pred", "obj", "src_url"]),
+            ("nodes", ["node_id", "kind", "canonical_id", "label"]),
+            ("edges", ["src", "dst", "pred", "weight"]),
+        ):
+            assert rows(tmp_path, table, cols) == rows(tmp_path / "full", table, cols), table
+        assert "https://refresh.example/" in {
+            t[3] for t in rows(tmp_path, "triples", ["subj", "pred", "obj", "src_url"])
+        }
         # time travel: snapshot 1 still readable underneath
         assert read_snapshot(spark, tmp_path, "triples", snapshot_id=1).count() == r1["triples"]
 
@@ -221,7 +257,9 @@ class TestPipeline:
     def test_degenerate_corpora_commit_and_n_parts_agree(self, spark, tmp_path):
         """An empty corpus, an all-error corpus and a one-page corpus all
         commit, with report and lineage page counts equal to the input;
-        the committed triple set does not depend on n_parts."""
+        the committed triples, nodes (labels included) and edges do not
+        depend on n_parts, and the edges are a set."""
+        from collections import Counter
 
         def commit(pages, name, n_parts=8):
             root = str(tmp_path / name)
@@ -268,7 +306,7 @@ class TestPipeline:
             ],
             PAGES_SCHEMA,
         )
-        sets = []
+        sets, graphs = [], []
         for n_parts in (1, 7, 64):
             report, lineage_pages, triples = commit(
                 pages.unionByName(redirects), f"parts{n_parts}", n_parts
@@ -276,8 +314,16 @@ class TestPipeline:
             assert report["pages"] == lineage_pages == 43
             assert report["errors"].get("meta_refresh") == 1
             sets.append(triples)
+            root = str(tmp_path / f"parts{n_parts}")
+            graphs.append(tuple(
+                Counter(map(tuple, read_snapshot(spark, root, t).collect())) for t in ("nodes", "edges")
+            ))
         assert sets[0] and sets[0] == sets[1] == sets[2]
         assert {"https://r1.example/", "https://r2.example/"} <= {t[3] for t in sets[0]}
+        nodes, edges = graphs[0]
+        assert nodes and edges and graphs[0] == graphs[1] == graphs[2]
+        # r1 and r2 share the feed's parse: its structural edges once each
+        assert max(edges.values()) == 1
 
     def test_deterministic_triples_across_runs(self, spark, tmp_path):
         pages = synth_pages(spark, 80, seed=5)
@@ -286,6 +332,26 @@ class TestPipeline:
         ta = read_snapshot(spark, tmp_path / "a", "triples")
         tb = read_snapshot(spark, tmp_path / "b", "triples")
         assert ta.exceptAll(tb).isEmpty() and tb.exceptAll(ta).isEmpty()
+
+
+def test_commit_and_serving_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """run_snapshot's commit pool and analyze_snapshot's report pool run
+    their jobs under the caller's job group, not in none."""
+    from ffp_spark.graph import analyze_snapshot
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    pages = synth_pages(spark, 40, seed=3)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("snapshot-under-group", "run and serve one snapshot")
+    try:
+        run_snapshot(spark, pages, str(tmp_path), snapshot_id=1, n_parts=4)
+        analyze_snapshot(spark, tmp_path, pr_iters=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup("snapshot-under-group")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
 
 
 def test_build_session_survives_failed_worker_warmup(spark, monkeypatch, caplog):
