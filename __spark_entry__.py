@@ -7071,8 +7071,9 @@ def _q_kg_incremental_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K9 incremental-maintenance value oracle: snapshot 1 commits the
     even doc-feed pages; snapshot 2 ingests the FULL corpus with
     incremental_from=1 — the seen-url anti-join means only the odd
-    delta is parsed, and the parent's committed graph is merged forward
-    (append-only logical snapshot over a physical delta).  The
+    delta is parsed, and the parent's committed triples are kept and
+    re-linked with it (append-only logical snapshot over a physical
+    delta).  The
     committed snapshot-2 node table must equal a full recompute: its
     per-kind counts are pure corpus arithmetic DuckDB replays (items
     per doc, feeds per source, 5 canonical authors)."""

@@ -17,10 +17,10 @@ Scale design notes (100 TB / 1000 executors):
   and linked on the driver (same signatures, band buckets and
   lexicographic-min components as the DataFrame linking operators);
 * only author mentions are linked — site entities are keyed by
-  feed.id/feed.link; the link input, edges, author nodes and lineage's
-  n_triples all derive from the one ``emit_triples`` frame, and every
-  run (fresh, incremental, resumed) commits a set of edges and one
-  least-labelled row per node;
+  feed.id/feed.link; the link input, edges and author nodes derive from
+  the snapshot's whole triple set (this run's plus the committed ones it
+  keeps, restamped), so every run (fresh, incremental, resumed) commits
+  the same graph: a set of edges and one least-labelled row per node;
 * meta-refresh resolution is one job when no page redirects; otherwise
   it parses only the target pages and walks the chains on the driver;
 * per-stage caching is limited to the raw parse, the redirect targets'
@@ -125,11 +125,9 @@ def pages_from_warc(
     return pages
 
 
-def add_part_id(pages: DataFrame, n_parts: int = DEFAULT_PARTS) -> DataFrame:
-    """Deterministic url-hash partition id (K11)."""
-    return pages.withColumn(
-        "part_id", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
-    )
+def add_part_id(pages: DataFrame, n_parts: int = DEFAULT_PARTS, url: str = "url") -> DataFrame:
+    """Deterministic url-hash partition id (K11) of the ``url`` column."""
+    return pages.withColumn("part_id", F.pmod(F.xxhash64(url), F.lit(n_parts)).cast("int"))
 
 
 def warm_collation(spark: SparkSession) -> None:
@@ -298,12 +296,21 @@ def resolve_meta_refresh(
     return parsed.join(end_of, ended, "left_anti").unionByName(moved.select(*parsed.columns))
 
 
-def link_and_canonicalize(parsed: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
+def _snapshot_triples(parsed: DataFrame, kept: Optional[DataFrame] = None) -> DataFrame:
+    """This run's ``emit_triples`` (subj, pred, obj, src_url), plus the
+    committed triples the snapshot keeps (none on a fresh run)."""
+    triples = emit_triples(parsed)
+    return triples if kept is None else triples.unionByName(kept.select(*triples.columns))
+
+
+def link_and_canonicalize(
+    parsed: DataFrame, min_jaccard: float = 0.5, kept_triples: Optional[DataFrame] = None
+) -> DataFrame:
     """Author triples -> (norm, canonical norm) mapping via LSH + CC.
 
     Clustering runs over the distinct non-empty normalized objects of
-    the ``author`` triples; canonical id = lexicographic min surface in
-    the component.
+    the ``author`` triples, this run's and ``kept_triples``; canonical
+    id = lexicographic min surface in the component.
 
     One job collects the distinct surfaces; the driver links them
     (:func:`linking.local_star_edges`, :func:`cc.components_local`) with
@@ -312,7 +319,9 @@ def link_and_canonicalize(parsed: DataFrame, min_jaccard: float = 0.5) -> DataFr
     ``connected_components``, so the mapping is the same (differential
     tests).  Per-job overhead, not data, bounds this step: on local[4]
     (4-core box) the driver linked 1M distinct surfaces in 60 s with
-    2.3 GiB of driver memory; the DataFrame operators took 262 s.
+    2.3 GiB of driver memory; the DataFrame operators took 262 s.  An
+    incremental run pays that for every surface of the snapshot, the
+    parent's included, not only the delta's.
 
     Returns the mapping (one row per distinct surface) as a driver-local
     relation: callers join it repeatedly without replaying the linking,
@@ -321,7 +330,7 @@ def link_and_canonicalize(parsed: DataFrame, min_jaccard: float = 0.5) -> DataFr
     warm_collation(spark)  # before the wide lower() stage
     norms = [
         r.norm
-        for r in emit_triples(parsed)
+        for r in _snapshot_triples(parsed, kept_triples)
         .where(F.col("pred") == PRED_AUTHOR)
         .select(author_norm(F.col("obj")).alias("norm"))
         .where(F.col("norm") != "")
@@ -339,34 +348,27 @@ def link_and_canonicalize(parsed: DataFrame, min_jaccard: float = 0.5) -> DataFr
     )
 
 
-def _node_set(nodes: DataFrame) -> DataFrame:
-    """One row per (node_id, kind), labelled with the least candidate
-    label: a rule that no partitioning, run order or merge can change."""
-    return nodes.groupBy("node_id", "kind").agg(F.min("label").alias("label")).select(
-        "node_id", "kind", F.col("node_id").alias("canonical_id"), "label"
-    )
-
-
-def _edge_set(edges: DataFrame) -> DataFrame:
-    """The distinct (src, dst, pred, weight) rows."""
-    return edges.select("src", "dst", "pred", "weight").distinct()
-
-
 def materialize_graph(
-    parsed: DataFrame, canon: DataFrame, snapshot_id: int, n_parts: int
+    parsed: DataFrame,
+    canon: DataFrame,
+    snapshot_id: int,
+    n_parts: int,
+    kept_triples: Optional[DataFrame] = None,
+    kept_nodes: Optional[DataFrame] = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(triples, nodes, edges) with canonicalized author entities.
 
-    Edges and author nodes derive from the ``emit_triples`` frame: an
-    ``author`` triple points at its canonical author node, every other
-    triple is a structural edge.  Entry and feed nodes take their titles
-    from ``parsed`` (titles are not in the triples).  Edges are a set and
-    a node's label is the least candidate, so neither n_parts nor a
-    page parsed twice (a redirect and its target) changes the graph."""
-    triples = (
-        emit_triples(parsed)
-        .withColumn("snapshot_id", F.lit(snapshot_id))
-        .withColumn("part_id", F.pmod(F.xxhash64("src_url"), F.lit(n_parts)).cast("int"))
+    The triples, this run's and ``kept_triples``, all get ``snapshot_id``
+    and the ``part_id`` of their ``src_url``.  Edges and author nodes
+    derive from them: an ``author`` triple points at its canonical author
+    node, every other triple is a structural edge.  Entry and feed nodes
+    take their titles from ``parsed`` and ``kept_nodes`` (titles are not
+    in the triples).  Edges are a set and a node's label is the least
+    candidate, so neither n_parts, a page parsed twice (a redirect and
+    its target) nor the kind of run changes the graph."""
+    triples = add_part_id(
+        _snapshot_triples(parsed, kept_triples).withColumn("snapshot_id", F.lit(snapshot_id)),
+        n_parts, "src_url",
     )
 
     # canonical dictionary join (K5): the canon mapping is the small side.
@@ -387,37 +389,28 @@ def materialize_graph(
             F.col("obj").alias("surface"),
         )
     )
-    edges = _edge_set(linked.withColumn("weight", F.lit(1.0)))
+    edges = linked.select("src", "dst", "pred", F.lit(1.0).alias("weight")).distinct()
 
     ok = parsed.where(F.col("error").isNull())
-    nodes = _node_set(reduce(DataFrame.unionByName, (
+    candidates = reduce(DataFrame.unionByName, (
         df.select(node_id.alias("node_id"), F.lit(kind).alias("kind"), label.alias("label"))
         for df, kind, node_id, label in (
             (linked.where(is_author), "author", F.col("dst"), F.col("surface")),
             (ok.select(F.explode("entries").alias("e")), "item", F.col("e.id"), F.col("e.title")),
             (ok, "feed", F.coalesce("feed.id", "feed.link"), F.col("feed.title")),
         )
-    )).where(F.col("node_id").isNotNull()))
+    )).where(F.col("node_id").isNotNull())
+    if kept_nodes is not None:
+        candidates = candidates.unionByName(kept_nodes.select(*candidates.columns))
+    nodes = candidates.groupBy("node_id", "kind").agg(F.min("label").alias("label")).select(
+        "node_id", "kind", F.col("node_id").alias("canonical_id"), "label"
+    )
     return triples, nodes, edges
 
 
 def _utc_now() -> datetime:
     """Naive UTC wall clock, matching the session time zone convention."""
     return datetime.now(timezone.utc).replace(tzinfo=None)
-
-
-def _carry_forward(
-    run: tuple[DataFrame, DataFrame, DataFrame],
-    committed: tuple[DataFrame, DataFrame, DataFrame],
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Union a committed snapshot's (triples, nodes, edges) into this
-    run's; nodes and edges through the node and edge rules of a fresh run."""
-    (triples, nodes, edges), (old_triples, old_nodes, old_edges) = run, committed
-    return (
-        triples.unionByName(old_triples.select(*triples.columns)),
-        _node_set(nodes.unionByName(old_nodes.select(*nodes.columns))),
-        _edge_set(edges.unionByName(old_edges.select(*edges.columns))),
-    )
 
 
 def run_snapshot(
@@ -436,8 +429,9 @@ def run_snapshot(
     marked done are anti-joined away before any work happens.
     Incremental: with ``incremental_from=<parent snapshot id>``, urls the
     parent already saw are anti-joined away and the parent's triples are
-    merged into this snapshot's committed tables (append-only logical
-    snapshot over a physical delta, Iceberg-style).
+    kept.  Kept triples are re-linked and re-materialized with this run's,
+    so the committed tables equal a full build's; lineage records only
+    the parts this run parsed.
     Pass ``stage_timings={}`` to collect per-stage wall seconds:
     ``parse_sec`` (the raw parse and the redirect resolution, which
     parses the redirect targets), ``link_cc_sec`` (checkpointing the
@@ -457,13 +451,46 @@ def run_snapshot(
 
     prior_lineage: Optional[DataFrame] = None
     prior_seen: Optional[DataFrame] = None
+    done: list[int] = []  # parts whose committed triples this run keeps
     if resume and snapshots_of(out_root, "lineage"):
         all_lineage = read_snapshot(spark, out_root, "lineage")
         prior_lineage = all_lineage.filter(F.col("snapshot_id") == snapshot_id)
+        if snapshot_id in snapshots_of(out_root, "triples"):
+            done = [r.part_id for r in prior_lineage.filter(F.col("status") == "done")
+                    .select("part_id").distinct().collect()]
     if incremental_from is not None:
         # K9 incremental: only urls never seen by the parent snapshot
         prior_seen = read_snapshot(spark, out_root, "pages_seen", incremental_from)
         pages = pages.join(prior_seen.select("url"), "url", "left_anti")
+
+    # the committed rows this snapshot keeps: the parent's triples but for
+    # the done parts, the done parts' own triples, and those snapshots'
+    # item and feed nodes.  Ownership is by PARTITION at this run's
+    # n_parts: a done part's triples already hold the parent's, and this
+    # run re-parses every other part — all of them if a prior run crashed
+    # before its lineage commit.  Edges and author nodes are never read back.
+    is_done = F.col("part_id").isin(done)
+    sources = []  # (snapshot id, which of its triples are kept)
+    if incremental_from in snapshots_of(out_root, "triples"):
+        sources.append((incremental_from, ~is_done))
+    if done:
+        sources.append((snapshot_id, is_done))
+    kept = []
+    for sid, keep in sources:
+        triples_of = add_part_id(
+            read_snapshot(spark, out_root, "triples", sid).drop("part_id"), n_parts, "src_url"
+        ).where(keep)
+        if sid == snapshot_id:
+            # the triples commit replaces this directory while the node
+            # and edge commits still read these rows
+            triples_of = triples_of.localCheckpoint(eager=True)
+        kept.append((
+            triples_of,
+            read_snapshot(spark, out_root, "nodes", sid).where(F.col("kind").isin("item", "feed")),
+        ))
+    kept_triples, kept_nodes = (
+        (reduce(DataFrame.unionByName, dfs) for dfs in zip(*kept)) if kept else (None, None)
+    )
     # explicit url-hash partitioning before the Python stage (K11)
     todo = remaining_pages(pages, prior_lineage).repartition(n_parts, "part_id")
 
@@ -486,22 +513,26 @@ def run_snapshot(
         # emits one row per input page, errors included.
         obs = Observation()
         parsed = (
-            resolved.withColumn("part_id", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int"))
+            add_part_id(resolved, n_parts)
             .observe(obs, F.count(F.lit(1)).alias("pages"))
             .localCheckpoint(eager=True)
         )
         n_pages = int(obs.get["pages"])
         # link_and_canonicalize links eagerly and returns a driver-local
         # mapping (the broadcast dimension of the author join)
-        canon = link_and_canonicalize(parsed)
-        triples, nodes, edges = materialize_graph(parsed, canon, snapshot_id, n_parts)
+        canon = link_and_canonicalize(parsed, kept_triples=kept_triples)
+        triples, nodes, edges = materialize_graph(
+            parsed, canon, snapshot_id, n_parts, kept_triples, kept_nodes
+        )
         if stage_timings is not None:
             stage_timings["link_cc_sec"] = round(time.perf_counter() - t0, 3)
 
+        # lineage records the parts this run parsed, with their own triples
         lineage_new = (
             partition_lineage(parsed, snapshot_id)
             .join(
-                triples.groupBy("part_id").agg(F.count("*").alias("n_triples")),
+                add_part_id(emit_triples(parsed), n_parts, "src_url")
+                .groupBy("part_id").agg(F.count("*").alias("n_triples")),
                 "part_id",
                 "left",
             )
@@ -512,42 +543,6 @@ def run_snapshot(
             )
         )
 
-        # resume merge: a re-commit of the same snapshot keeps work already
-        # done by the interrupted run.  Ownership is by PARTITION: committed
-        # triples are kept only for parts the committed lineage marks done;
-        # this run re-parsed every other part.  The two sets are disjoint,
-        # so the union cannot double-count — even if a prior run crashed
-        # after committing triples but before lineage (then no parts are
-        # "done" and this run's full re-parse wins).
-        done_parts: Optional[DataFrame] = None
-        if prior_lineage is not None and snapshot_id in snapshots_of(out_root, "triples"):
-            done_parts = (
-                prior_lineage.filter(F.col("status") == "done").select("part_id").distinct()
-            )
-        # incremental merge: the parent snapshot's committed graph is
-        # carried forward; this run only parsed the delta.  A done part's
-        # committed triples already hold the parent's triples of that
-        # part, so the parent contributes only to the other parts.
-        if incremental_from is not None and incremental_from in snapshots_of(out_root, "triples"):
-            old_triples, old_nodes, old_edges = (
-                read_snapshot(spark, out_root, t, incremental_from)
-                for t in ("triples", "nodes", "edges")
-            )
-            if done_parts is not None:
-                old_triples = old_triples.join(done_parts, "part_id", "left_anti")
-            triples, nodes, edges = _carry_forward(
-                (triples, nodes, edges), (old_triples, old_nodes, old_edges)
-            )
-        if done_parts is not None:
-            old_triples, old_nodes, old_edges = (
-                read_snapshot(spark, out_root, t, snapshot_id)
-                for t in ("triples", "nodes", "edges")
-            )
-            triples, nodes, edges = _carry_forward(
-                (triples, nodes, edges),
-                (old_triples.join(done_parts, "part_id", "left_semi"), old_nodes, old_edges),
-            )
-
         # fresh runs read the seen-url set off the MATERIALIZED parsed
         # table (row-identical to the source: one row per input page, same
         # url-hash part_id) — re-scanning a generated/WARC source would
@@ -555,7 +550,8 @@ def run_snapshot(
         # parsed covers only the re-done parts.
         seen = (parsed if prior_lineage is None else pages).select("url", "part_id")
         if prior_seen is not None:
-            seen = seen.unionByName(prior_seen.select("url", "part_id")).dropDuplicates(["url"])
+            prior_urls = add_part_id(prior_seen.select("url"), n_parts)
+            seen = seen.unionByName(prior_urls).dropDuplicates(["url"])
 
         def _errors() -> dict[str, int]:
             t0 = time.perf_counter()
@@ -566,7 +562,7 @@ def run_snapshot(
 
         # commit protocol: data tables first, lineage LAST — the lineage
         # commit marks this snapshot's work complete, so a crash anywhere
-        # earlier re-derives everything idempotently (resume merge above).
+        # earlier re-derives everything idempotently (the kept rows above).
         # The data tables and the error histogram run CONCURRENTLY
         # (independent dirs and jobs): overlapping them hides per-job
         # latency.  nodes/edges commit through the catalog-bucketed writer

@@ -190,53 +190,68 @@ class TestPipeline:
         assert t.count() == ref["triples"]
 
     def test_incremental_snapshot_processes_only_new_urls(self, spark, tmp_path):
+        """An incremental snapshot 2 commits the rows of a full build of the
+        same pages, snapshot_id and part_id included, even when its delta
+        links to authors only the parent holds and it runs at another
+        n_parts than its parent."""
         from collections import Counter
 
-        from ffp_spark.snapshots import read_manifest
+        def page(url, html):
+            return (url, None, html, None, "en")
 
-        base = synth_pages(spark, 100, seed=9)
-        # the delta: 50 new pages and a meta-refresh page whose target is
-        # a base-corpus feed, so its parse repeats edges the parent holds
-        refresh = spark.createDataFrame(
-            [(
-                "https://refresh.example/",
-                None,
-                b'<html><head><meta http-equiv="refresh" content="0; url=%s"></head></html>'
-                % synth_page(9, 0)["url"].encode(),
-                None,
-                "en",
-            )],
-            PAGES_SCHEMA,
+        def feed(url, author):
+            return page(url, (
+                '<?xml version="1.0"?><rss version="2.0" '
+                'xmlns:dc="http://purl.org/dc/elements/1.1/"><channel>'
+                f"<title>{author}</title><link>{url}</link><item><title>{author} post</title>"
+                f"<guid>{url}#1</guid><dc:creator>{author}</dc:creator></item>"
+                "</channel></rss>"
+            ).encode())
+
+        # the parent's only author of its cluster, and a delta variant of it
+        solo = feed("https://solo.example/feed.xml", "Zebulon Quartermaine")
+        variant = feed("https://variant.example/feed.xml", "Zebulon Quartermaine Jr")
+        # and a meta-refresh page whose target is a base-corpus feed, so
+        # its parse repeats edges the parent holds
+        refresh = page(
+            "https://refresh.example/",
+            b'<html><head><meta http-equiv="refresh" content="0; url=%s"></head></html>'
+            % synth_page(9, 0)["url"].encode(),
         )
-        grown = synth_pages(spark, 150, seed=9).unionByName(refresh)  # same first 100
+        base = synth_pages(spark, 100, seed=9).unionByName(
+            spark.createDataFrame([solo], PAGES_SCHEMA)
+        )
+        grown = synth_pages(spark, 150, seed=9).unionByName(  # same first 100
+            spark.createDataFrame([solo, variant, refresh], PAGES_SCHEMA)
+        )
         r1 = run_snapshot(spark, base, str(tmp_path), snapshot_id=1, n_parts=8)
         r2 = run_snapshot(
-            spark, grown, str(tmp_path), snapshot_id=2, n_parts=8, incremental_from=1
+            spark, grown, str(tmp_path), snapshot_id=2, n_parts=5, incremental_from=1
         )
-        assert r2["pages"] == 51  # only the delta parsed
+        assert r2["pages"] == 52  # only the delta parsed
         # snapshot 2 is the full logical graph: the same rows as a full build
-        run_snapshot(spark, grown, str(tmp_path / "full"), snapshot_id=2, n_parts=8)
+        run_snapshot(spark, grown, str(tmp_path / "full"), snapshot_id=2, n_parts=5)
 
-        def rows(root, table, cols):
-            return Counter(
-                map(tuple, read_snapshot(spark, root, table, snapshot_id=2).select(*cols).collect())
-            )
+        def rows(root, table):
+            return Counter(map(tuple, read_snapshot(spark, root, table, snapshot_id=2).collect()))
 
-        for table, cols in (
-            ("triples", ["subj", "pred", "obj", "src_url"]),
-            ("nodes", ["node_id", "kind", "canonical_id", "label"]),
-            ("edges", ["src", "dst", "pred", "weight"]),
-        ):
-            assert rows(tmp_path, table, cols) == rows(tmp_path / "full", table, cols), table
-        assert "https://refresh.example/" in {
-            t[3] for t in rows(tmp_path, "triples", ["subj", "pred", "obj", "src_url"])
-        }
+        for table in ("triples", "nodes", "edges", "pages_seen"):
+            assert rows(tmp_path, table) == rows(tmp_path / "full", table), table
+        triples = read_snapshot(spark, tmp_path, "triples", snapshot_id=2)
+        assert triples.columns == ["subj", "pred", "obj", "src_url", "snapshot_id", "part_id"]
+        assert "https://refresh.example/" in {r.src_url for r in triples.collect()}
+        # the delta's variant joins the parent's author, as in a full build
+        authors = {r.dst for r in read_snapshot(spark, tmp_path, "edges", snapshot_id=2)
+                   .where("dst like 'author:zebulon%'").collect()}
+        assert authors == {"author:zebulon quartermaine"}
         # time travel: snapshot 1 still readable underneath
         assert read_snapshot(spark, tmp_path, "triples", snapshot_id=1).count() == r1["triples"]
 
     def test_resumed_incremental_snapshot_recommits_the_same_rows(self, spark, tmp_path):
         # a resumed re-run keeps the done parts' committed triples, which
-        # already hold the parent's: the parent must not be carried again
+        # already hold the parent's: the parent must not be carried again.
+        # The child runs at another n_parts than its parent: its done parts
+        # are this run's part ids, which the kept triples are keyed by.
         from collections import Counter
 
         def committed():
@@ -247,9 +262,9 @@ class TestPipeline:
 
         run_snapshot(spark, synth_pages(spark, 60, seed=9), str(tmp_path), snapshot_id=1, n_parts=8)
         grown = synth_pages(spark, 100, seed=9)
-        first = run_snapshot(spark, grown, str(tmp_path), snapshot_id=2, n_parts=8, incremental_from=1)
+        first = run_snapshot(spark, grown, str(tmp_path), snapshot_id=2, n_parts=5, incremental_from=1)
         before = committed()
-        again = run_snapshot(spark, grown, str(tmp_path), snapshot_id=2, n_parts=8, incremental_from=1)
+        again = run_snapshot(spark, grown, str(tmp_path), snapshot_id=2, n_parts=5, incremental_from=1)
         assert again["pages"] == 0
         assert again["triples"] == first["triples"]
         assert committed() == before
