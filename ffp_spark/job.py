@@ -10,6 +10,11 @@
 
 On a real cluster the same invocation takes --master yarn/k8s and the
 same --py-files zip; everything else is identical (north rule K12).
+
+A committed snapshot is final: re-running its --snapshot-id prints the
+report from its manifests and runs no Spark job (--no-resume recomputes
+and overwrites it).  Late pages go to a new snapshot id with
+--incremental-from <id>.
 """
 
 from __future__ import annotations
@@ -26,7 +31,8 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--snapshot-id", type=int, required=True)
     p.add_argument("--n-parts", type=int, default=64)
     p.add_argument("--incremental-from", type=int, default=None)
-    p.add_argument("--no-resume", action="store_true")
+    p.add_argument("--no-resume", action="store_true",
+                   help="recompute and overwrite a committed snapshot")
     args = p.parse_args(argv)
 
     from ffp_spark.pipeline import build_session, run_snapshot

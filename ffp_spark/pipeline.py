@@ -8,7 +8,8 @@
 Scale design notes (100 TB / 1000 executors):
 * partitioning is an explicit, *deterministic* function of url
   (pmod(xxhash64(url), n_parts)) — the same page always lands in the
-  same part_id, which is what makes lineage-based resume (K9) sound;
+  same part_id, so the per-partition lineage rows are a function of the
+  input pages;
 * the parse stage is the only Python hop on the workers; everything
   after is JVM DataFrame ops (AQE handles skew-join splitting where a
   shuffle has a hot key; the canonical author dictionary is a plain
@@ -19,8 +20,8 @@ Scale design notes (100 TB / 1000 executors):
 * only author mentions are linked — site entities are keyed by
   feed.id/feed.link; the link input, edges and author nodes derive from
   the snapshot's whole triple set (this run's plus the committed ones it
-  keeps, restamped), so every run (fresh, incremental, resumed) commits
-  the same graph: a set of edges and one least-labelled row per node;
+  keeps, restamped), so a fresh and an incremental run commit the same
+  graph: a set of edges and one least-labelled row per node;
 * meta-refresh resolution is one job when no page redirects; otherwise
   it parses only the target pages and walks the chains on the driver;
 * per-stage caching is limited to the raw parse, the redirect targets'
@@ -29,9 +30,11 @@ Scale design notes (100 TB / 1000 executors):
   rides that checkpoint;
 * ``run_snapshot`` is one straight-line function: the data tables
   commit concurrently, under the caller's job group, lineage last (the
-  completion marker).  Nodes and
-  edges go through the catalog-bucketed writer, whose bucket id lives
-  in the file names and the catalog spec, not in a data column.
+  completion marker).  A committed snapshot is final: a resumed re-run
+  returns its manifests, and late pages go to a new snapshot with
+  ``incremental_from`` (K9).  Nodes and edges go through the
+  catalog-bucketed writer, whose bucket id lives in the file names and
+  the catalog spec, not in a data column.
 """
 
 from __future__ import annotations
@@ -52,8 +55,8 @@ from .linking import author_norm, local_star_edges
 from .metrics import error_histogram, partition_lineage
 from .schemas import PRED_AUTHOR
 from .snapshots import (
+    read_manifest,
     read_snapshot,
-    remaining_pages,
     snapshots_of,
     write_snapshot,
     write_snapshot_bucketed,
@@ -425,8 +428,14 @@ def run_snapshot(
 ) -> dict[str, Any]:
     """Process one snapshot of the PAGES table into committed KG tables.
 
-    Resumable: if a lineage table exists for this snapshot_id, partitions
-    marked done are anti-joined away before any work happens.
+    A committed snapshot is final.  It is committed once its lineage
+    manifest exists, and with ``resume=True`` a re-run returns its report
+    from the manifests (``pages`` 0, ``errors`` empty, the committed row
+    counts) and runs no Spark job; ``resume=False`` recomputes and
+    overwrites it.  Late pages go to a new snapshot with
+    ``incremental_from=<id>``.  A crash before the lineage commit leaves
+    no manifest, so the re-run re-derives everything; there are no
+    per-part commits to resume from within a run.
     Incremental: with ``incremental_from=<parent snapshot id>``, urls the
     parent already saw are anti-joined away and the parent's triples are
     kept.  Kept triples are re-linked and re-materialized with this run's,
@@ -438,6 +447,12 @@ def run_snapshot(
     resolved parse, linking and CC), ``agg_sec`` (the error histogram
     only, which overlaps the data commits) and ``write_sec`` (the
     commits, lineage last)."""
+    if resume and snapshot_id in snapshots_of(out_root, "lineage"):
+        rows = {t: read_manifest(out_root, t, snapshot_id)["row_count"]
+                for t in ("triples", "nodes", "edges", "lineage")}
+        return {"snapshot_id": snapshot_id, "pages": 0, "triples": rows["triples"],
+                "nodes": rows["nodes"], "edges": rows["edges"],
+                "lineage_rows": rows["lineage"], "errors": {}}
     # lineage rows carry the run's wall-clock bracket (SURVEY §1.2
     # schema): started_ts = run entry, finished_ts = after the data
     # commits.  Commit metadata is the one place wall clock is allowed
@@ -449,50 +464,20 @@ def run_snapshot(
     # already saw must still resolve (incremental and full runs agree)
     pages_full = pages
 
-    prior_lineage: Optional[DataFrame] = None
-    prior_seen: Optional[DataFrame] = None
-    done: list[int] = []  # parts whose committed triples this run keeps
-    if resume and snapshots_of(out_root, "lineage"):
-        all_lineage = read_snapshot(spark, out_root, "lineage")
-        prior_lineage = all_lineage.filter(F.col("snapshot_id") == snapshot_id)
-        if snapshot_id in snapshots_of(out_root, "triples"):
-            done = [r.part_id for r in prior_lineage.filter(F.col("status") == "done")
-                    .select("part_id").distinct().collect()]
+    kept_triples = kept_nodes = prior_seen = None
     if incremental_from is not None:
-        # K9 incremental: only urls never seen by the parent snapshot
+        # K9 incremental: only urls never seen by the parent snapshot are
+        # parsed; the parent's triples and its item and feed nodes (their
+        # titles are not in the triples) are kept.  Edges and author nodes
+        # are never read back: they derive from the whole triple set.
         prior_seen = read_snapshot(spark, out_root, "pages_seen", incremental_from)
         pages = pages.join(prior_seen.select("url"), "url", "left_anti")
-
-    # the committed rows this snapshot keeps: the parent's triples but for
-    # the done parts, the done parts' own triples, and those snapshots'
-    # item and feed nodes.  Ownership is by PARTITION at this run's
-    # n_parts: a done part's triples already hold the parent's, and this
-    # run re-parses every other part — all of them if a prior run crashed
-    # before its lineage commit.  Edges and author nodes are never read back.
-    is_done = F.col("part_id").isin(done)
-    sources = []  # (snapshot id, which of its triples are kept)
-    if incremental_from in snapshots_of(out_root, "triples"):
-        sources.append((incremental_from, ~is_done))
-    if done:
-        sources.append((snapshot_id, is_done))
-    kept = []
-    for sid, keep in sources:
-        triples_of = add_part_id(
-            read_snapshot(spark, out_root, "triples", sid).drop("part_id"), n_parts, "src_url"
-        ).where(keep)
-        if sid == snapshot_id:
-            # the triples commit replaces this directory while the node
-            # and edge commits still read these rows
-            triples_of = triples_of.localCheckpoint(eager=True)
-        kept.append((
-            triples_of,
-            read_snapshot(spark, out_root, "nodes", sid).where(F.col("kind").isin("item", "feed")),
-        ))
-    kept_triples, kept_nodes = (
-        (reduce(DataFrame.unionByName, dfs) for dfs in zip(*kept)) if kept else (None, None)
-    )
+        kept_triples = read_snapshot(spark, out_root, "triples", incremental_from)
+        kept_nodes = read_snapshot(spark, out_root, "nodes", incremental_from).where(
+            F.col("kind").isin("item", "feed")
+        )
     # explicit url-hash partitioning before the Python stage (K11)
-    todo = remaining_pages(pages, prior_lineage).repartition(n_parts, "part_id")
+    todo = pages.repartition(n_parts, "part_id")
 
     # cache the RAW parse (the expensive Python stage) — the redirect
     # resolution re-reads this cache, never re-runs the parse
@@ -528,7 +513,7 @@ def run_snapshot(
             stage_timings["link_cc_sec"] = round(time.perf_counter() - t0, 3)
 
         # lineage records the parts this run parsed, with their own triples
-        lineage_new = (
+        lineage = (
             partition_lineage(parsed, snapshot_id)
             .join(
                 add_part_id(emit_triples(parsed), n_parts, "src_url")
@@ -543,12 +528,11 @@ def run_snapshot(
             )
         )
 
-        # fresh runs read the seen-url set off the MATERIALIZED parsed
-        # table (row-identical to the source: one row per input page, same
+        # the seen-url set comes off the MATERIALIZED parsed table
+        # (row-identical to the source: one row per input page, same
         # url-hash part_id) — re-scanning a generated/WARC source would
-        # re-run its Python ingest.  Resumed runs keep the source scan:
-        # parsed covers only the re-done parts.
-        seen = (parsed if prior_lineage is None else pages).select("url", "part_id")
+        # re-run its Python ingest
+        seen = parsed.select("url", "part_id")
         if prior_seen is not None:
             prior_urls = add_part_id(prior_seen.select("url"), n_parts)
             seen = seen.unionByName(prior_urls).dropDuplicates(["url"])
@@ -561,8 +545,8 @@ def run_snapshot(
             return errors
 
         # commit protocol: data tables first, lineage LAST — the lineage
-        # commit marks this snapshot's work complete, so a crash anywhere
-        # earlier re-derives everything idempotently (the kept rows above).
+        # commit marks this snapshot final, so a crash anywhere earlier
+        # re-derives everything on the next run.
         # The data tables and the error histogram run CONCURRENTLY
         # (independent dirs and jobs): overlapping them hides per-job
         # latency.  nodes/edges commit through the catalog-bucketed writer
@@ -594,17 +578,10 @@ def run_snapshot(
             m_edges = f_edges.result()
             f_seen.result()
             errors = f_errors.result()
-        lineage = lineage_new.withColumn("started_ts", F.lit(started_ts)).withColumn(
-            "finished_ts", F.lit(_utc_now())
-        )
-        if prior_lineage is not None:
-            prior = prior_lineage
-            for c in ("started_ts", "finished_ts"):  # pre-schema tables
-                if c not in prior.columns:
-                    prior = prior.withColumn(c, F.lit(None).cast("timestamp"))
-            lineage = lineage.unionByName(prior.select(*lineage.columns))
         m_lineage = write_snapshot(
-            lineage, out_root, "lineage", snapshot_id,
+            lineage.withColumn("started_ts", F.lit(started_ts))
+            .withColumn("finished_ts", F.lit(_utc_now())),
+            out_root, "lineage", snapshot_id,
             extra={"n_pages": n_pages, "errors": errors},
         )
         if stage_timings is not None:

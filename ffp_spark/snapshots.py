@@ -13,9 +13,12 @@ Commit protocol: write data under ``_tmp-<id>``, fsync manifest, then
 ``os.replace`` both into place — readers never observe a half-written
 snapshot (same guarantee Iceberg gets from its metadata swap).
 
-Resume (K9): per-partition lineage rows record which explicit url-hash
-partitions finished; `remaining_pages` anti-joins them away so a
-restarted run only processes unfinished partitions.
+Resume (K9): a snapshot is committed once its lineage manifest exists
+(the pipeline commits lineage last), and a committed snapshot is final:
+``pipeline.run_snapshot`` re-run on it returns its manifests, and late
+pages go to an incremental snapshot (``incremental_from=<id>``).  The
+per-partition lineage rows record what each url-hash part held; they
+are not a per-part resume point.
 """
 
 from __future__ import annotations
@@ -291,7 +294,11 @@ def read_snapshot_bucketed(
 def remaining_pages(
     pages_with_part: DataFrame, lineage: Optional[DataFrame]
 ) -> DataFrame:
-    """Anti-join away partitions whose lineage row says status=done."""
+    """Anti-join away partitions whose lineage row says status=done.
+
+    Its only caller is the traced replay (``perfbench/replay.py``), with no
+    lineage; ``run_snapshot`` never resumes per part.  It goes with the
+    replay (ROADMAP Direction 1)."""
     if lineage is None:
         return pages_with_part
     done = lineage.filter(F.col("status") == "done").select("part_id").distinct()

@@ -18,6 +18,17 @@ from ffp_spark.snapshots import (
 )
 
 
+def _jobs_in_group(spark, group, fn):
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 class TestSnapshots:
     def test_commit_read_roundtrip(self, spark, tmp_path):
         df = spark.range(100).withColumn("k", F.col("id") % 7)
@@ -142,11 +153,19 @@ class TestPipeline:
         assert read_snapshot(spark, tmp_path, "edges").count() == edges.count()
 
     def test_resume_skips_done_partitions_and_converges(self, spark, tmp_path):
+        """A committed snapshot is final: a re-run returns its report and
+        runs no job, a re-run over grown input commits nothing, and the
+        late pages go to an incremental snapshot equal to a full build."""
+        from collections import Counter
+
         pages = synth_pages(spark, 120, seed=3)
         full = run_snapshot(spark, pages, str(tmp_path), snapshot_id=1, n_parts=8)
-        # a second run with the same snapshot_id finds all parts done
-        again = run_snapshot(spark, pages, str(tmp_path), snapshot_id=1, n_parts=8)
-        assert again["pages"] == 0
+        # a second run with the same snapshot_id finds it committed
+        again, jobs = _jobs_in_group(spark, "resume-same-input", lambda: run_snapshot(
+            spark, pages, str(tmp_path), snapshot_id=1, n_parts=8
+        ))
+        assert jobs == 0
+        assert again == {**full, "pages": 0, "errors": {}}
         # lineage still carries the full history
         lineage = read_snapshot(spark, tmp_path, "lineage")
         assert (
@@ -154,19 +173,40 @@ class TestPipeline:
             == full["pages"]
         )
 
+        # a re-run over grown input (same first 120 pages) marks no late
+        # page seen: it was never parsed
+        grown = synth_pages(spark, 180, seed=3)
+        assert run_snapshot(spark, grown, str(tmp_path), snapshot_id=1, n_parts=8) == again
+
+        def urls(root, sid):
+            return {r.url for r in read_snapshot(spark, root, "pages_seen", sid).collect()}
+
+        assert urls(tmp_path, 1) == {r.url for r in pages.select("url").collect()}
+        # the late pages go to an incremental snapshot 2: a full build's rows
+        run_snapshot(spark, grown, str(tmp_path), snapshot_id=2, n_parts=8, incremental_from=1)
+        run_snapshot(spark, grown, str(tmp_path / "full"), snapshot_id=2, n_parts=8)
+
+        def rows(root, table):
+            return Counter(map(tuple, read_snapshot(spark, root, table, snapshot_id=2).collect()))
+
+        for table in ("triples", "nodes", "edges", "pages_seen"):
+            assert rows(tmp_path, table) == rows(tmp_path / "full", table), table
+        assert len(urls(tmp_path, 2)) == 180
+
     def test_resume_after_crash_before_lineage_commit(self, spark, tmp_path, monkeypatch):
-        """A crash between the data commits and the lineage commit must not
-        double triples on re-run (the part-ownership merge: with no 'done'
-        lineage rows, the stale committed triples contribute nothing)."""
+        """A crash between the data commits and the lineage commit leaves
+        the snapshot uncommitted: the re-run re-derives it, without
+        doubling triples, and a root holding another snapshot does not
+        make it a resume (no more jobs than in an empty root)."""
         import ffp_spark.pipeline as P
         from ffp_spark.snapshots import write_snapshot as real_ws
 
-        # snapshot 1 commits fully, so a lineage TABLE exists — the trap
-        # that made the old `prior_lineage is not None` gate fire
+        # snapshot 1 commits fully, so the root holds a lineage TABLE, but
+        # no lineage manifest for snapshot 2
         run_snapshot(spark, synth_pages(spark, 60, seed=3), str(tmp_path), snapshot_id=1, n_parts=8)
-        ref = run_snapshot(
+        ref, ref_jobs = _jobs_in_group(spark, "crash-ref", lambda: run_snapshot(
             spark, synth_pages(spark, 120, seed=4), str(tmp_path / "ref"), snapshot_id=2, n_parts=8
-        )
+        ))
 
         class Boom(RuntimeError):
             pass
@@ -184,8 +224,11 @@ class TestPipeline:
         assert 2 not in snapshots_of(tmp_path, "lineage")
 
         monkeypatch.setattr(P, "write_snapshot", real_ws)
-        rep = run_snapshot(spark, synth_pages(spark, 120, seed=4), str(tmp_path), snapshot_id=2, n_parts=8)
+        rep, rep_jobs = _jobs_in_group(spark, "crash-recovery", lambda: run_snapshot(
+            spark, synth_pages(spark, 120, seed=4), str(tmp_path), snapshot_id=2, n_parts=8
+        ))
         assert rep["triples"] == ref["triples"]  # not doubled
+        assert rep_jobs <= ref_jobs
         t = read_snapshot(spark, tmp_path, "triples", snapshot_id=2)
         assert t.count() == ref["triples"]
 
@@ -248,10 +291,8 @@ class TestPipeline:
         assert read_snapshot(spark, tmp_path, "triples", snapshot_id=1).count() == r1["triples"]
 
     def test_resumed_incremental_snapshot_recommits_the_same_rows(self, spark, tmp_path):
-        # a resumed re-run keeps the done parts' committed triples, which
-        # already hold the parent's: the parent must not be carried again.
-        # The child runs at another n_parts than its parent: its done parts
-        # are this run's part ids, which the kept triples are keyed by.
+        # a re-run of a committed incremental child at another n_parts
+        # than its parent leaves its committed rows as they are
         from collections import Counter
 
         def committed():
