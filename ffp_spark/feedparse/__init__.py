@@ -43,7 +43,7 @@ def parse_feed(
     """Parse feed payload (XML or JSON Feed) into {'feed': ..., 'entries': [...]}.
 
     The four include_* flags are the reference's projection-pruning knobs
-    (main.py:838-845); the Spark layer maps them to column pruning.
+    (main.py:838-845); the Spark parse stage keeps every field.
     ``with_feed_type=True`` adds a ``feed_type`` key carrying the
     structure detector's verdict (rss/atom/rdf/json) — what the Spark
     layer surfaces as a column (byte-sniffing the payload instead can

@@ -71,9 +71,9 @@ def analyze_snapshot(
     top_k: int = 20,
 ) -> dict[str, DataFrame]:
     """Graph analytics over a COMMITTED KG snapshot — the serving-path
-    integration: edges/nodes come through ``read_snapshot_bucketed``
-    (catalog bucket spec, exchange-free on the bucket key), and the
-    top-PageRank report joins node labels back on.
+    integration: edges/nodes come through ``read_snapshot`` (a directory
+    read with the manifest schema), and the top-PageRank report joins
+    node labels back on.
 
     Returns lazy DataFrames: ``degree_histogram`` (degree, n_nodes),
     ``top_pagerank`` (node, pr_q, kind, label), ``triangles``
@@ -83,10 +83,10 @@ def analyze_snapshot(
 
     from pyspark.util import inheritable_thread_target
 
-    from .snapshots import read_snapshot_bucketed
+    from .snapshots import read_snapshot
 
-    edges = read_snapshot_bucketed(spark, root, "edges", snapshot_id)
-    nodes = read_snapshot_bucketed(spark, root, "nodes", snapshot_id)
+    edges = read_snapshot(spark, root, "edges", snapshot_id)
+    nodes = read_snapshot(spark, root, "nodes", snapshot_id)
 
     # the three reports are independent jobs over the same committed
     # tables: materialize them CONCURRENTLY (guide §2.6 — a later job's

@@ -32,9 +32,8 @@ Scale design notes (100 TB / 1000 executors):
   commit concurrently, under the caller's job group, lineage last (the
   completion marker).  A committed snapshot is final: a resumed re-run
   returns its manifests, and late pages go to a new snapshot with
-  ``incremental_from`` (K9).  Nodes and edges go through the
-  catalog-bucketed writer, whose bucket id lives in the file names and
-  the catalog spec, not in a data column.
+  ``incremental_from`` (K9).  Every table commits through the one
+  plain writer; only triples are partitioned (by ``part_id``).
 """
 
 from __future__ import annotations
@@ -54,13 +53,7 @@ from .cc import components_local
 from .linking import author_norm, local_star_edges
 from .metrics import error_histogram, partition_lineage
 from .schemas import PRED_AUTHOR
-from .snapshots import (
-    read_manifest,
-    read_snapshot,
-    snapshots_of,
-    write_snapshot,
-    write_snapshot_bucketed,
-)
+from .snapshots import read_manifest, read_snapshot, snapshots_of, write_snapshot
 from .triples import emit_triples
 from .udfs import parse_pages
 
@@ -549,11 +542,9 @@ def run_snapshot(
         # re-derives everything on the next run.
         # The data tables and the error histogram run CONCURRENTLY
         # (independent dirs and jobs): overlapping them hides per-job
-        # latency.  nodes/edges commit through the catalog-bucketed writer
-        # (K11), so the serving join node_id == src needs no exchange.
-        # Each worker thread gets its own copy of the caller's local
-        # properties (job group, description): one shared copy would
-        # carry one thread's call site into another's jobs.
+        # latency.  Each worker thread gets its own copy of the caller's
+        # local properties (job group, description): one shared copy
+        # would carry one thread's call site into another's jobs.
         t0 = time.perf_counter()
         with ThreadPoolExecutor(max_workers=5) as pool:
             def submit(fn, *args, **kwargs):
@@ -564,14 +555,8 @@ def run_snapshot(
                 write_snapshot, triples, out_root, "triples", snapshot_id,
                 partition_by=["part_id"],
             )
-            f_nodes = submit(
-                write_snapshot_bucketed, nodes, out_root, "nodes", snapshot_id,
-                bucket_col="node_id",
-            )
-            f_edges = submit(
-                write_snapshot_bucketed, edges, out_root, "edges", snapshot_id,
-                bucket_col="src",
-            )
+            f_nodes = submit(write_snapshot, nodes, out_root, "nodes", snapshot_id)
+            f_edges = submit(write_snapshot, edges, out_root, "edges", snapshot_id)
             f_seen = submit(write_snapshot, seen, out_root, "pages_seen", snapshot_id)
             m_triples = f_triples.result()
             m_nodes = f_nodes.result()

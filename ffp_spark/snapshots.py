@@ -12,6 +12,11 @@ swapped CURRENT pointer:
 Commit protocol: write data under ``_tmp-<id>``, fsync manifest, then
 ``os.replace`` both into place — readers never observe a half-written
 snapshot (same guarantee Iceberg gets from its metadata swap).
+The pipeline commits every table with ``write_snapshot`` and serves it
+with ``read_snapshot``, which takes the schema from the manifest and so
+runs no Spark job.  The catalog-bucketed pair (``write_snapshot_bucketed``,
+``read_snapshot_bucketed``) serves only the traced replay and the plan
+tests.
 
 Resume (K9): a snapshot is committed once its lineage manifest exists
 (the pipeline commits lineage last), and a committed snapshot is final:
@@ -142,20 +147,18 @@ def read_snapshot(
     table: str,
     snapshot_id: Optional[int] = None,
 ) -> DataFrame:
+    """A committed snapshot as a directory read with the manifest's
+    schema, partition columns last (as schema inference orders them):
+    no inference job, and an empty commit reads as an empty frame."""
     sid = snapshot_id if snapshot_id is not None else current_snapshot_id(root, table)
     if sid is None:
         raise FileNotFoundError(f"no committed snapshot for table {table} under {root}")
+    manifest = read_manifest(root, table, sid)
+    schema = StructType.fromJson(manifest["schema"])
+    parts = manifest["partition_by"]
+    fields = [f for f in schema.fields if f.name not in parts] + [schema[c] for c in parts]
     path = _table_dir(root, table) / f"snap-{sid}"
-    if not any(path.rglob("*.parquet")):
-        # an empty partitioned or bucketed commit leaves no file to infer
-        # the schema from; the manifest has it (partition columns last,
-        # as a directory read orders them)
-        manifest = read_manifest(root, table, sid)
-        schema = StructType.fromJson(manifest["schema"])
-        parts = manifest["partition_by"]
-        fields = [f for f in schema.fields if f.name not in parts]
-        return spark.createDataFrame([], StructType(fields + [schema[c] for c in parts]))
-    return spark.read.parquet(str(path))
+    return spark.read.schema(StructType(fields)).parquet(str(path))
 
 
 def read_manifest(root: str | Path, table: str, snapshot_id: int) -> dict[str, Any]:
@@ -184,16 +187,16 @@ def write_bucketed_table(
     sort: bool = True,
     mode: str = "overwrite",
 ) -> None:
-    """Catalog-bucketed parquet table for CO-LOCATED joins (K11 scale
-    path): every join or aggregation keyed on ``bucket_col`` between
-    tables bucketed the same way reads matching buckets side by side
-    with NO exchange — at 100 TB this removes the dominant shuffle from
-    repeated triple/node joins (tests/test_plans.py pins the
-    exchange-free plan).
+    """Catalog-bucketed parquet table for CO-LOCATED joins (K11): every
+    join or aggregation keyed on ``bucket_col`` between tables bucketed
+    the same way reads matching buckets side by side with NO exchange
+    (tests/test_plans.py pins the exchange-free plan).
 
     Hash-directory bucketing (write_snapshot's partition_by) places
     files; CATALOG bucketing additionally records the bucket spec so
-    Catalyst can elide the shuffle."""
+    Catalyst can elide the shuffle.  Only the plan tests and
+    ``write_snapshot_bucketed`` call it; it goes with the traced replay
+    (ROADMAP Direction 1)."""
     writer = df.write.mode(mode).format("parquet").bucketBy(n_buckets, bucket_col)
     if sort:
         writer = writer.sortBy(bucket_col)
@@ -225,9 +228,12 @@ def write_snapshot_bucketed(
 ) -> dict[str, Any]:
     """Atomic snapshot commit THROUGH the catalog-bucketed writer (K11):
     the committed files carry bucket ids in their names and the manifest
-    records the bucket spec, so the serving read path
-    (`read_snapshot_bucketed`) joins/aggregates on ``bucket_col`` with
-    ZERO exchange — bucketing is the default, not a demo.
+    records the bucket spec, so `read_snapshot_bucketed` joins and
+    aggregates on ``bucket_col`` with ZERO exchange.  Its only callers
+    are the traced replay (``perfbench/replay.py``) and the plan tests,
+    and it goes with the replay (ROADMAP Direction 1); ``run_snapshot``
+    commits through `write_snapshot`.  Each call registers a catalog
+    table in the session.
 
     Same protocol as `write_snapshot`; the staging write goes through a
     staging catalog entry, since bucketBy requires saveAsTable.  Bucket
@@ -271,10 +277,13 @@ def read_snapshot_bucketed(
     table: str,
     snapshot_id: Optional[int] = None,
 ) -> DataFrame:
-    """Serving read path for bucketed commits: returns the CATALOG table
+    """Read path for bucketed commits: returns the CATALOG table
     (bucket-spec-aware — joins on the bucket key need no exchange),
     re-registering it from the manifest's DDL in a fresh session.
-    Falls back to the plain directory read for non-bucketed commits."""
+    Falls back to the plain directory read for non-bucketed commits.
+    Its only callers are the traced replay (``perfbench/replay.py``) and
+    the plan tests, and it goes with the replay (ROADMAP Direction 1);
+    ``analyze_snapshot`` serves through `read_snapshot`."""
     sid = snapshot_id if snapshot_id is not None else current_snapshot_id(root, table)
     if sid is None:
         raise FileNotFoundError(f"no committed snapshot for table {table} under {root}")

@@ -160,13 +160,7 @@ def _maybe_decompress(payload: bytes, enc: Optional[str]) -> bytes:
 
 
 
-def parse_page_rows(
-    batches: Iterable["pa.RecordBatch"],
-    include_content: bool = True,
-    include_tags: bool = True,
-    include_media: bool = True,
-    include_enclosures: bool = True,
-) -> Iterator["pa.RecordBatch"]:
+def parse_page_rows(batches: Iterable["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
     """mapInArrow worker: PAGES record batches -> PARSED record batches.
 
     mapInArrow, not mapInPandas: converting large binary columns into
@@ -213,14 +207,7 @@ def parse_page_rows(
                     rec["error_class"] = "decompress_error"
                     rows.append(rec)
                     continue
-                parsed = parse_feed(
-                    payload,
-                    include_content=include_content,
-                    include_tags=include_tags,
-                    include_media=include_media,
-                    include_enclosures=include_enclosures,
-                    with_feed_type=True,
-                )
+                parsed = parse_feed(payload, with_feed_type=True)
                 rec["feed"] = _shape_feed(parsed["feed"])
                 rec["entries"] = [_shape_entry(e) for e in parsed["entries"]]
                 # the structure detector's verdict, not a byte re-sniff
@@ -252,13 +239,7 @@ def _arrow_parsed_schema():
     return to_arrow_schema(PARSED_SCHEMA)
 
 
-def parse_pages(
-    pages: DataFrame,
-    include_content: bool = True,
-    include_tags: bool = True,
-    include_media: bool = True,
-    include_enclosures: bool = True,
-) -> DataFrame:
+def parse_pages(pages: DataFrame) -> DataFrame:
     """PAGES -> PARSED.  Column-prunes the scan to what the parse needs
     (url/warc_ts/lang/html) before crossing into Python."""
     cols = [
@@ -266,14 +247,4 @@ def parse_pages(
         for c in ("url", "warc_ts", "html", "lang", "content_encoding")
         if c in pages.columns
     ]
-
-    def runner(batches):
-        return parse_page_rows(
-            batches,
-            include_content=include_content,
-            include_tags=include_tags,
-            include_media=include_media,
-            include_enclosures=include_enclosures,
-        )
-
-    return pages.select(*cols).mapInArrow(runner, schema=PARSED_SCHEMA)
+    return pages.select(*cols).mapInArrow(parse_page_rows, schema=PARSED_SCHEMA)

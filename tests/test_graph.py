@@ -592,7 +592,7 @@ def test_cached_repartition_join_shuffles_only_small_side(spark):
 
 def test_analyze_snapshot_end_to_end(spark, tmp_path):
     """Serving-path integration: run a real snapshot commit, then run
-    the graph analytics over the COMMITTED bucketed tables."""
+    the graph analytics over the COMMITTED tables."""
     from ffp_spark.datagen import synth_pages
     from ffp_spark.graph import analyze_snapshot
     from ffp_spark.pipeline import run_snapshot

@@ -34,8 +34,20 @@ class TestSnapshots:
         df = spark.range(100).withColumn("k", F.col("id") % 7)
         m = write_snapshot(df, tmp_path, "t", snapshot_id=1)
         assert m["row_count"] == 100
-        back = read_snapshot(spark, tmp_path, "t")
-        assert back.count() == 100
+        # the partition column first in the frame, last in the read
+        part = df.select((F.col("k") % 3).cast("int").alias("p"), "id", "k")
+        write_snapshot(part, tmp_path, "p", snapshot_id=1, partition_by=["p"])
+        for table, cols in (("t", ["id", "k"]), ("p", ["id", "k", "p"])):
+            # the manifest holds the schema: reading it runs no job, and
+            # gives the columns and types a directory inference gives
+            back, jobs = _jobs_in_group(
+                spark, f"read-{table}", lambda: read_snapshot(spark, tmp_path, table)
+            )
+            assert jobs == 0
+            inferred = spark.read.parquet(str(tmp_path / table / "snap-1"))
+            assert back.columns == cols
+            assert back.dtypes == inferred.dtypes
+            assert back.count() == 100
         assert current_snapshot_id(tmp_path, "t") == 1
 
     def test_snapshot_evolution_and_time_travel(self, spark, tmp_path):
@@ -72,7 +84,23 @@ class TestSnapshots:
         df = spark.range(5).filter("id < 0").withColumn("k", F.col("id") % 3)
         m = write_snapshot(df, tmp_path, "empty", snapshot_id=1)
         assert m["row_count"] == 0
-        assert read_snapshot(spark, tmp_path, "empty").count() == 0
+        back, jobs = _jobs_in_group(
+            spark, "read-empty", lambda: read_snapshot(spark, tmp_path, "empty")
+        )
+        assert jobs == 0
+        inferred = spark.read.parquet(str(tmp_path / "empty" / "snap-1"))
+        assert back.dtypes == inferred.dtypes
+        assert back.count() == 0
+        # an empty partitioned commit leaves no data file to infer from:
+        # the manifest schema still reads, partition column last
+        part = df.select(F.col("k").cast("int").alias("part_id"), "id")
+        write_snapshot(part, tmp_path, "empty_p", snapshot_id=1, partition_by=["part_id"])
+        back, jobs = _jobs_in_group(
+            spark, "read-empty-p", lambda: read_snapshot(spark, tmp_path, "empty_p")
+        )
+        assert jobs == 0
+        assert back.dtypes == [("id", "bigint"), ("part_id", "int")]
+        assert back.count() == 0
 
     def test_bucketed_commit_under_a_relative_root(self, spark, tmp_path, monkeypatch):
         from ffp_spark.snapshots import read_snapshot_bucketed, write_snapshot_bucketed
@@ -100,7 +128,10 @@ class TestSnapshots:
 class TestPipeline:
     def test_run_snapshot_end_to_end(self, spark, tmp_path):
         pages = synth_pages(spark, 120, seed=3)
+        tables = {t.name for t in spark.catalog.listTables()}
         report = run_snapshot(spark, pages, str(tmp_path), snapshot_id=1, n_parts=8)
+        # a run registers nothing in the session catalog
+        assert {t.name for t in spark.catalog.listTables()} == tables
         assert report["pages"] == 120
         assert report["triples"] > 0
         assert report["nodes"] > 0
@@ -124,33 +155,18 @@ class TestPipeline:
             for r in stamps
         )
 
-    def test_committed_nodes_edges_join_without_exchange(self, spark, tmp_path):
-        """The production commit path writes nodes/edges through the
-        catalog-bucketed writer: the serving join (node_id == src) must
-        read co-located buckets with ZERO exchange."""
-        from ffp_spark.snapshots import read_snapshot_bucketed
-
+    def test_committed_nodes_edges_read_back_with_graph_columns(self, spark, tmp_path):
+        """Nodes and edges commit with exactly the graph columns, and the
+        reads return every committed row."""
         pages = synth_pages(spark, 80, seed=5)
-        run_snapshot(spark, pages, str(tmp_path), snapshot_id=1, n_parts=8)
-        nodes = read_snapshot_bucketed(spark, tmp_path, "nodes")
-        edges = read_snapshot_bucketed(spark, tmp_path, "edges")
-        # exactly the graph columns: bucket placement lives in the file
-        # names and the catalog spec, never in a data column
+        report = run_snapshot(spark, pages, str(tmp_path), snapshot_id=1, n_parts=8)
+        nodes = read_snapshot(spark, tmp_path, "nodes")
+        edges = read_snapshot(spark, tmp_path, "edges")
         assert nodes.columns == ["node_id", "kind", "canonical_id", "label"]
         assert edges.columns == ["src", "dst", "pred", "weight"]
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = nodes.join(edges, nodes.node_id == edges.src)
-            assert joined.count() > 0
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        # plain directory reads still serve the same rows (non-catalog
-        # consumers and resume merges are unaffected by the bucketed commit)
-        assert read_snapshot(spark, tmp_path, "nodes").count() == nodes.count()
-        assert read_snapshot(spark, tmp_path, "edges").count() == edges.count()
+        assert report["nodes"] > 0 and report["edges"] > 0
+        assert nodes.count() == report["nodes"] == read_manifest(tmp_path, "nodes", 1)["row_count"]
+        assert edges.count() == report["edges"] == read_manifest(tmp_path, "edges", 1)["row_count"]
 
     def test_resume_skips_done_partitions_and_converges(self, spark, tmp_path):
         """A committed snapshot is final: a re-run returns its report and
