@@ -33,7 +33,6 @@ def error_histogram(parsed: DataFrame) -> DataFrame:
         parsed.filter(F.col("error_class").isNotNull())
         .groupBy("error_class")
         .count()
-        .orderBy(F.desc("count"))
     )
 
 

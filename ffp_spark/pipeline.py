@@ -524,11 +524,12 @@ def run_snapshot(
         # the seen-url set comes off the MATERIALIZED parsed table
         # (row-identical to the source: one row per input page, same
         # url-hash part_id) — re-scanning a generated/WARC source would
-        # re-run its Python ingest
+        # re-run its Python ingest.  The anti-join made the delta's urls
+        # disjoint from the parent's, so the union keeps, as a full build
+        # does, one row per crawled page
         seen = parsed.select("url", "part_id")
         if prior_seen is not None:
-            prior_urls = add_part_id(prior_seen.select("url"), n_parts)
-            seen = seen.unionByName(prior_urls).dropDuplicates(["url"])
+            seen = seen.unionByName(add_part_id(prior_seen.select("url"), n_parts))
 
         def _errors() -> dict[str, int]:
             t0 = time.perf_counter()

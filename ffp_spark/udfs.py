@@ -1,87 +1,25 @@
 """Vectorized parse stage (operator K1, SURVEY.md §2.B).
 
 ``parse_pages`` maps the PAGES table through the pure-Python parser via
-``mapInPandas`` — Arrow-batched, one Python worker per core, no per-row
+``mapInArrow`` — Arrow-batched, one Python worker per core, no per-row
 Python UDFs (north-rule API requirement).  Catalyst sees a typed
 PARSED_SCHEMA output, so nested-schema pruning applies downstream.
 
 Reference parity: the parse itself is ffp_spark.feedparse (golden-tested
-against /root/reference/tests/integration); this module only adapts
-dicts to the frozen StructTypes.
+against the reference's integration fixtures).  Its dicts go to Arrow as
+they are: Arrow takes the schema's fields by name, ignores extra keys
+and sets missing ones to null.
 """
 
 from __future__ import annotations
 
 from typing import Any, Iterable, Iterator, Optional
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .schemas import PARSED_SCHEMA
-
-_FEED_SCALARS = (
-    "title", "link", "subtitle", "generator", "publisher", "author",
-    "id", "language", "updated", "comments", "icon", "favicon",
-)
-_ENTRY_SCALARS = (
-    "id", "title", "description", "link", "published", "updated",
-    "author", "comments", "image", "banner_image",
-)
-_LINK_KEYS = ("rel", "type", "href", "title")
-_TAG_KEYS = ("term", "scheme", "label")
-_DETAIL_KEYS = ("type", "language", "base", "value")
-_MEDIA_KEYS = (
-    "url", "type", "medium", "width", "height", "title", "text",
-    "description", "credit", "credit_scheme", "thumbnail_url",
-)
-
-
-def _keyed(rec: Optional[dict], keys: tuple[str, ...]) -> Optional[dict]:
-    if rec is None:
-        return None
-    return {k: rec.get(k) for k in keys}
-
-
-def _keyed_list(items: Optional[list], keys: tuple[str, ...]) -> Optional[list]:
-    if items is None:
-        return None
-    return [_keyed(it, keys) for it in items]
-
-
-def _shape_feed(feed: dict[str, Any]) -> dict[str, Any]:
-    out: dict[str, Any] = {k: feed.get(k) for k in _FEED_SCALARS}
-    out["title_detail"] = _keyed(feed.get("title_detail"), _DETAIL_KEYS)
-    out["subtitle_detail"] = _keyed(feed.get("subtitle_detail"), _DETAIL_KEYS)
-    out["generator_detail"] = _keyed(feed.get("generator_detail"), ("name", "version", "href"))
-    out["links"] = _keyed_list(feed.get("links"), _LINK_KEYS)
-    out["tags"] = _keyed_list(feed.get("tags"), _TAG_KEYS)
-    return out
-
-
-def _shape_entry(entry: dict[str, Any]) -> dict[str, Any]:
-    out: dict[str, Any] = {k: entry.get(k) for k in _ENTRY_SCALARS}
-    out["author_detail"] = _keyed(entry.get("author_detail"), ("name",))
-    out["links"] = _keyed_list(entry.get("links"), _LINK_KEYS)
-    out["tags"] = _keyed_list(entry.get("tags"), _TAG_KEYS)
-    out["content"] = _keyed_list(entry.get("content"), _DETAIL_KEYS)
-    enclosures = entry.get("enclosures")
-    if enclosures is not None:
-        shaped = []
-        for enc in enclosures:
-            length = enc.get("length")
-            shaped.append(
-                {
-                    "url": enc.get("url"),
-                    "type": enc.get("type"),
-                    "length": length if isinstance(length, int) else None,
-                }
-            )
-        out["enclosures"] = shaped
-    else:
-        out["enclosures"] = None
-    out["media_content"] = _keyed_list(entry.get("media_content"), _MEDIA_KEYS)
-    return out
 
 
 def _classify_error(exc: Exception) -> str:
@@ -158,20 +96,31 @@ def _maybe_decompress(payload: bytes, enc: Optional[str]) -> bytes:
     return payload
 
 
+# what from_pylist raises on a value its field cannot hold (OverflowError:
+# an int beyond int64, such as a JSON Feed size_in_bytes of 2**63)
+_UNFIT = (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError)
 
 
-def parse_page_rows(batches: Iterable["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+def _fitted(rec: dict[str, Any], schema: pa.Schema) -> dict[str, Any]:
+    """``rec``, or its error row if Arrow cannot convert it to ``schema``."""
+    try:
+        pa.RecordBatch.from_pylist([rec], schema=schema)
+    except _UNFIT as exc:
+        return {**rec, "feed_type": None, "feed": None, "entries": None,
+                "error": str(exc)[:500], "error_class": _classify_error(exc)}
+    return rec
+
+
+def parse_page_rows(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """mapInArrow worker: PAGES record batches -> PARSED record batches.
 
     mapInArrow, not mapInPandas: converting large binary columns into
     pandas object arrays serializes badly under concurrency (measured
     ~15x slower at 32 cores); pyarrow list/struct building stays in C.
     """
-    import pyarrow as pa
-
     from .feedparse import parse_feed  # import on executor
 
-    out_schema = _arrow_parsed_schema()
+    out_schema = to_arrow_schema(PARSED_SCHEMA)
     for batch in batches:
         names = set(batch.schema.names)
         urls = batch.column("url").to_pylist()
@@ -208,8 +157,14 @@ def parse_page_rows(batches: Iterable["pa.RecordBatch"]) -> Iterator["pa.RecordB
                     rows.append(rec)
                     continue
                 parsed = parse_feed(payload, with_feed_type=True)
-                rec["feed"] = _shape_feed(parsed["feed"])
-                rec["entries"] = [_shape_entry(e) for e in parsed["entries"]]
+                # a JSON Feed's size_in_bytes is taken as given: anything
+                # but an int commits as a null enclosure length
+                for entry in parsed["entries"]:
+                    for encl in entry.get("enclosures") or ():
+                        if not isinstance(encl.get("length"), int):
+                            encl["length"] = None
+                rec["feed"] = parsed["feed"]
+                rec["entries"] = parsed["entries"]
                 # the structure detector's verdict, not a byte re-sniff
                 # (an RSS body mentioning "<feed" must not label as atom)
                 rec["feed_type"] = parsed["feed_type"]
@@ -230,13 +185,16 @@ def parse_page_rows(batches: Iterable["pa.RecordBatch"]) -> Iterator["pa.RecordB
                     except Exception:
                         pass
             rows.append(rec)
-        yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
-
-
-def _arrow_parsed_schema():
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(PARSED_SCHEMA)
+        try:
+            out = pa.RecordBatch.from_pylist(rows, schema=out_schema)
+        except _UNFIT:
+            # some page holds a value the schema cannot (a JSON Feed
+            # item's numeric id): convert page by page, so only that
+            # page becomes an error row and its batch-mates still parse
+            out = pa.RecordBatch.from_pylist(
+                [_fitted(rec, out_schema) for rec in rows], schema=out_schema
+            )
+        yield out
 
 
 def parse_pages(pages: DataFrame) -> DataFrame:

@@ -293,6 +293,39 @@ class TestStoredPayloadDecompression:
         row = parse_pages(pages).collect()[0]
         assert row.error_class == "decompress_error"
 
+    def test_page_the_schema_cannot_hold_is_error_row_not_task_failure(self, spark):
+        import json
+
+        def json_feed(item):
+            return bytearray(json.dumps({
+                "version": "https://jsonfeed.org/version/1.1",
+                "title": "J",
+                "items": [{"url": "https://j.example/1", **item}],
+            }).encode())
+
+        unfit = {
+            "https://id.example/feed.json": {"id": 12345},
+            "https://title.example/feed.json": {"id": "t", "title": 7},
+            "https://name.example/feed.json": {"id": "n", "authors": [{"name": ["x", "y"]}]},
+            "https://size.example/feed.json": {
+                "id": "s",
+                "attachments": [{"url": "https://j.example/a.mp3", "size_in_bytes": 2**63}],
+            },
+        }
+        pages = spark.createDataFrame(
+            [("https://a.example/feed", None, bytearray(_RSS), None, "en")]
+            + [(url, None, json_feed(item), None, "en") for url, item in unfit.items()],
+            _PAGES_DDL,
+        ).coalesce(1)  # one batch: the fitting page shares it with the unfit ones
+        rows = {r.url: r for r in parse_pages(pages).collect()}
+        ok = rows.pop("https://a.example/feed")
+        assert ok.error is None and len(ok.entries) == 2
+        assert rows.keys() == unfit.keys()
+        for row in rows.values():
+            assert row.error_class == "other", row
+            assert row.feed is None and row.entries is None and row.feed_type is None
+        assert "Expected bytes, got a 'int' object" in rows["https://id.example/feed.json"].error
+
     def test_brotli_declared_without_library_is_error_row(self, spark):
         pages = spark.createDataFrame(
             [("https://br.example/feed", None, bytearray(b"\x8b\x02\x80data"), None, "en", "br")],

@@ -277,11 +277,12 @@ class TestPipeline:
             b'<html><head><meta http-equiv="refresh" content="0; url=%s"></head></html>'
             % synth_page(9, 0)["url"].encode(),
         )
+        # solo is crawled twice: a full build's pages_seen keeps both rows
         base = synth_pages(spark, 100, seed=9).unionByName(
-            spark.createDataFrame([solo], PAGES_SCHEMA)
+            spark.createDataFrame([solo, solo], PAGES_SCHEMA)
         )
         grown = synth_pages(spark, 150, seed=9).unionByName(  # same first 100
-            spark.createDataFrame([solo, variant, refresh], PAGES_SCHEMA)
+            spark.createDataFrame([solo, solo, variant, refresh], PAGES_SCHEMA)
         )
         r1 = run_snapshot(spark, base, str(tmp_path), snapshot_id=1, n_parts=8)
         r2 = run_snapshot(
