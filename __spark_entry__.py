@@ -2075,7 +2075,7 @@ def _q_warc_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents table is serialized into 4 deterministic .warc.gz shards
     (one gzip member per record, CommonCrawl layout; fixture synthesis
     is driver-side — the OPERATOR under test is the distributed read),
-    re-ingested via binaryFile + mapInArrow record split, and reduced
+    re-ingested via the ranged mapInArrow record split, and reduced
     to per-shard record counts, payload bytes, and an md5-derived
     payload checksum — byte-exact round-trip is value-checked, not
     assumed.  DuckDB replays everything from the text column

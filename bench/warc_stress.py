@@ -6,10 +6,12 @@ padding per record -> ~4:1 compression, the CommonCrawl ballpark),
 then measures peak RSS (resource.getrusage ru_maxrss) in two ISOLATED
 subprocesses over the same file:
 
-* ``streamed``  — the production task body: sources.scan_warc_file
-  (member-at-a-time gunzip through the capped window + incremental
-  scanner) with Arrow batches flushed at the same 256-record/16 MB
-  bounds read_warc uses.  Expected peak: compressed size + O(batch).
+* ``streamed``  — the production task body: sources.scan_warc_chunks
+  over sources._iter_file_range (1 MiB range reads, member-at-a-time
+  gunzip through the capped window + incremental scanner) with Arrow
+  batches flushed at the same 256-record/16 MB bounds read_warc uses.
+  Expected peak: O(read chunk + inflation window + record + batch),
+  independent of the archive size.
 * ``wholefile`` — the round-5 implementation replayed:
   gzip.decompress of the whole stream, parse into one Python list,
   one RecordBatch.from_pylist.  Expected peak: compressed + raw +
@@ -68,19 +70,20 @@ def run_child(mode: str, path: Path) -> None:
         WARC_SCHEMA,
         _BATCH_BYTES,
         _BATCH_RECORDS,
+        _iter_file_range,
         parse_warc_bytes,
-        scan_warc_file,
+        scan_warc_chunks,
     )
 
     out_schema = to_arrow_schema(WARC_SCHEMA)
-    data = path.read_bytes()
     t0 = time.perf_counter()
     n_records = 0
     payload_bytes = 0
     if mode == "streamed":
         rows: list[dict] = []
         nbytes = 0
-        for rec in scan_warc_file(path.name, data):
+        chunks = _iter_file_range(str(path), 0, path.stat().st_size)
+        for rec in scan_warc_chunks(path.name, chunks):
             rows.append(rec)
             nbytes += len(rec["payload"])
             if len(rows) >= _BATCH_RECORDS or nbytes >= _BATCH_BYTES:
@@ -93,7 +96,7 @@ def run_child(mode: str, path: Path) -> None:
             n_records += b.num_rows
             payload_bytes += nbytes
     else:  # wholefile: the r5 code path replayed
-        raw = gzip.decompress(data)
+        raw = gzip.decompress(path.read_bytes())
         recs = parse_warc_bytes(raw)
         for rec in recs:
             rec["file"] = path.name

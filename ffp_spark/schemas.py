@@ -115,48 +115,6 @@ PARSED_SCHEMA = StructType(
     ]
 )
 
-TRIPLES_SCHEMA = StructType(
-    [
-        StructField("subj", StringType(), False),
-        StructField("pred", StringType(), False),
-        StructField("obj", StringType(), False),
-        StructField("src_url", StringType(), True),
-        StructField("snapshot_id", LongType(), True),
-        StructField("part_id", IntegerType(), True),
-    ]
-)
-
-NODES_SCHEMA = StructType(
-    [
-        StructField("node_id", StringType(), False),
-        StructField("kind", StringType(), True),
-        StructField("canonical_id", StringType(), True),
-        StructField("label", StringType(), True),
-    ]
-)
-
-EDGES_SCHEMA = StructType(
-    [
-        StructField("src", StringType(), False),
-        StructField("dst", StringType(), False),
-        StructField("pred", StringType(), True),
-        StructField("weight", StringType(), True),
-    ]
-)
-
-LINEAGE_SCHEMA = StructType(
-    [
-        StructField("snapshot_id", LongType(), False),
-        StructField("part_id", IntegerType(), False),
-        StructField("n_pages", LongType(), True),
-        StructField("n_parsed", LongType(), True),
-        StructField("n_errors", LongType(), True),
-        StructField("n_entries", LongType(), True),
-        StructField("n_triples", LongType(), True),
-        StructField("status", StringType(), True),
-    ]
-)
-
 # schema.org-flavored predicate vocabulary (north_star spec)
 PRED_PUBLISHED_AT = "publishedAt"
 PRED_AUTHOR = "author"

@@ -2,27 +2,28 @@
 
 CommonCrawl-style ingestion: a crawl ships as thousands of ~1 GB
 .warc(.gz) files, and the scale unit is the FILE — Spark parallelizes
-across files (binaryFile source), each task splits its file into
-records locally, and only the projected record fields leave the task.
-That is exactly how production WARC pipelines shard 100 TB crawls; no
-record-level split index is needed because file count >> executor
-count at any realistic crawl size.
+across files (a binaryFile listing packs them into tasks by size), each
+task streams its file's bytes into records locally, and only the
+projected record fields leave the task.  That is exactly how production
+WARC pipelines shard 100 TB crawls; no record-level split index is
+needed because file count >> executor count at any realistic crawl
+size.  Both readers run one task body, :func:`_read_ranges`, over
+(path, start, end) rows: ``read_warc`` gives each file one range,
+``read_warc_ranges`` takes the member-aligned slices of
+:func:`warc_split_ranges` (the single-huge-file case).
 
-Memory profile (the round-5 `weak`, fixed): the task holds the
-COMPRESSED file bytes (that is the binaryFile source's contract — ~1 GB
-for a CommonCrawl shard) plus a BOUNDED inflation window.  Gzip members
-decompress one at a time through a capped ``zlib.decompressobj`` window
-(never ``gzip.decompress`` of the whole stream), records parse
-incrementally out of a rolling buffer, and output leaves the task as
-bounded Arrow batches (``_BATCH_RECORDS`` rows / ``_BATCH_BYTES``
-payload bytes per batch) instead of one whole-file pylist.  Peak task
-heap is therefore O(compressed size + max record size + batch cap), not
-O(raw archive size) — 32 concurrent ~1 GB-shard tasks fit a
-128 GiB box with room to spare (measured: bench/warc_stress.py, row in
-SCALE.md).  The one remaining pathological case is a single 50 GB file
-(file-level parallelism serializes it); a gzip-member offset index
-would fix that and is deliberately out of scope (file count >> executor
-count in a real crawl).
+Memory profile: a task never holds a file.  It reads its range through
+``pyarrow.fs`` in ``_IN_CHUNK`` slices; gzip members decompress one at
+a time through a capped ``zlib.decompressobj`` window (never
+``gzip.decompress`` of the whole stream), records parse incrementally
+out of a rolling buffer, and output leaves the task as bounded Arrow
+batches (``_BATCH_RECORDS`` rows / ``_BATCH_BYTES`` payload bytes per
+batch).  Peak task heap is therefore about one read chunk + the
+inflation window (``_OUT_CAP``) + the largest record + one batch,
+independent of both the compressed and the raw archive size (measured:
+bench/warc_stress.py, row in SCALE.md).  The one exception is a corrupt
+gzip member: its error row carries the rest of the range, from the read
+chunk in which zlib rejects the member to the end of the range.
 
 Error discipline (pipeline-wide invariant): malformed bytes NEVER fail
 the task.  Corrupt gzip members, non-numeric Content-Length, non-UTF8
@@ -43,9 +44,11 @@ from __future__ import annotations
 
 import gzip
 import io
+import itertools
 import re
 import zlib
 from typing import Iterable, Iterator
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -63,8 +66,9 @@ _CRLF = b"\r\n"
 # Bounded-emission knobs: a batch leaves the scanner when either trips.
 _BATCH_RECORDS = 256
 _BATCH_BYTES = 16 << 20
-# Compressed bytes fed to the decompressor per call / max inflated bytes
-# pulled back per call — together they cap the inflation window.
+# Bytes per range read (= compressed bytes fed to the decompressor per
+# call) / max inflated bytes pulled back per call — together they cap
+# the inflation window.
 _IN_CHUNK = 1 << 20
 _OUT_CAP = 4 << 20
 
@@ -243,7 +247,7 @@ def parse_warc_bytes(data: bytes) -> list[dict]:
 
 
 class _CorruptGzip(Exception):
-    """Raised by :func:`_gunzip_chunks` with the not-yet-decompressed
+    """Raised by :func:`_gunzip_stream` with the not-yet-decompressed
     remainder, so the caller can emit it as an error row."""
 
     def __init__(self, remaining: bytes) -> None:
@@ -251,36 +255,40 @@ class _CorruptGzip(Exception):
         self.remaining = remaining
 
 
-def _gunzip_chunks(data: bytes) -> Iterator[bytes]:
-    """Decompress a (possibly multi-member) gzip stream member-at-a-time
-    through a bounded window: at most ``_IN_CHUNK`` compressed bytes are
-    fed per call and at most ``_OUT_CAP`` inflated bytes pulled back, so
-    peak inflation memory is O(_OUT_CAP), independent of archive size.
-    Corrupt or truncated members raise :class:`_CorruptGzip` carrying
-    every byte not yet successfully decompressed."""
-    pos, n = 0, len(data)
+def _gunzip_stream(chunks: Iterable[bytes]) -> Iterator[bytes]:
+    """Decompress a (possibly multi-member) gzip stream, given as a
+    chunk iterator, member-at-a-time through a bounded window: each
+    call is fed at most one chunk and pulls back at most ``_OUT_CAP``
+    inflated bytes, so peak inflation memory is O(chunk + _OUT_CAP),
+    independent of archive size.  A corrupt member raises
+    :class:`_CorruptGzip` carrying the chunk that failed plus every
+    chunk not yet read, i.e. the rest of the stream; a truncated last
+    member raises it empty (its inflated prefix already went out)."""
+    it = iter(chunks)
     pending = b""
-    while pos < n or pending:
+    while True:
+        if not pending:  # at a member boundary (or clean end)
+            nxt = next(it, None)
+            if nxt is None:
+                return
+            pending = nxt
         d = zlib.decompressobj(16 + zlib.MAX_WBITS)
-        try:
-            while not d.eof:
-                if not pending:
-                    if pos >= n:
-                        raise _CorruptGzip(b"")  # truncated member
-                    pending = data[pos:pos + _IN_CHUNK]
-                    pos += len(pending)
+        while not d.eof:
+            if not pending:
+                nxt = next(it, None)
+                if nxt is None:
+                    raise _CorruptGzip(b"")  # truncated member
+                pending = nxt
+            try:
                 out = d.decompress(pending, _OUT_CAP)
-                pending = d.unconsumed_tail
-                if out:
-                    yield out
-            out = d.flush()
+            except zlib.error:
+                raise _CorruptGzip(pending + b"".join(it)) from None
+            pending = d.unconsumed_tail
             if out:
                 yield out
-        except zlib.error:
-            # `pending` is exactly the chunk the failing call was fed
-            raise _CorruptGzip(pending + data[pos:]) from None
-        except _CorruptGzip:
-            raise _CorruptGzip(pending + data[pos:]) from None
+        out = d.flush()
+        if out:
+            yield out
         # bytes past the member end = start of the next member
         pending = d.unused_data
 
@@ -392,22 +400,20 @@ def split_http(records: DataFrame) -> DataFrame:
     return records.mapInArrow(run, schema=WARC_HTTP_SCHEMA)
 
 
-def scan_warc_file(fname: str, data: bytes) -> Iterator[dict]:
-    """Stream all records of one archive (the per-file task body, kept
-    module-level so bench/warc_stress.py measures the EXACT production
-    code path).  Gzip is detected by magic bytes and decompressed
-    member-at-a-time through the capped window; plain files stream
-    through the scanner in ``_IN_CHUNK`` slices.  Corrupt gzip turns
-    into an error row carrying the undecompressed remainder —
-    unconditionally, so corruption is never silent even when every
-    byte was already fed."""
+def scan_warc_chunks(fname: str, chunks: Iterable[bytes]) -> Iterator[dict]:
+    """Stream all records out of one range's chunks (the task body of
+    both readers, kept module-level so bench/warc_stress.py measures
+    the exact production code path).  Gzip is detected by the magic
+    bytes of the first chunk — every range starts at a file start or a
+    member/record boundary.  A corrupt gzip member turns into an error
+    row carrying the undecompressed remainder, unconditionally, so
+    corruption is never silent even when every byte was already fed."""
+    it = iter(chunks)
+    head = next(it, b"")
+    stream: Iterable[bytes] = itertools.chain([head], it)
+    if head[:2] == b"\x1f\x8b":
+        stream = _gunzip_stream(stream)
     scanner = _RecordScanner()
-    if data[:2] == b"\x1f\x8b":
-        chunks: Iterable[bytes] = _gunzip_chunks(data)
-    else:
-        chunks = (
-            data[off:off + _IN_CHUNK] for off in range(0, len(data), _IN_CHUNK)
-        )
 
     def _tag(recs: list[dict]) -> Iterator[dict]:
         for rec in recs:
@@ -415,7 +421,7 @@ def scan_warc_file(fname: str, data: bytes) -> Iterator[dict]:
             yield rec
 
     try:
-        for chunk in chunks:
+        for chunk in stream:
             yield from _tag(scanner.feed(chunk))
         yield from _tag(scanner.finish())
     except _CorruptGzip as exc:
@@ -425,15 +431,17 @@ def scan_warc_file(fname: str, data: bytes) -> Iterator[dict]:
 
 def _iter_file_range(uri: str, start: int, end: int) -> Iterator[bytes]:
     """Stream [start, end) of a file in ``_IN_CHUNK`` slices through
-    pyarrow.fs — seekable range reads work the same against file://,
-    hdfs:// and s3:// (the property that makes range-parallel WARC
-    processing cluster-real, not a local-mode trick)."""
+    pyarrow.fs — seekable range reads work the same against local
+    paths, file://, hdfs:// (with libhdfs), s3:// and gs:// (the
+    property that makes range-parallel WARC processing cluster-real,
+    not a local-mode trick)."""
     from pyarrow import fs as pafs
 
     if uri.startswith("file:") and not uri.startswith("file:///"):
         uri = "file:///" + uri[len("file:"):].lstrip("/")
-    if "://" in uri or uri.startswith("file:"):
-        filesystem, p = pafs.FileSystem.from_uri(uri)
+    if "://" in uri:
+        # Spark lists Hadoop path strings, which are not percent-encoded
+        filesystem, p = pafs.FileSystem.from_uri(quote(uri, safe=":/@"))
     else:
         filesystem, p = pafs.LocalFileSystem(), uri
     with filesystem.open_input_file(p) as f:
@@ -573,25 +581,13 @@ def warc_split_ranges(
     return files.mapInArrow(index, schema="path string, start long, end long")
 
 
-def read_warc_ranges(spark: SparkSession, ranges: DataFrame) -> DataFrame:
-    """Second pass: parse WARC records range-parallel.  ``ranges`` is
-    (path, start, end) from :func:`warc_split_ranges`; each range is
-    one unit of work — repartitioned so slices of the same huge file
-    land on different tasks.  Each task streams ONLY its byte range
-    through pyarrow.fs (never the whole file — unlike binaryFile) and
-    runs the same scanner/batch bounds as read_warc.  Gzip is detected
-    per range (every range starts at a member or record boundary).
-    ``rec_offset`` is range-relative here (the decompressed stream
-    restarts at each member boundary).  Returns WARC_SCHEMA rows."""
+def _read_ranges(ranges: DataFrame) -> DataFrame:
+    """(path, start, end) rows -> WARC_SCHEMA rows: each task streams
+    only its byte ranges through pyarrow.fs and emits bounded Arrow
+    batches (``_BATCH_RECORDS`` / ``_BATCH_BYTES``)."""
     import pyarrow as pa
 
     from pyspark.sql.pandas.types import to_arrow_schema
-
-    # the ranges table is tiny (one row per ~64 MB slice): checkpoint
-    # so the count and the read don't each re-run the index pass
-    ranges = ranges.localCheckpoint(eager=True)
-    n_ranges = ranges.count()
-    src = ranges.repartition(max(1, min(n_ranges, 2048)), "path", "start")
 
     def run(batches):
         out_schema = to_arrow_schema(WARC_SCHEMA)
@@ -602,18 +598,7 @@ def read_warc_ranges(spark: SparkSession, ranges: DataFrame) -> DataFrame:
                 uri, start, end = rec["path"], rec["start"], rec["end"]
                 fname = uri.rsplit("/", 1)[-1]
                 chunks = _iter_file_range(uri, start, end)
-                head = next(iter(chunks), b"")
-                if not head:
-                    continue
-                gz = head[:2] == b"\x1f\x8b"
-
-                def _with_head(h, rest):
-                    yield h
-                    yield from rest
-
-                for row in scan_warc_chunks(
-                    fname, _with_head(head, chunks), gz
-                ):
+                for row in scan_warc_chunks(fname, chunks):
                     rows.append(row)
                     nbytes += len(row["payload"])
                     if len(rows) >= _BATCH_RECORDS or nbytes >= _BATCH_BYTES:
@@ -622,102 +607,43 @@ def read_warc_ranges(spark: SparkSession, ranges: DataFrame) -> DataFrame:
         if rows:
             yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
 
-    return src.mapInArrow(run, schema=WARC_SCHEMA)
+    return ranges.mapInArrow(run, schema=WARC_SCHEMA)
 
 
-def scan_warc_chunks(
-    fname: str, chunks: Iterable[bytes], gz: bool
-) -> Iterator[dict]:
-    """Stream records out of a chunked byte source (the core of
-    :func:`scan_warc_file` and the range reader)."""
-    scanner = _RecordScanner()
-    if gz:
-        stream: Iterable[bytes] = _gunzip_stream(chunks)
-    else:
-        stream = chunks
-
-    def _tag(recs: list[dict]) -> Iterator[dict]:
-        for rec in recs:
-            rec["file"] = fname
-            yield rec
-
-    try:
-        for chunk in stream:
-            yield from _tag(scanner.feed(chunk))
-        yield from _tag(scanner.finish())
-    except _CorruptGzip as exc:
-        yield from _tag(scanner.finish())
-        yield from _tag([_error_rec(exc.remaining)])
-
-
-def _gunzip_stream(chunks: Iterable[bytes]) -> Iterator[bytes]:
-    """Multi-member gzip decompression over a CHUNK ITERATOR with the
-    same capped window as :func:`_gunzip_chunks`.  Raises
-    :class:`_CorruptGzip` carrying the in-flight compressed bytes
-    (upstream chunks are not pre-read, so the remainder is bounded by
-    one chunk — the range reader's error row marks corruption without
-    buffering the rest of the range)."""
-    it = iter(chunks)
-    pending = b""
-    while True:
-        if not pending:  # at a member boundary (or clean end)
-            nxt = next(it, None)
-            if nxt is None:
-                return
-            pending = nxt
-        d = zlib.decompressobj(16 + zlib.MAX_WBITS)
-        while not d.eof:
-            if not pending:
-                nxt = next(it, None)
-                if nxt is None:
-                    raise _CorruptGzip(b"")  # truncated member
-                pending = nxt
-            try:
-                out = d.decompress(pending, _OUT_CAP)
-            except zlib.error:
-                raise _CorruptGzip(pending) from None
-            pending = d.unconsumed_tail
-            if out:
-                yield out
-        out = d.flush()
-        if out:
-            yield out
-        pending = d.unused_data
+def read_warc_ranges(spark: SparkSession, ranges: DataFrame) -> DataFrame:
+    """Second pass: parse WARC records range-parallel.  ``ranges`` is
+    (path, start, end) from :func:`warc_split_ranges`; each range is
+    one unit of work — repartitioned so slices of the same huge file
+    land on different tasks.  Each task streams only its byte ranges
+    through pyarrow.fs, with the same scanner and batch bounds as
+    :func:`read_warc`.  ``rec_offset`` is range-relative here (the
+    decompressed stream restarts at each range start), and a corrupt
+    gzip member's error row ends at the end of its range.  Returns
+    WARC_SCHEMA rows."""
+    # the ranges table is tiny (one row per ~64 MB slice): checkpoint
+    # so the count and the read don't each re-run the index pass
+    ranges = ranges.localCheckpoint(eager=True)
+    n_ranges = ranges.count()
+    src = ranges.repartition(max(1, min(n_ranges, 2048)), "path", "start")
+    return _read_ranges(src)
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed WARC reader: binaryFile source (one task per file —
-    the crawl's natural parallelism unit) + mapInArrow incremental
-    record split.  Rows leave the task as bounded Arrow batches
-    (``_BATCH_RECORDS`` / ``_BATCH_BYTES``), so task heap never scales
-    with the RAW archive size (peak profile in the module docstring;
-    measured in bench/warc_stress.py).  Malformed members/records
-    become ``rec_type='error'`` rows.  Returns WARC_SCHEMA rows."""
-    import pyarrow as pa
+    """Distributed WARC reader: one range per file — a binaryFile
+    listing of (path, length), which never loads ``content``, so files
+    of any size read and Spark packs them into tasks by size — parsed
+    by :func:`_read_ranges` with an incremental record split and
+    bounded Arrow batches (peak profile in the module docstring;
+    measured in bench/warc_stress.py).  ``rec_offset`` is absolute in
+    the file's decompressed stream.  Malformed members/records become
+    ``rec_type='error'`` rows.  Returns WARC_SCHEMA rows.
 
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    files = spark.read.format("binaryFile").load(path).select(
-        F.col("path").alias("file"), "content"
+    Files open through ``pyarrow.fs``, not Hadoop's file system layer:
+    local paths and file://, hdfs:// (with libhdfs), s3:// and gs://
+    are read; Hadoop-only schemes such as s3a:// or abfs:// are not."""
+    files = spark.read.format("binaryFile").load(path)
+    return _read_ranges(
+        files.select(
+            "path", F.lit(0).cast("long").alias("start"), F.col("length").alias("end")
+        )
     )
-
-    def split(batches):
-        out_schema = to_arrow_schema(WARC_SCHEMA)
-        rows: list[dict] = []
-        nbytes = 0
-        for batch in batches:
-            for path_, content in zip(
-                batch.column("file").to_pylist(),
-                batch.column("content").to_pylist(),
-            ):
-                fname = path_.rsplit("/", 1)[-1]
-                for rec in scan_warc_file(fname, bytes(content)):
-                    rows.append(rec)
-                    nbytes += len(rec["payload"])
-                    if len(rows) >= _BATCH_RECORDS or nbytes >= _BATCH_BYTES:
-                        yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
-                        rows, nbytes = [], 0
-        if rows:
-            yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
-
-    return files.mapInArrow(split, schema=WARC_SCHEMA)

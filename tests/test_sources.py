@@ -50,14 +50,18 @@ def test_trailing_garbage_becomes_error_row_not_exception():
 
 
 def test_read_warc_distributed_multi_file(spark, tmp_path: Path):
+    # a directory name that is not a valid URI unescaped: Spark lists
+    # it as "file:/.../crawl 1%" and the reader must still open it
+    base = tmp_path / "crawl 1%"
+    base.mkdir()
     for i, gz in ((0, True), (1, False)):
         recs = [
             ("response", f"https://s{i}.example/{j}", f"doc {i}-{j}".encode())
             for j in range(5)
         ]
         suffix = ".warc.gz" if gz else ".warc"
-        (tmp_path / f"f{i}{suffix}").write_bytes(warc_file_bytes(recs, gz=gz))
-    df = read_warc(spark, str(tmp_path / "f*.warc*"))
+        (base / f"f{i}{suffix}").write_bytes(warc_file_bytes(recs, gz=gz))
+    df = read_warc(spark, str(base / "f*.warc*"))
     rows = df.collect()
     assert len(rows) == 10
     by_file = {}
@@ -117,11 +121,11 @@ def test_record_spanning_gzip_members():
         with _gz.GzipFile(fileobj=buf, mode="wb", mtime=0) as g:
             g.write(raw[i:i + 301])
         out.write(buf.getvalue())
-    from ffp_spark.sources import _gunzip_chunks, _RecordScanner
+    from ffp_spark.sources import _gunzip_stream, _RecordScanner
 
     s = _RecordScanner()
     recs = []
-    for chunk in _gunzip_chunks(out.getvalue()):
+    for chunk in _gunzip_stream([out.getvalue()]):
         recs += s.feed(chunk)
     recs += s.finish()
     assert [(r["rec_type"], r["payload"]) for r in recs] == [
@@ -136,28 +140,66 @@ def test_gunzip_chunks_window_is_bounded():
     import gzip as _gz
     import io as _io
 
-    from ffp_spark.sources import _OUT_CAP, _gunzip_chunks
+    from ffp_spark.sources import _OUT_CAP, _gunzip_stream
 
     buf = _io.BytesIO()
     with _gz.GzipFile(fileobj=buf, mode="wb", mtime=0) as g:
         g.write(b"z" * (64 << 20))
     total = 0
-    for chunk in _gunzip_chunks(buf.getvalue()):
+    for chunk in _gunzip_stream([buf.getvalue()]):
         assert len(chunk) <= _OUT_CAP
         total += len(chunk)
     assert total == 64 << 20
 
 
 def test_corrupt_gzip_member_becomes_error_row(spark, tmp_path: Path):
+    import random
+
+    from ffp_spark.sources import read_warc_ranges, warc_split_ranges
+
     good = warc_file_bytes([("response", "https://ok.example/", b"fine")], gz=True)
-    corrupt = good + b"\x1f\x8b\x08\x00CORRUPTED-NOT-DEFLATE-DATA"
-    (tmp_path / "c.warc.gz").write_bytes(corrupt)
-    rows = read_warc(spark, str(tmp_path / "c.warc.gz")).collect()
-    by_type = {r.rec_type: r for r in rows}
-    assert set(by_type) == {"response", "error"}
-    assert bytes(by_type["response"].payload) == b"fine"
-    # the undecompressed remainder is preserved in the error row
-    assert bytes(by_type["error"].payload).startswith(b"\x1f\x8b\x08\x00CORRUPT")
+    # > 1 MiB of good members after the corrupt one: the error row must
+    # hold all of them, not only the read chunk the error hit
+    tail = warc_file_bytes(
+        [
+            ("response", f"https://t.example/{j}", random.Random(j).randbytes(1 << 20))
+            for j in range(3)
+        ],
+        gz=True,
+    )
+    data = good + b"\x1f\x8b\x08\x00CORRUPTED-NOT-DEFLATE-DATA" + tail
+    (tmp_path / "c.warc.gz").write_bytes(data)
+    ranges = warc_split_ranges(spark, str(tmp_path / "c.warc.gz"))
+    assert [(r.start, r.end) for r in ranges.collect()] == [(0, len(data))]
+    for rows in (
+        read_warc(spark, str(tmp_path / "c.warc.gz")).collect(),
+        read_warc_ranges(spark, ranges).collect(),
+    ):
+        assert sorted(r.rec_type for r in rows) == ["error", "response"]
+        by_type = {r.rec_type: r for r in rows}
+        assert bytes(by_type["response"].payload) == b"fine"
+        # the undecompressed remainder is preserved in the error row
+        assert bytes(by_type["error"].payload) == data[len(good):]
+
+
+def test_read_warc_file_over_binaryfile_max_length(spark, tmp_path: Path):
+    # read_warc never loads binaryFile's content column, so an archive
+    # larger than binaryFile.maxLength still reads in full
+    recs = [
+        ("response", f"https://big.example/{j}", f"payload-{j}".encode())
+        for j in range(40)
+    ]
+    data = warc_file_bytes(recs, gz=True)
+    (tmp_path / "big.warc.gz").write_bytes(data)
+    key = "spark.sql.sources.binaryFile.maxLength"
+    spark.conf.set(key, str(len(data) - 1))
+    try:
+        rows = read_warc(spark, str(tmp_path / "big.warc.gz")).collect()
+    finally:
+        spark.conf.unset(key)
+    assert sorted((r.target_uri, bytes(r.payload)) for r in rows) == sorted(
+        (u, p) for (_, u, p) in recs
+    )
 
 
 def test_read_warc_many_records_bounded_batches(spark, tmp_path: Path):
