@@ -11,9 +11,12 @@
 On a real cluster the same invocation takes --master yarn/k8s and the
 same --py-files zip; everything else is identical (north rule K12).
 
-A committed snapshot is final: re-running its --snapshot-id prints the
-report from its manifests and runs no Spark job (--no-resume recomputes
-and overwrites it).  Late pages go to a new snapshot id with
+A snapshot is committed when its lineage manifest is written, after
+every other table; until then reads serve the previous committed
+snapshot.  A committed snapshot is final: re-running its --snapshot-id
+prints the report from its manifests and runs no Spark job.
+--no-resume first removes its lineage manifest (un-commits it), then
+recomputes and overwrites it.  Late pages go to a new snapshot id with
 --incremental-from <id>.
 """
 

@@ -53,7 +53,7 @@ from .cc import components_local
 from .linking import author_norm, local_star_edges
 from .metrics import error_histogram, partition_lineage
 from .schemas import PRED_AUTHOR
-from .snapshots import read_manifest, read_snapshot, snapshots_of, write_snapshot
+from .snapshots import read_manifest, read_snapshot, snapshots_of, uncommit, write_snapshot
 from .triples import emit_triples
 from .udfs import parse_pages
 
@@ -422,13 +422,16 @@ def run_snapshot(
     """Process one snapshot of the PAGES table into committed KG tables.
 
     A committed snapshot is final.  It is committed once its lineage
-    manifest exists, and with ``resume=True`` a re-run returns its report
-    from the manifests (``pages`` 0, ``errors`` empty, the committed row
-    counts) and runs no Spark job; ``resume=False`` recomputes and
-    overwrites it.  Late pages go to a new snapshot with
-    ``incremental_from=<id>``.  A crash before the lineage commit leaves
-    no manifest, so the re-run re-derives everything; there are no
-    per-part commits to resume from within a run.
+    manifest exists (the root's one commit point: until then every
+    table's read with no id serves the previous committed snapshot), and
+    with ``resume=True`` a re-run returns its report from the manifests
+    (``pages`` 0, ``errors`` empty, the committed row counts) and runs no
+    Spark job.  ``resume=False`` first removes its lineage manifest, so
+    the snapshot is uncommitted while it is recomputed and overwritten.
+    Late pages go to a new snapshot with ``incremental_from=<id>``.  A
+    crash before the lineage commit leaves no manifest, so the re-run
+    re-derives everything; there are no per-part commits to resume from
+    within a run.
     Incremental: with ``incremental_from=<parent snapshot id>``, urls the
     parent already saw are anti-joined away and the parent's triples are
     kept.  Kept triples are re-linked and re-materialized with this run's,
@@ -446,6 +449,7 @@ def run_snapshot(
         return {"snapshot_id": snapshot_id, "pages": 0, "triples": rows["triples"],
                 "nodes": rows["nodes"], "edges": rows["edges"],
                 "lineage_rows": rows["lineage"], "errors": {}}
+    uncommit(out_root, snapshot_id)
     # lineage rows carry the run's wall-clock bracket (SURVEY §1.2
     # schema): started_ts = run entry, finished_ts = after the data
     # commits.  Commit metadata is the one place wall clock is allowed
@@ -540,6 +544,7 @@ def run_snapshot(
 
         # commit protocol: data tables first, lineage LAST — the lineage
         # commit marks this snapshot final, so a crash anywhere earlier
+        # leaves every default read on the previous snapshot and
         # re-derives everything on the next run.
         # The data tables and the error histogram run CONCURRENTLY
         # (independent dirs and jobs): overlapping them hides per-job

@@ -1,29 +1,38 @@
 """Snapshot/manifest layer emulating Iceberg semantics (operators K8-K9).
 
 No Iceberg runtime jar ships in this sandbox, so tables are partitioned
-Parquet directories plus a JSON manifest per snapshot and an atomically
-swapped CURRENT pointer:
+Parquet directories plus a JSON manifest per snapshot:
 
     <table>/
       snap-<id>/...parquet          (data, written to a temp dir first)
       manifest-<id>.json            (snapshot id, parent, row count, stats)
-      CURRENT                       (text file naming the live snapshot)
 
-Commit protocol: write data under ``_tmp-<id>``, fsync manifest, then
-``os.replace`` both into place — readers never observe a half-written
-snapshot (same guarantee Iceberg gets from its metadata swap).
+Commit protocol: write data under ``_tmp-<id>``, ``os.replace`` it into
+``snap-<id>``, then fsync-swap the manifest into place.  A table's
+manifest is the proof that its data is complete; readers never observe
+a half-written snapshot.
+
+One commit point per snapshot: a root that holds a ``lineage`` table
+commits snapshot ``<id>`` when ``lineage/manifest-<id>.json`` swaps in
+(the pipeline commits lineage last), the way Iceberg commits a
+multi-file change through one metadata-pointer swap.  A read with no id
+serves, for every table, the newest committed id that has a manifest
+for that table (:func:`current_snapshot_id`), so a run that fails
+between its table commits leaves every default read on the previous
+snapshot.  A root with no lineage table (a standalone library table)
+has no commit marker: there each table's newest manifest is its commit.
+
 The pipeline commits every table with ``write_snapshot`` and serves it
 with ``read_snapshot``, which takes the schema from the manifest and so
 runs no Spark job.  The catalog-bucketed pair (``write_snapshot_bucketed``,
 ``read_snapshot_bucketed``) serves only the traced replay and the plan
 tests.
 
-Resume (K9): a snapshot is committed once its lineage manifest exists
-(the pipeline commits lineage last), and a committed snapshot is final:
-``pipeline.run_snapshot`` re-run on it returns its manifests, and late
-pages go to an incremental snapshot (``incremental_from=<id>``).  The
-per-partition lineage rows record what each url-hash part held; they
-are not a per-part resume point.
+Resume (K9): a committed snapshot is final: ``pipeline.run_snapshot``
+re-run on it returns its manifests, and late pages go to an incremental
+snapshot (``incremental_from=<id>``).  The per-partition lineage rows
+record what each url-hash part held; they are not a per-part resume
+point.
 """
 
 from __future__ import annotations
@@ -45,19 +54,52 @@ def _table_dir(root: str | Path, name: str) -> Path:
     return Path(root).resolve() / name
 
 
-def _fsync_replace(tmp: Path, final: Path) -> None:
-    """fsync file contents, rename into place, fsync the directory entry."""
-    fd = os.open(tmp, os.O_RDONLY)
+# the table whose manifest commits a snapshot id for the whole root
+_COMMIT_TABLE = "lineage"
+
+
+def _fsync(path: Path) -> None:
+    fd = os.open(path, os.O_RDONLY)
     try:
         os.fsync(fd)
     finally:
         os.close(fd)
+
+
+def _fsync_replace(tmp: Path, final: Path) -> None:
+    """fsync file contents, rename into place, fsync the directory entry."""
+    _fsync(tmp)
     os.replace(tmp, final)
-    dfd = os.open(final.parent, os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
+    _fsync(final.parent)
+
+
+def _committed_ids(root: str | Path, table: str) -> list[int]:
+    """The committed snapshot ids that have a manifest for ``table``,
+    ascending: ids with a lineage manifest in a root with a lineage
+    table, else every id with a manifest for ``table``."""
+    ids = snapshots_of(root, table)
+    if _table_dir(root, _COMMIT_TABLE).is_dir():
+        committed = set(snapshots_of(root, _COMMIT_TABLE))
+        ids = [i for i in ids if i in committed]
+    return ids
+
+
+def current_snapshot_id(root: str | Path, table: str) -> Optional[int]:
+    """The snapshot a read of ``table`` with no id serves: the newest
+    committed id that has a manifest for it, or None."""
+    ids = _committed_ids(root, table)
+    return ids[-1] if ids else None
+
+
+def uncommit(root: str | Path, snapshot_id: int) -> None:
+    """Durably remove ``snapshot_id``'s lineage manifest before a run
+    writes it, so a recompute that fails partway leaves it uncommitted.
+    The lineage directory it creates makes a fresh root serve only
+    lineage-committed ids from the run's first write on."""
+    ldir = _table_dir(root, _COMMIT_TABLE)
+    ldir.mkdir(parents=True, exist_ok=True)
+    (ldir / f"manifest-{snapshot_id}.json").unlink(missing_ok=True)
+    _fsync(ldir)
 
 
 def _commit(
@@ -71,8 +113,9 @@ def _commit(
 ) -> dict[str, Any]:
     """The commit protocol both writers share: ``stage`` writes the data
     under ``_tmp-<id>``, which is ``os.replace``'d into ``snap-<id>``;
-    then the manifest and CURRENT swap in with fsync.  ``spec`` lists
-    the writer's layout fields for the manifest."""
+    then the manifest swaps in with fsync.  The manifest's parent is the
+    newest committed id below ``snapshot_id``.  ``spec`` lists the
+    writer's layout fields for the manifest."""
     tdir = _table_dir(root, table)
     tdir.mkdir(parents=True, exist_ok=True)
     tmp = tdir / f"_tmp-{snapshot_id}"
@@ -87,7 +130,9 @@ def _commit(
     manifest = {
         "table": table,
         "snapshot_id": snapshot_id,
-        "parent_snapshot_id": current_snapshot_id(root, table),
+        "parent_snapshot_id": max(
+            (i for i in _committed_ids(root, table) if i < snapshot_id), default=None
+        ),
         "row_count": int(obs.get["n"]),
         **spec,
         "schema": df.schema.jsonValue(),
@@ -103,10 +148,6 @@ def _commit(
     mtmp = tdir / f"_manifest-{snapshot_id}.json.tmp"
     mtmp.write_text(json.dumps(manifest, indent=2))
     _fsync_replace(mtmp, mpath)
-
-    ctmp = tdir / "_CURRENT.tmp"
-    ctmp.write_text(str(snapshot_id))
-    _fsync_replace(ctmp, tdir / "CURRENT")
     return manifest
 
 
@@ -129,16 +170,6 @@ def write_snapshot(
     return _commit(
         df, root, table, snapshot_id, stage, {"partition_by": partition_by or []}, extra
     )
-
-
-def current_snapshot_id(root: str | Path, table: str) -> Optional[int]:
-    cur = _table_dir(root, table) / "CURRENT"
-    if not cur.exists():
-        return None
-    try:
-        return int(cur.read_text().strip())
-    except ValueError:
-        return None
 
 
 def read_snapshot(

@@ -146,8 +146,9 @@ class _RecordScanner:
     the tail.  Uses the Content-Length header to jump payloads — never
     scans payload bytes for record markers (payloads may contain
     'WARC/1.0').  Once the stream stops looking like WARC (garbage
-    where a header should start, or a Content-Length that cannot be
-    parsed so the payload cannot be jumped) the scanner goes
+    where a header should start, a Content-Length that cannot be
+    parsed so the payload cannot be jumped, or a stream that ends
+    before the payload does) the scanner goes
     *poisoned*: everything from that point becomes one error row at
     ``finish()`` — the error-row discipline, incrementally.
 
@@ -209,6 +210,9 @@ class _RecordScanner:
             rec_end = body_start + clen + 4  # payload + CRLF CRLF
             if n < rec_end and not final:
                 break  # record incomplete; wait for more bytes
+            if n < body_start + clen:
+                self._poisoned = True  # stream ends inside the payload
+                break
             payload = bytes(buf[body_start:body_start + clen])
             try:
                 headers = {k.decode(): v.decode() for k, v in raw_pairs}

@@ -48,7 +48,8 @@ class TestSnapshots:
             assert back.columns == cols
             assert back.dtypes == inferred.dtypes
             assert back.count() == 100
-        assert current_snapshot_id(tmp_path, "t") == 1
+        # no lineage table: each table's newest manifest is its commit
+        assert current_snapshot_id(tmp_path, "t") == current_snapshot_id(tmp_path, "p") == 1
 
     def test_snapshot_evolution_and_time_travel(self, spark, tmp_path):
         write_snapshot(spark.range(10), tmp_path, "t", snapshot_id=1)
@@ -58,13 +59,30 @@ class TestSnapshots:
         assert read_snapshot(spark, tmp_path, "t", snapshot_id=1).count() == 10
         m2 = read_manifest(tmp_path, "t", 2)
         assert m2["parent_snapshot_id"] == 1
+        # with a lineage table, only ids with a lineage manifest are
+        # committed: a table manifest for snapshot 2 alone is not served
+        root = tmp_path / "lineage_root"
+        write_snapshot(spark.range(10), root, "t", snapshot_id=1)
+        write_snapshot(spark.range(1), root, "lineage", snapshot_id=1)
+        write_snapshot(spark.range(25), root, "t", snapshot_id=2)
+        assert current_snapshot_id(root, "t") == 1
+        assert read_snapshot(spark, root, "t").count() == 10
+        assert read_manifest(root, "t", 2)["parent_snapshot_id"] == 1
 
     def test_no_partial_snapshot_visible(self, spark, tmp_path):
-        # CURRENT pointer only moves after data+manifest are in place
+        # a snapshot is served only once its data and manifest are in
+        # place: a write that fails leaves the default read where it was
         write_snapshot(spark.range(5), tmp_path, "t", snapshot_id=7)
         tdir = tmp_path / "t"
         assert not list(tdir.glob("_tmp-*"))
-        assert (tdir / "CURRENT").read_text().strip() == "7"
+        assert current_snapshot_id(tmp_path, "t") == 7
+        failing = spark.range(9).where(F.assert_true(F.col("id") < 0).isNull())
+        with pytest.raises(Exception):
+            write_snapshot(failing, tmp_path, "t", snapshot_id=8)
+        assert snapshots_of(tmp_path, "t") == [7]
+        assert current_snapshot_id(tmp_path, "t") == 7
+        assert read_snapshot(spark, tmp_path, "t").count() == 5
+        assert not list(tmp_path.rglob("CURRENT"))
 
     def test_commit_is_single_scan(self, spark, tmp_path):
         # row count comes from df.observe during the write — exactly one
@@ -247,6 +265,94 @@ class TestPipeline:
         assert rep_jobs <= ref_jobs
         t = read_snapshot(spark, tmp_path, "triples", snapshot_id=2)
         assert t.count() == ref["triples"]
+
+    def test_failed_data_commit_leaves_every_default_read_on_the_last_snapshot(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The lineage manifest is the one commit point: a snapshot-2 run
+        whose nodes write raises leaves every table's default read and
+        analyze_snapshot on snapshot 1, and the resumed re-run commits
+        the rows and manifests of a run that never failed."""
+        import importlib.util
+        import shutil
+        from collections import Counter
+        from pathlib import Path
+
+        import ffp_spark.pipeline as P
+        from ffp_spark.graph import analyze_snapshot
+        from ffp_spark.snapshots import write_snapshot as real_ws
+
+        tables = ("triples", "nodes", "edges", "pages_seen", "lineage")
+        root, ref = tmp_path / "failed", tmp_path / "undisturbed"
+        run_snapshot(spark, synth_pages(spark, 60, seed=3), str(root), snapshot_id=1, n_parts=4)
+        shutil.copytree(root, ref)
+        run_snapshot(spark, synth_pages(spark, 100, seed=3), str(ref), snapshot_id=2, n_parts=4)
+
+        def failing_nodes(df, out_root, table, snapshot_id, **kw):
+            if table == "nodes":
+                raise RuntimeError("simulated nodes write failure")
+            return real_ws(df, out_root, table, snapshot_id, **kw)
+
+        monkeypatch.setattr(P, "write_snapshot", failing_nodes)
+        with pytest.raises(RuntimeError, match="nodes write"):
+            run_snapshot(spark, synth_pages(spark, 100, seed=3), str(root), snapshot_id=2, n_parts=4)
+        monkeypatch.setattr(P, "write_snapshot", real_ws)
+        assert 2 in snapshots_of(root, "edges")  # committed data, not served
+
+        def rows(table, sid=None):
+            return Counter(map(tuple, read_snapshot(spark, root, table, sid).collect()))
+
+        for t in tables:
+            assert current_snapshot_id(root, t) == 1, t
+            assert rows(t) == rows(t, 1), t
+
+        def reports(sid=None):
+            out = analyze_snapshot(spark, root, sid, pr_iters=2, top_k=5)
+            return {k: sorted(map(tuple, df.collect())) for k, df in out.items()}
+
+        assert reports() == reports(1)
+
+        run_snapshot(spark, synth_pages(spark, 100, seed=3), str(root), snapshot_id=2, n_parts=4)
+        assert {t: read_manifest(root, t, 2)["parent_snapshot_id"] for t in tables} == dict.fromkeys(
+            tables, 1
+        )
+        tool = Path(__file__).resolve().parent.parent / "tools" / "compare_snapshots.py"
+        spec = importlib.util.spec_from_file_location("compare_snapshots", tool)
+        compare = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(compare)
+        assert compare.main([str(root), str(ref)]) == 0
+        assert not list(tmp_path.rglob("CURRENT"))
+
+    def test_no_resume_uncommits_before_it_overwrites(self, spark, tmp_path, monkeypatch):
+        """Nothing is served before a lineage commit, after a failed first
+        run too, and resume=False un-commits a committed snapshot before
+        recomputing it, so a recompute that fails partway leaves it
+        uncommitted."""
+        import ffp_spark.pipeline as P
+        from ffp_spark.snapshots import write_snapshot as real_ws
+
+        def failing_edges(df, out_root, table, snapshot_id, **kw):
+            if table == "edges":
+                raise RuntimeError("simulated edges write failure")
+            return real_ws(df, out_root, table, snapshot_id, **kw)
+
+        pages = synth_pages(spark, 40, seed=3)
+        monkeypatch.setattr(P, "write_snapshot", failing_edges)
+        with pytest.raises(RuntimeError, match="edges write"):
+            run_snapshot(spark, pages, str(tmp_path), snapshot_id=1, n_parts=4)
+        assert 1 in snapshots_of(tmp_path, "triples")
+        assert current_snapshot_id(tmp_path, "triples") is None
+
+        monkeypatch.setattr(P, "write_snapshot", real_ws)
+        run_snapshot(spark, pages, str(tmp_path), snapshot_id=1, n_parts=4)
+        assert current_snapshot_id(tmp_path, "triples") == 1
+
+        monkeypatch.setattr(P, "write_snapshot", failing_edges)
+        with pytest.raises(RuntimeError, match="edges write"):
+            run_snapshot(spark, pages, str(tmp_path), snapshot_id=1, n_parts=4, resume=False)
+        assert 1 not in snapshots_of(tmp_path, "lineage")
+        with pytest.raises(FileNotFoundError):
+            read_snapshot(spark, tmp_path, "triples")
 
     def test_incremental_snapshot_processes_only_new_urls(self, spark, tmp_path):
         """An incremental snapshot 2 commits the rows of a full build of the

@@ -49,6 +49,17 @@ def test_trailing_garbage_becomes_error_row_not_exception():
     assert got[1]["payload"] == b"NOT A RECORD"
 
 
+def test_truncated_record_becomes_error_row():
+    # the stream ends 50 bytes before the second record's payload does:
+    # that record's bytes, from its header on, are one error row
+    data = warc_file_bytes([("response", "u", b"ok"), ("response", "v", b"x" * 100)])
+    got = parse_warc_bytes(data[:-50])
+    assert [r["rec_type"] for r in got] == ["response", "error"]
+    start = len(warc_file_bytes([("response", "u", b"ok")]))
+    assert got[1]["rec_offset"] == start
+    assert got[1]["payload"] == data[start:-50]
+
+
 def test_read_warc_distributed_multi_file(spark, tmp_path: Path):
     # a directory name that is not a valid URI unescaped: Spark lists
     # it as "file:/.../crawl 1%" and the reader must still open it

@@ -1,17 +1,22 @@
-"""Compare the committed KG tables of two snapshot roots, row by row.
+"""Compare the committed KG tables of two snapshot roots: rows and manifests.
 
 Usage:
     python tools/compare_snapshots.py ROOT_A ROOT_B [--snapshot-id N]
 
 Reads the committed ``triples``, ``nodes``, ``edges``, ``lineage`` and
 ``pages_seen`` tables of both roots with pyarrow (no JVM).  Without
-``--snapshot-id`` each table's CURRENT snapshot is used.  Lineage is
-compared without its wall-clock ``started_ts``/``finished_ts`` columns.
-Rows are compared as sorted multisets over the columns both sides share;
-a column present on only one side is listed, not compared.
+``--snapshot-id`` each root serves each table's default snapshot by the
+commit rule of ``ffp_spark.snapshots.current_snapshot_id`` (the newest
+id whose lineage manifest exists).  Lineage is compared without its
+wall-clock ``started_ts``/``finished_ts`` columns.  Rows are compared as
+sorted multisets over the columns both sides share; a column present on
+only one side is listed, not compared.  Each table's manifest fields
+``row_count``, ``parent_snapshot_id``, ``partition_by``, ``schema`` and
+``extra`` are compared next to its rows.
 
 Prints one line per table, then one JSON summary as the last stdout
-line.  Exits 1 if any table differs in rows or is missing on a side.
+line.  Exits 1 if any table differs in rows or manifest fields, or is
+missing on a side.
 """
 
 from __future__ import annotations
@@ -25,31 +30,29 @@ from typing import Any, Optional
 
 import pyarrow.dataset as ds
 
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from ffp_spark.snapshots import current_snapshot_id, read_manifest  # noqa: E402
+
 TABLES = ("triples", "nodes", "edges", "lineage", "pages_seen")
 IGNORED = {"lineage": {"started_ts", "finished_ts"}}
-
-
-def _snapshot_id(tdir: Path, snapshot_id: Optional[int]) -> Optional[int]:
-    if snapshot_id is not None:
-        return snapshot_id
-    cur = tdir / "CURRENT"
-    return int(cur.read_text().strip()) if cur.exists() else None
+MANIFEST_FIELDS = ("row_count", "parent_snapshot_id", "partition_by", "schema", "extra")
 
 
 def _read(root: Path, table: str, snapshot_id: Optional[int]):
-    """(column names, rows) of one committed snapshot, or None if absent."""
+    """(manifest, column names, rows) of one committed snapshot, or None
+    if absent."""
+    sid = current_snapshot_id(root, table) if snapshot_id is None else snapshot_id
     tdir = root / table
-    sid = _snapshot_id(tdir, snapshot_id)
     if sid is None or not (tdir / f"manifest-{sid}.json").exists():
         return None
-    manifest = json.loads((tdir / f"manifest-{sid}.json").read_text())
-    snap = tdir / f"snap-{sid}"
-    dataset = ds.dataset(snap, format="parquet", partitioning="hive")
+    manifest = read_manifest(root, table, sid)
+    dataset = ds.dataset(tdir / f"snap-{sid}", format="parquet", partitioning="hive")
     if not dataset.files:
         # an empty partitioned/bucketed commit writes no data file
-        return [f["name"] for f in manifest["schema"]["fields"]], []
+        return manifest, [f["name"] for f in manifest["schema"]["fields"]], []
     data = dataset.to_table()
-    return data.column_names, data.to_pylist()
+    return manifest, data.column_names, data.to_pylist()
 
 
 def _freeze(v: Any) -> Any:
@@ -65,7 +68,7 @@ def compare_table(root_a: Path, root_b: Path, table: str, snapshot_id: Optional[
     b = _read(root_b, table, snapshot_id)
     if a is None or b is None:
         return {"missing_in": [n for n, t in (("a", a), ("b", b)) if t is None]}
-    (cols_a, rows_a), (cols_b, rows_b) = a, b
+    (man_a, cols_a, rows_a), (man_b, cols_b, rows_b) = a, b
     ignored = IGNORED.get(table, set())
     shared = [c for c in cols_a if c in cols_b and c not in ignored]
 
@@ -79,6 +82,8 @@ def compare_table(root_a: Path, root_b: Path, table: str, snapshot_id: Optional[
         return [list(map(repr, r)) for r in sorted(c, key=repr)[:3]]
 
     return {
+        "snapshot_ids": [man_a["snapshot_id"], man_b["snapshot_id"]],
+        "manifest_diff": [f for f in MANIFEST_FIELDS if man_a.get(f) != man_b.get(f)],
         "rows_a": len(rows_a),
         "rows_b": len(rows_b),
         "compared_columns": shared,
@@ -106,19 +111,21 @@ def main(argv: Optional[list[str]] = None) -> int:
             print(f"{name}: MISSING in {', '.join(r['missing_in'])}")
             continue
         same = r["rows_only_a"] == 0 and r["rows_only_b"] == 0
-        identical &= same
+        identical &= same and not r["manifest_diff"]
         extra = ""
         if r["columns_only_a"] or r["columns_only_b"]:
             extra = f" (only in a: {r['columns_only_a']}, only in b: {r['columns_only_b']})"
+        manifest = f"DIFF in {r['manifest_diff']}" if r["manifest_diff"] else "SAME"
         print(
             f"{name}: {'SAME' if same else 'DIFF'} rows {r['rows_a']} vs {r['rows_b']}, "
-            f"{r['rows_only_a']} only in a, {r['rows_only_b']} only in b{extra}"
+            f"{r['rows_only_a']} only in a, {r['rows_only_b']} only in b{extra}; "
+            f"manifest {manifest} (snapshots {r['snapshot_ids'][0]} vs {r['snapshot_ids'][1]})"
         )
     summary = {
         "root_a": str(args.root_a),
         "root_b": str(args.root_b),
         "snapshot_id": args.snapshot_id,
-        "identical_rows": identical,
+        "identical": identical,
         "tables": {
             n: {k: v for k, v in r.items() if not k.startswith("sample") or v}
             for n, r in tables.items()
