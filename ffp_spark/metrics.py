@@ -1,8 +1,11 @@
 """Lineage + quality metrics (operator K10).
 
-* per-partition lineage rows: counts per (snapshot_id, part_id) for
-  pages/parsed/errors/entries/triples,
-* error-class histogram (reference S11's error taxonomy as a groupBy),
+* one small aggregate per snapshot (:func:`snapshot_counts`): pages,
+  entries and triples per (part_id, error_class), folded on the driver
+  into the per-partition lineage rows, the error-class histogram
+  (reference S11's error taxonomy) and the page count,
+* the DataFrame forms of lineage and the histogram, kept as the
+  aggregate's differential reference,
 * triple-level precision/recall vs a golden triple set via exact-match
   join on (subj, pred, obj, src_url) — the BASELINE.json north metric
   (P >= 0.95 and R >= 0.95).
@@ -10,11 +13,67 @@
 
 from __future__ import annotations
 
+from collections import Counter, defaultdict
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 
+def snapshot_counts(
+    parsed: DataFrame, triples: DataFrame, snapshot_id: int
+) -> tuple[pa.Table, dict[str, int], int]:
+    """(lineage, error histogram, page count) of one snapshot's parse.
+
+    One grouped aggregate sums pages, entries and triples per
+    (part_id, error_class) over ``parsed`` unioned with ``triples``
+    (one row per triple, with the ``part_id`` of its page); the driver
+    collects its at most n_parts x error classes rows and folds them.
+    ``udfs`` sets ``error`` and ``error_class`` together, so a null class
+    is a parsed page.  Lineage is an Arrow table with one row per part
+    of ``parsed``: part_id, n_pages, n_parsed, n_errors, n_entries,
+    n_triples, snapshot_id, status."""
+    zero = F.lit(0)
+    rows = (
+        parsed.select(
+            "part_id", "error_class", F.lit(1).alias("pages"),
+            F.coalesce(F.size("entries"), zero).alias("entries"), zero.alias("triples"),
+        )
+        .unionByName(triples.select(
+            "part_id", F.lit(None).cast("string").alias("error_class"),
+            zero.alias("pages"), zero.alias("entries"), F.lit(1).alias("triples"),
+        ))
+        .groupBy("part_id", "error_class")
+        .agg(*(F.sum(c).alias(c) for c in ("pages", "entries", "triples")))
+        .collect()
+    )
+    parts: dict[int, Counter] = defaultdict(Counter)
+    errors: Counter = Counter()
+    for r in rows:
+        p = parts[r.part_id]
+        p["n_pages"] += r.pages
+        p["n_parsed" if r.error_class is None else "n_errors"] += r.pages
+        p["n_entries"] += r.entries
+        p["n_triples"] += r.triples
+        if r.error_class is not None:
+            errors[r.error_class] += r.pages
+    ids = sorted(parts)
+    counts = ("n_pages", "n_parsed", "n_errors", "n_entries", "n_triples")
+    lineage = pa.table({
+        "part_id": pa.array(ids, pa.int32()),
+        **{c: pa.array([parts[i][c] for i in ids], pa.int64()) for c in counts},
+        "snapshot_id": pa.array([snapshot_id] * len(ids), pa.int32()),
+        "status": pa.array(["done"] * len(ids), pa.string()),
+    })
+    return lineage, dict(errors), sum(p["n_pages"] for p in parts.values())
+
+
 def partition_lineage(parsed: DataFrame, snapshot_id: int) -> DataFrame:
-    """Counts per explicit part_id (url-hash partition), map-side combined."""
+    """Counts per explicit part_id (url-hash partition), map-side combined.
+
+    The differential reference for :func:`snapshot_counts`' lineage:
+    its callers are the traced replay (``perfbench/replay.py``) and the
+    aggregate's differential test, and it goes with the replay (ROADMAP
+    Direction 1)."""
     return (
         parsed.groupBy("part_id")
         .agg(
@@ -29,6 +88,12 @@ def partition_lineage(parsed: DataFrame, snapshot_id: int) -> DataFrame:
 
 
 def error_histogram(parsed: DataFrame) -> DataFrame:
+    """Pages per non-null ``error_class``.
+
+    The differential reference for :func:`snapshot_counts`' histogram:
+    its callers are the traced replay (``perfbench/replay.py``), the
+    aggregate's differential test and ``tests/test_parse_stage.py``, and
+    it goes with the replay (ROADMAP Direction 1)."""
     return (
         parsed.filter(F.col("error_class").isNotNull())
         .groupBy("error_class")

@@ -25,9 +25,11 @@ Scale design notes (100 TB / 1000 executors):
 * meta-refresh resolution is one job when no page redirects; otherwise
   it parses only the target pages and walks the chains on the driver;
 * per-stage caching is limited to the raw parse, the redirect targets'
-  parse and one checkpoint of the redirect-resolved parse, which both
-  the triple and linking branches consume; the report's page count
-  rides that checkpoint;
+  parse and one checkpoint of the redirect-resolved parse, which the
+  triple, linking and count branches consume;
+* lineage, the error histogram and the page count come from one small
+  grouped aggregate of that checkpoint, folded on the driver
+  (:func:`metrics.snapshot_counts`); it runs beside the data commits;
 * ``run_snapshot`` is one straight-line function: the data tables
   commit concurrently, under the caller's job group, lineage last (the
   completion marker).  A committed snapshot is final: a resumed re-run
@@ -46,12 +48,12 @@ from functools import reduce
 from typing import Any, Optional
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
 from .cc import components_local
 from .linking import author_norm, local_star_edges
-from .metrics import error_histogram, partition_lineage
+from .metrics import snapshot_counts
 from .schemas import PRED_AUTHOR
 from .snapshots import read_manifest, read_snapshot, snapshots_of, uncommit, write_snapshot
 from .triples import emit_triples
@@ -440,9 +442,9 @@ def run_snapshot(
     Pass ``stage_timings={}`` to collect per-stage wall seconds:
     ``parse_sec`` (the raw parse and the redirect resolution, which
     parses the redirect targets), ``link_cc_sec`` (checkpointing the
-    resolved parse, linking and CC), ``agg_sec`` (the error histogram
-    only, which overlaps the data commits) and ``write_sec`` (the
-    commits, lineage last)."""
+    resolved parse, linking and CC) and ``write_sec`` (the commits and,
+    beside them, the lineage and error-histogram aggregate; lineage
+    last)."""
     if resume and snapshot_id in snapshots_of(out_root, "lineage"):
         rows = {t: read_manifest(out_root, t, snapshot_id)["row_count"]
                 for t in ("triples", "nodes", "edges", "lineage")}
@@ -489,17 +491,9 @@ def run_snapshot(
 
         t0 = time.perf_counter()
         # materialize the redirect-resolved PARSED table ONCE: every
-        # downstream job (linking/CC, lineage, error histogram, the
-        # commits) scans it, and Spark would otherwise re-evaluate the
-        # resolve union per job.  The page count rides this job: parse
-        # emits one row per input page, errors included.
-        obs = Observation()
-        parsed = (
-            add_part_id(resolved, n_parts)
-            .observe(obs, F.count(F.lit(1)).alias("pages"))
-            .localCheckpoint(eager=True)
-        )
-        n_pages = int(obs.get["pages"])
+        # downstream job (linking/CC, the counts, the commits) scans it,
+        # and Spark would otherwise re-evaluate the resolve union per job
+        parsed = add_part_id(resolved, n_parts).localCheckpoint(eager=True)
         # link_and_canonicalize links eagerly and returns a driver-local
         # mapping (the broadcast dimension of the author join)
         canon = link_and_canonicalize(parsed, kept_triples=kept_triples)
@@ -508,22 +502,6 @@ def run_snapshot(
         )
         if stage_timings is not None:
             stage_timings["link_cc_sec"] = round(time.perf_counter() - t0, 3)
-
-        # lineage records the parts this run parsed, with their own triples
-        lineage = (
-            partition_lineage(parsed, snapshot_id)
-            .join(
-                add_part_id(emit_triples(parsed), n_parts, "src_url")
-                .groupBy("part_id").agg(F.count("*").alias("n_triples")),
-                "part_id",
-                "left",
-            )
-            .select(
-                "part_id", "n_pages", "n_parsed", "n_errors", "n_entries",
-                F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
-                "snapshot_id", "status",
-            )
-        )
 
         # the seen-url set comes off the MATERIALIZED parsed table
         # (row-identical to the source: one row per input page, same
@@ -535,18 +513,11 @@ def run_snapshot(
         if prior_seen is not None:
             seen = seen.unionByName(add_part_id(prior_seen.select("url"), n_parts))
 
-        def _errors() -> dict[str, int]:
-            t0 = time.perf_counter()
-            errors = {r.error_class: r["count"] for r in error_histogram(parsed).collect()}
-            if stage_timings is not None:
-                stage_timings["agg_sec"] = round(time.perf_counter() - t0, 3)
-            return errors
-
         # commit protocol: data tables first, lineage LAST — the lineage
         # commit marks this snapshot final, so a crash anywhere earlier
         # leaves every default read on the previous snapshot and
         # re-derives everything on the next run.
-        # The data tables and the error histogram run CONCURRENTLY
+        # The data tables and the counts aggregate run CONCURRENTLY
         # (independent dirs and jobs): overlapping them hides per-job
         # latency.  Each worker thread gets its own copy of the caller's
         # local properties (job group, description): one shared copy
@@ -556,7 +527,11 @@ def run_snapshot(
             def submit(fn, *args, **kwargs):
                 return pool.submit(inheritable_thread_target(spark)(fn), *args, **kwargs)
 
-            f_errors = submit(_errors)
+            # lineage counts only this run's triples, not the kept ones
+            f_counts = submit(
+                snapshot_counts, parsed,
+                add_part_id(emit_triples(parsed), n_parts, "src_url"), snapshot_id,
+            )
             f_triples = submit(
                 write_snapshot, triples, out_root, "triples", snapshot_id,
                 partition_by=["part_id"],
@@ -568,9 +543,11 @@ def run_snapshot(
             m_nodes = f_nodes.result()
             m_edges = f_edges.result()
             f_seen.result()
-            errors = f_errors.result()
+            lineage, errors, n_pages = f_counts.result()
+        # one file for a row per part; one job, the last of the run
         m_lineage = write_snapshot(
-            lineage.withColumn("started_ts", F.lit(started_ts))
+            spark.createDataFrame(lineage).coalesce(1)
+            .withColumn("started_ts", F.lit(started_ts))
             .withColumn("finished_ts", F.lit(_utc_now())),
             out_root, "lineage", snapshot_id,
             extra={"n_pages": n_pages, "errors": errors},

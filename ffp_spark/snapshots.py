@@ -44,7 +44,7 @@ from pathlib import Path
 from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 def _table_dir(root: str | Path, name: str) -> Path:
@@ -102,6 +102,19 @@ def uncommit(root: str | Path, snapshot_id: int) -> None:
     _fsync(ldir)
 
 
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable, as
+    Spark's ``asNullable``: the schema a directory read serves."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                           for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
 def _commit(
     df: DataFrame,
     root: str | Path,
@@ -115,7 +128,9 @@ def _commit(
     under ``_tmp-<id>``, which is ``os.replace``'d into ``snap-<id>``;
     then the manifest swaps in with fsync.  The manifest's parent is the
     newest committed id below ``snapshot_id``.  ``spec`` lists the
-    writer's layout fields for the manifest."""
+    writer's layout fields for the manifest.  The manifest's schema is
+    the one ``read_snapshot`` serves, every field nullable, so it does
+    not depend on whether ``df`` came from files or was computed."""
     tdir = _table_dir(root, table)
     tdir.mkdir(parents=True, exist_ok=True)
     tmp = tdir / f"_tmp-{snapshot_id}"
@@ -135,7 +150,7 @@ def _commit(
         ),
         "row_count": int(obs.get["n"]),
         **spec,
-        "schema": df.schema.jsonValue(),
+        "schema": _as_nullable(df.schema).jsonValue(),
     }
     if extra:
         manifest["extra"] = extra

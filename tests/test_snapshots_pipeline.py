@@ -18,6 +18,23 @@ from ffp_spark.snapshots import (
 )
 
 
+def _redirects(spark):
+    """Redirect pages: a chain r1 -> r2 -> a seed-3 corpus feed, and a
+    refresh to a page missing from the corpus."""
+    def refresh(url, target):
+        html = b'<html><head><meta http-equiv="refresh" content="0; url=%s"></head></html>'
+        return (url, None, html % target.encode(), None, "en")
+
+    return spark.createDataFrame(
+        [
+            refresh("https://r1.example/", "https://r2.example/"),
+            refresh("https://r2.example/", synth_page(3, 0)["url"]),
+            refresh("https://r3.example/", "https://gone.example/"),
+        ],
+        PAGES_SCHEMA,
+    )
+
+
 def _jobs_in_group(spark, group, fn):
     """``fn()``'s result and the number of Spark jobs it ran."""
     sc = spark.sparkContext
@@ -32,12 +49,13 @@ def _jobs_in_group(spark, group, fn):
 class TestSnapshots:
     def test_commit_read_roundtrip(self, spark, tmp_path):
         df = spark.range(100).withColumn("k", F.col("id") % 7)
-        m = write_snapshot(df, tmp_path, "t", snapshot_id=1)
+        nested = df.withColumn("s", F.struct(F.array("k").alias("ks")))  # all non-null
+        m = write_snapshot(nested, tmp_path, "t", snapshot_id=1)
         assert m["row_count"] == 100
         # the partition column first in the frame, last in the read
         part = df.select((F.col("k") % 3).cast("int").alias("p"), "id", "k")
         write_snapshot(part, tmp_path, "p", snapshot_id=1, partition_by=["p"])
-        for table, cols in (("t", ["id", "k"]), ("p", ["id", "k", "p"])):
+        for table, cols in (("t", ["id", "k", "s"]), ("p", ["id", "k", "p"])):
             # the manifest holds the schema: reading it runs no job, and
             # gives the columns and types a directory inference gives
             back, jobs = _jobs_in_group(
@@ -48,6 +66,10 @@ class TestSnapshots:
             assert back.columns == cols
             assert back.dtypes == inferred.dtypes
             assert back.count() == 100
+        # the manifest records the schema a read serves: every field,
+        # nested ones included, nullable
+        served = spark.read.parquet(str(tmp_path / "t" / "snap-1")).schema
+        assert m["schema"] == served.jsonValue() != nested.schema.jsonValue()
         # no lineage table: each table's newest manifest is its commit
         assert current_snapshot_id(tmp_path, "t") == current_snapshot_id(tmp_path, "p") == 1
 
@@ -403,6 +425,9 @@ class TestPipeline:
 
         for table in ("triples", "nodes", "edges", "pages_seen"):
             assert rows(tmp_path, table) == rows(tmp_path / "full", table), table
+            # and records the schema a read serves, whatever it unioned in
+            schemas = [read_manifest(r, table, 2)["schema"] for r in (tmp_path, tmp_path / "full")]
+            assert schemas[0] == schemas[1], table
         triples = read_snapshot(spark, tmp_path, "triples", snapshot_id=2)
         assert triples.columns == ["subj", "pred", "obj", "src_url", "snapshot_id", "part_id"]
         assert "https://refresh.example/" in {r.src_url for r in triples.collect()}
@@ -471,24 +496,10 @@ class TestPipeline:
         assert report["pages"] == lineage_pages == 1
         assert report["triples"] == len(triples) > 0
 
-        # redirect pages: a chain r1 -> r2 -> a corpus feed, and a refresh
-        # to a page missing from the corpus
-        def refresh(url, target):
-            html = b'<html><head><meta http-equiv="refresh" content="0; url=%s"></head></html>'
-            return (url, None, html % target.encode(), None, "en")
-
-        redirects = spark.createDataFrame(
-            [
-                refresh("https://r1.example/", "https://r2.example/"),
-                refresh("https://r2.example/", synth_page(3, 0)["url"]),
-                refresh("https://r3.example/", "https://gone.example/"),
-            ],
-            PAGES_SCHEMA,
-        )
         sets, graphs = [], []
         for n_parts in (1, 7, 64):
             report, lineage_pages, triples = commit(
-                pages.unionByName(redirects), f"parts{n_parts}", n_parts
+                pages.unionByName(_redirects(spark)), f"parts{n_parts}", n_parts
             )
             assert report["pages"] == lineage_pages == 43
             assert report["errors"].get("meta_refresh") == 1
@@ -503,6 +514,55 @@ class TestPipeline:
         assert nodes and edges and graphs[0] == graphs[1] == graphs[2]
         # r1 and r2 share the feed's parse: its structural edges once each
         assert max(edges.values()) == 1
+
+    def test_snapshot_counts_match_the_dataframe_reference(self, spark):
+        """The one counts aggregate, folded on the driver, equals
+        partition_lineage joined to the per-part emit_triples count, and
+        error_histogram: on a corpus with a redirect chain and a missing
+        redirect target, an empty corpus and an all-error corpus, at
+        any n_parts."""
+        from ffp_spark.metrics import error_histogram, partition_lineage, snapshot_counts
+        from ffp_spark.pipeline import resolve_meta_refresh
+        from ffp_spark.triples import emit_triples
+        from ffp_spark.udfs import parse_pages
+
+        pages = synth_pages(spark, 40, seed=3)
+        corpora = {
+            "redirects": pages.unionByName(_redirects(spark)),
+            "empty": pages.limit(0),
+            "all_error": pages.withColumn("html", F.lit(b"plain bytes, not a feed")),
+        }
+        histograms = {}
+        for name, corpus in corpora.items():
+            raw = parse_pages(corpus).cache()
+            try:
+                resolved = resolve_meta_refresh(raw, corpus)
+                for n_parts in (1, 7, 64):
+                    parsed = add_part_id(resolved, n_parts)
+                    triples = add_part_id(emit_triples(parsed), n_parts, "src_url")
+                    lineage, errors, n_pages = snapshot_counts(parsed, triples, 5)
+                    want = (
+                        partition_lineage(parsed, 5)
+                        .join(triples.groupBy("part_id").agg(F.count("*").alias("n_triples")),
+                              "part_id", "left")
+                        .select("part_id", "n_pages", "n_parsed", "n_errors", "n_entries",
+                                F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
+                                "snapshot_id", "status")
+                    )
+                    got = spark.createDataFrame(lineage)
+                    assert got.dtypes == want.dtypes, name
+                    assert sorted(got.collect()) == sorted(want.collect()), (name, n_parts)
+                    assert errors == {
+                        r.error_class: r["count"] for r in error_histogram(parsed).collect()
+                    }, (name, n_parts)
+                    assert n_pages == corpus.count(), (name, n_parts)
+                    histograms[name] = errors
+            finally:
+                raw.unpersist()
+        # the corpora reach the error paths they are named for
+        assert histograms["redirects"].get("meta_refresh") == 1
+        assert histograms["empty"] == {}
+        assert sum(histograms["all_error"].values()) == 40
 
     def test_deterministic_triples_across_runs(self, spark, tmp_path):
         pages = synth_pages(spark, 80, seed=5)
