@@ -16,10 +16,14 @@ subprocesses over the same file:
   gzip.decompress of the whole stream, parse into one Python list,
   one RecordBatch.from_pylist.  Expected peak: compressed + raw +
   pylist overhead.
+* ``index``     — the split index of sources.warc_split_ranges alone:
+  sources.warc_range_starts over the same range reads (child mode only,
+  not in the default runs).  Expected peak: O(read chunk + inflation
+  window + record).
 
 Usage:
     python bench/warc_stress.py [n_records]        # default 1200 (~1.2 GB raw)
-    python bench/warc_stress.py <n> streamed|wholefile <path>  # child mode
+    python bench/warc_stress.py <n> streamed|wholefile|index <path>  # child mode
 
 Prints one JSON line: archive/raw sizes, per-mode peak RSS and wall,
 record counts (must match between modes — same parse, different
@@ -73,6 +77,7 @@ def run_child(mode: str, path: Path) -> None:
         _iter_file_range,
         parse_warc_bytes,
         scan_warc_chunks,
+        warc_range_starts,
     )
 
     out_schema = to_arrow_schema(WARC_SCHEMA)
@@ -95,6 +100,9 @@ def run_child(mode: str, path: Path) -> None:
             b = pa.RecordBatch.from_pylist(rows, schema=out_schema)
             n_records += b.num_rows
             payload_bytes += nbytes
+    elif mode == "index":  # n_records = the offsets a range may start at
+        chunks = _iter_file_range(str(path), 0, path.stat().st_size)
+        n_records = sum(1 for _ in warc_range_starts(chunks))
     else:  # wholefile: the r5 code path replayed
         raw = gzip.decompress(path.read_bytes())
         recs = parse_warc_bytes(raw)

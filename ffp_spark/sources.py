@@ -9,8 +9,9 @@ WARC pipelines shard 100 TB crawls; no record-level split index is
 needed because file count >> executor count at any realistic crawl
 size.  Both readers run one task body, :func:`_read_ranges`, over
 (path, start, end) rows: ``read_warc`` gives each file one range,
-``read_warc_ranges`` takes the member-aligned slices of
-:func:`warc_split_ranges` (the single-huge-file case).
+``read_warc_ranges`` takes the slices of :func:`warc_split_ranges`
+(the single-huge-file case), which start only where the reader's own
+scanner starts a record and, in a gzip file, its decompressor a member.
 
 Memory profile: a task never holds a file.  It reads its range through
 ``pyarrow.fs`` in ``_IN_CHUNK`` slices; gzip members decompress one at
@@ -21,14 +22,20 @@ batches (``_BATCH_RECORDS`` rows / ``_BATCH_BYTES`` payload bytes per
 batch).  Peak task heap is therefore about one read chunk + the
 inflation window (``_OUT_CAP``) + the largest record + one batch,
 independent of both the compressed and the raw archive size (measured:
-bench/warc_stress.py, row in SCALE.md).  The one exception is a corrupt
-gzip member: its error row carries the rest of the range, from the read
-chunk in which zlib rejects the member to the end of the range.
+bench/warc_stress.py, row in SCALE.md); the split index runs the same
+decompressor and scanner, so its bound is the same less the batch.
+The one exception is a corrupt gzip member: its error row carries the
+rest of the range, from the read chunk in which zlib rejects the member
+to the end of the range.
 
 Error discipline (pipeline-wide invariant): malformed bytes NEVER fail
 the task.  Corrupt gzip members, non-numeric Content-Length, non-UTF8
 header bytes, truncated records and trailing garbage all become
-``rec_type='error'`` rows carrying the unparseable remainder.
+``rec_type='error'`` rows carrying the unparseable remainder.  A
+damaged member holding one record yields it as an error row, never as
+a normal one (the CRC rule of :func:`_gunzip_stream`); a member holding
+several records can still emit its earlier records before its CRC is
+checked.
 
 Format essentials implemented here (public WARC/1.1 spec, ISO 28500):
 records are "WARC/1.0\\r\\n" + header lines + CRLF CRLF + exactly
@@ -47,10 +54,11 @@ import io
 import itertools
 import re
 import zlib
+from collections import deque
 from typing import Iterable, Iterator
 from urllib.parse import quote
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -166,14 +174,19 @@ class _RecordScanner:
         return self._drain(final=False)
 
     def finish(self) -> list[dict]:
-        out = self._drain(final=True)
-        if self._buf:
-            err = _error_rec(bytes(self._buf))
-            err["rec_offset"] = self._abs
-            out.append(err)
-            self._abs += len(self._buf)
-            self._buf.clear()
-        return out
+        return self._drain(final=True) + self.discard()
+
+    def discard(self, tail: bytes = b"") -> list[dict]:
+        """The buffered bytes plus ``tail`` as one error row at the
+        buffer's offset, completing no record (none if both are empty)."""
+        self._buf += tail
+        if not self._buf:
+            return []
+        err = _error_rec(bytes(self._buf))
+        err["rec_offset"] = self._abs
+        self._abs += len(self._buf)
+        self._buf.clear()
+        return [err]
 
     def _drain(self, final: bool) -> list[dict]:
         # scan with an OFFSET and compact the buffer once at the end:
@@ -251,50 +264,67 @@ def parse_warc_bytes(data: bytes) -> list[dict]:
 
 
 class _CorruptGzip(Exception):
-    """Raised by :func:`_gunzip_stream` with the not-yet-decompressed
-    remainder, so the caller can emit it as an error row."""
+    """Raised by :func:`_gunzip_stream` with the damaged member's held
+    inflated piece and the not-yet-decompressed rest of the stream, as
+    a lazy iterable, so the caller can emit them as error rows."""
 
-    def __init__(self, remaining: bytes) -> None:
+    def __init__(self, held: bytes, remaining: Iterable[bytes]) -> None:
         super().__init__("corrupt gzip member")
+        self.held = held
         self.remaining = remaining
 
 
-def _gunzip_stream(chunks: Iterable[bytes]) -> Iterator[bytes]:
+def _gunzip_stream(
+    chunks: Iterable[bytes], member_ends: deque | None = None
+) -> Iterator[bytes]:
     """Decompress a (possibly multi-member) gzip stream, given as a
     chunk iterator, member-at-a-time through a bounded window: each
     call is fed at most one chunk and pulls back at most ``_OUT_CAP``
     inflated bytes, so peak inflation memory is O(chunk + _OUT_CAP),
-    independent of archive size.  A corrupt member raises
-    :class:`_CorruptGzip` carrying the chunk that failed plus every
-    chunk not yet read, i.e. the rest of the stream; a truncated last
-    member raises it empty (its inflated prefix already went out)."""
+    independent of archive size.  CRC rule: a member's latest inflated
+    piece is handed on only after the next decompress call on that
+    member succeeds, so its last piece leaves only once zlib has checked
+    the member's CRC.  A corrupt member raises :class:`_CorruptGzip`
+    with the held piece and the rest of the stream from the chunk that
+    failed; a truncated one, with nothing remaining.  ``member_ends``
+    gets (compressed, inflated) stream offsets just past each member."""
     it = iter(chunks)
     pending = b""
+    taken = 0  # compressed bytes read from ``chunks``
+    inflated = 0  # inflated bytes handed on
     while True:
         if not pending:  # at a member boundary (or clean end)
             nxt = next(it, None)
             if nxt is None:
                 return
             pending = nxt
+            taken += len(nxt)
         d = zlib.decompressobj(16 + zlib.MAX_WBITS)
+        held = b""
         while not d.eof:
             if not pending:
                 nxt = next(it, None)
                 if nxt is None:
-                    raise _CorruptGzip(b"")  # truncated member
+                    raise _CorruptGzip(held, ())  # truncated member
                 pending = nxt
+                taken += len(nxt)
             try:
                 out = d.decompress(pending, _OUT_CAP)
             except zlib.error:
-                raise _CorruptGzip(pending + b"".join(it)) from None
+                raise _CorruptGzip(held, itertools.chain([pending], it)) from None
             pending = d.unconsumed_tail
             if out:
-                yield out
-        out = d.flush()
-        if out:
-            yield out
+                if held:
+                    inflated += len(held)
+                    yield held
+                held = out
+        if held:
+            inflated += len(held)
+            yield held
         # bytes past the member end = start of the next member
         pending = d.unused_data
+        if member_ends is not None:
+            member_ends.append((taken - len(pending), inflated))
 
 
 HTTP_HEADER_STRUCT = StructType(
@@ -404,19 +434,28 @@ def split_http(records: DataFrame) -> DataFrame:
     return records.mapInArrow(run, schema=WARC_HTTP_SCHEMA)
 
 
+def _warc_stream(
+    chunks: Iterable[bytes], member_ends: deque | None = None
+) -> tuple[bool, Iterable[bytes]]:
+    """(gzipped, byte stream) of one range: gzip is detected by the
+    magic bytes of the first chunk — every range starts at a file start
+    or a member and record start."""
+    it = iter(chunks)
+    head = next(it, b"")
+    stream = itertools.chain([head], it)
+    if head[:2] != b"\x1f\x8b":
+        return False, stream
+    return True, _gunzip_stream(stream, member_ends)
+
+
 def scan_warc_chunks(fname: str, chunks: Iterable[bytes]) -> Iterator[dict]:
     """Stream all records out of one range's chunks (the task body of
     both readers, kept module-level so bench/warc_stress.py measures
-    the exact production code path).  Gzip is detected by the magic
-    bytes of the first chunk — every range starts at a file start or a
-    member/record boundary.  A corrupt gzip member turns into an error
-    row carrying the undecompressed remainder, unconditionally, so
-    corruption is never silent even when every byte was already fed."""
-    it = iter(chunks)
-    head = next(it, b"")
-    stream: Iterable[bytes] = itertools.chain([head], it)
-    if head[:2] == b"\x1f\x8b":
-        stream = _gunzip_stream(stream)
+    the exact production code path).  A corrupt gzip member turns into
+    an error row of the damaged record's bytes at its ``rec_offset`` and
+    one of the undecompressed remainder, unconditionally, so corruption
+    is never silent even when every byte was already fed."""
+    _, stream = _warc_stream(chunks)
     scanner = _RecordScanner()
 
     def _tag(recs: list[dict]) -> Iterator[dict]:
@@ -429,8 +468,37 @@ def scan_warc_chunks(fname: str, chunks: Iterable[bytes]) -> Iterator[dict]:
             yield from _tag(scanner.feed(chunk))
         yield from _tag(scanner.finish())
     except _CorruptGzip as exc:
-        yield from _tag(scanner.finish())
-        yield from _tag([_error_rec(exc.remaining)])
+        # not finish(): its final drain could complete the damaged record
+        yield from _tag(scanner.discard(exc.held))
+        yield from _tag([_error_rec(b"".join(exc.remaining))])
+
+
+def warc_range_starts(chunks: Iterable[bytes]) -> Iterator[int]:
+    """The split index of :func:`warc_split_ranges` over one file's
+    chunks (module-level so bench/warc_stress.py measures it): offsets
+    where :class:`_RecordScanner` starts a record it completes and, in
+    a gzip file, :func:`_gunzip_stream` also starts a member, so a
+    reader started there continues the whole-file read.  Memory: one
+    read chunk + the inflation window + one record.  It stops at a
+    corrupt member or unparseable bytes; the rest is the last range."""
+    member_ends: deque = deque()
+    gzipped, stream = _warc_stream(chunks, member_ends)
+    scanner = _RecordScanner()
+    try:
+        for piece in stream:
+            for rec in scanner.feed(piece):
+                off = rec["rec_offset"]
+                if not gzipped:
+                    yield off
+                    continue
+                while member_ends and member_ends[0][1] < off:
+                    member_ends.popleft()
+                if member_ends and member_ends[0][1] == off:
+                    yield member_ends[0][0]
+            if scanner._poisoned:
+                return  # it would buffer the rest of the file
+    except _CorruptGzip:
+        return
 
 
 def _iter_file_range(uri: str, start: int, end: int) -> Iterator[bytes]:
@@ -460,100 +528,23 @@ def _iter_file_range(uri: str, start: int, end: int) -> Iterator[bytes]:
             yield chunk
 
 
-def _gzip_member_ends(chunks: Iterable[bytes]) -> Iterator[int]:
-    """Absolute byte offsets just past each gzip member, streaming with
-    O(_OUT_CAP) memory (output is decompressed and DISCARDED — member
-    boundaries are only knowable by inflating, but never by holding).
-    Stops quietly at a corrupt/truncated member: the range builder
-    then leaves the tail to one range whose reader surfaces the error
-    row."""
-    d = zlib.decompressobj(16 + zlib.MAX_WBITS)
-    absoff = 0  # absolute offset of pending[0]
-    pending = b""
-    it = iter(chunks)
-    while True:
-        if not pending:
-            nxt = next(it, None)
-            if nxt is None:
-                return
-            pending = nxt
-        try:
-            d.decompress(pending, _OUT_CAP)
-        except zlib.error:
-            return
-        if d.eof:
-            tail = d.unused_data
-            absoff += len(pending) - len(tail)
-            pending = tail
-            yield absoff
-            d = zlib.decompressobj(16 + zlib.MAX_WBITS)
-        else:
-            absoff += len(pending) - len(d.unconsumed_tail)
-            pending = d.unconsumed_tail
-
-
-def _plain_record_ends(chunks: Iterable[bytes]) -> Iterator[int]:
-    """Absolute byte offsets just past each record of a PLAIN (not
-    gzipped) WARC stream, with O(header) memory: only header bytes are
-    ever buffered — payloads are skipped by Content-Length arithmetic
-    against the chunk cursor.  Stops quietly on garbage (tail becomes
-    one range)."""
-    buf = bytearray()
-    base = 0  # absolute offset of buf[0]
-    skip = 0
-    clen_re = re.compile(rb"^content-length:\s*(\d+)\s*$", re.I | re.M)
-    for chunk in chunks:
-        if skip:
-            if skip >= len(chunk):
-                skip -= len(chunk)
-                base += len(chunk)
-                continue
-            chunk = chunk[skip:]
-            base += skip
-            skip = 0
-        buf += chunk
-        while True:
-            if len(buf) < 5 and buf:
-                break
-            if not buf:
-                break
-            if bytes(buf[:5]) != b"WARC/":
-                return  # garbage tail
-            he = buf.find(_CRLF + _CRLF)
-            if he < 0:
-                if len(buf) > (1 << 20):
-                    return  # unparseable giant header
-                break
-            m = clen_re.search(bytes(buf[:he]))
-            if m is None:
-                return  # cannot jump
-            rec_end = he + 4 + int(m.group(1)) + 4
-            yield base + rec_end
-            if rec_end <= len(buf):
-                del buf[:rec_end]
-                base += rec_end
-            else:
-                skip = rec_end - len(buf)
-                base += len(buf)
-                buf.clear()
-                break
-
-
 def warc_split_ranges(
     spark: SparkSession, path: str, target_bytes: int = 64 << 20
 ) -> DataFrame:
     """First-pass index for RANGE-parallel WARC processing: one row
     per ~``target_bytes`` slice of each archive, every slice starting
-    at a safe boundary (a gzip member start, or a record start for
-    plain files).  This is the fix for the pathological single-huge-
-    file case — file-level parallelism is right when file count >>
-    executor count, but one 50 GB archive serializes; an offset index
-    restores balance at the cost of one extra streaming pass.
+    at a record start that is, in a gzip file, also a member start
+    (:func:`warc_range_starts`).  This is the fix for the pathological
+    single-huge-file case — file-level parallelism is right when file
+    count >> executor count, but one 50 GB archive serializes; an
+    offset index restores balance at the cost of one extra streaming
+    pass.
 
-    The index pass streams each file through pyarrow.fs with
-    O(_OUT_CAP) memory (column-pruned binaryFile listing — content is
-    never loaded here) and the boundary walk discards all inflated
-    bytes.  Returns (path, start, end)."""
+    The index pass streams each file through pyarrow.fs (column-pruned
+    binaryFile listing — content is never loaded here) into the
+    reader's own decompressor and scanner, so its memory is the
+    reader's: one read chunk + the inflation window + one record.
+    Returns (path, start, end)."""
     files = spark.read.format("binaryFile").load(path).select("path", "length")
 
     def index(batches):
@@ -568,16 +559,11 @@ def warc_split_ranges(
                 batch.column("path").to_pylist(),
                 batch.column("length").to_pylist(),
             ):
-                head = b"".join(_iter_file_range(uri, 0, min(2, length)))
-                walker = (
-                    _gzip_member_ends if head[:2] == b"\x1f\x8b"
-                    else _plain_record_ends
-                )
                 start = 0
-                for endoff in walker(_iter_file_range(uri, 0, length)):
-                    if endoff - start >= target_bytes and endoff <= length:
-                        rows.append({"path": uri, "start": start, "end": endoff})
-                        start = endoff
+                for off in warc_range_starts(_iter_file_range(uri, 0, length)):
+                    if off - start >= target_bytes:
+                        rows.append({"path": uri, "start": start, "end": off})
+                        start = off
                 if start < length:
                     rows.append({"path": uri, "start": start, "end": length})
             yield pa.RecordBatch.from_pylist(rows, schema=schema)
@@ -625,9 +611,12 @@ def read_warc_ranges(spark: SparkSession, ranges: DataFrame) -> DataFrame:
     gzip member's error row ends at the end of its range.  Returns
     WARC_SCHEMA rows."""
     # the ranges table is tiny (one row per ~64 MB slice): checkpoint
-    # so the count and the read don't each re-run the index pass
-    ranges = ranges.localCheckpoint(eager=True)
-    n_ranges = ranges.count()
+    # so the read does not re-run the index pass (its job counts them)
+    obs = Observation()
+    ranges = ranges.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    n_ranges = obs.get["n"]
     src = ranges.repartition(max(1, min(n_ranges, 2048)), "path", "start")
     return _read_ranges(src)
 

@@ -193,6 +193,37 @@ def test_corrupt_gzip_member_becomes_error_row(spark, tmp_path: Path):
         assert bytes(by_type["error"].payload) == data[len(good):]
 
 
+def test_damaged_gzip_member_is_never_a_response_row():
+    # 64 bytes overwritten mid-member in a stored (random) payload: zlib
+    # sees it only at the CRC check, whichever read chunk holds the CRC
+    import random
+
+    from ffp_spark.sources import scan_warc_chunks
+
+    good = warc_file_bytes([("response", "https://ok.example/", b"fine")], gz=True)
+    damaged = bytearray(
+        warc_file_bytes(
+            [("response", "https://bad.example/", random.Random(7).randbytes(3 << 20))],
+            gz=True,
+        )
+    )
+    damaged[2 << 20:(2 << 20) + 64] = bytes(64)
+    data = good + bytes(damaged)
+    rec_offset = len(warc_record("response", "https://ok.example/", b"fine"))
+    mib = 1 << 20
+    for chunks in (
+        [data[:-8], data[-8:]],
+        [data[i:i + mib] for i in range(0, len(data), mib)],
+    ):
+        rows = list(scan_warc_chunks("d.warc.gz", chunks))
+        assert [r["target_uri"] for r in rows if r["rec_type"] == "response"] == [
+            "https://ok.example/"
+        ]
+        assert any(
+            r["rec_type"] == "error" and r["rec_offset"] == rec_offset for r in rows
+        )
+
+
 def test_read_warc_file_over_binaryfile_max_length(spark, tmp_path: Path):
     # read_warc never loads binaryFile's content column, so an archive
     # larger than binaryFile.maxLength still reads in full
@@ -310,6 +341,32 @@ def test_warc_split_ranges_and_ranged_read_match_whole_read(spark, tmp_path: Pat
     (tmp_path / "big.warc.gz").write_bytes(warc_file_bytes(big, gz=True))
     (tmp_path / "plain.warc").write_bytes(warc_file_bytes(big[:100], gz=False))
     (tmp_path / "small.warc.gz").write_bytes(warc_file_bytes(small, gz=True))
+    # a record spanning two gzip members: member A (> target_bytes) ends
+    # 30 bytes into record 2, so its end is no record start
+    import gzip as _gz
+    import random
+
+    raw = warc_file_bytes(
+        [
+            ("response", "https://span.example/0", random.Random(0).randbytes(5000)),
+            ("response", "https://span.example/1", b"second"),
+            ("response", "https://span.example/2", b"third"),
+        ]
+    )
+    cut = len(warc_record("response", "https://span.example/0", bytes(5000))) + 30
+    member_a = _gz.compress(raw[:cut], mtime=0)
+    assert len(member_a) > 4096
+    (tmp_path / "span.warc.gz").write_bytes(member_a + _gz.compress(raw[cut:], mtime=0))
+    # two Content-Length headers (3, then 9): the scanner takes the last;
+    # taking the first would end the record 6 bytes early, past target_bytes
+    first = warc_record("response", "https://cl.example/0", b"p" * 3900)
+    two_cl = (
+        b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://cl.example/1\r\n"
+        b"Content-Length: 3\r\nContent-Length: 9\r\n\r\n123456789\r\n\r\n"
+    )
+    assert len(first) < 4096 <= len(first) + len(two_cl) - 6
+    last = warc_record("response", "https://cl.example/2", b"last")
+    (tmp_path / "twocl.warc").write_bytes(first + two_cl + last)
 
     ranges = warc_split_ranges(
         spark, str(tmp_path / "*.warc*"), target_bytes=4096
@@ -333,7 +390,7 @@ def test_warc_split_ranges_and_ranged_read_match_whole_read(spark, tmp_path: Pat
 
     whole = read_warc(spark, str(tmp_path / "*.warc*"))
     ranged = read_warc_ranges(spark, ranges)
-    key = lambda r: (r.file, r.target_uri, bytes(r.payload))  # noqa: E731
+    key = lambda r: (r.file, r.rec_type, r.target_uri or "", bytes(r.payload))  # noqa: E731
     assert sorted(map(key, ranged.collect())) == sorted(map(key, whole.collect()))
 
 
