@@ -1,18 +1,15 @@
 #!/usr/bin/env bash
-# Package ffp_spark and run the KG pipeline via spark-submit --py-files
-# (north rule: the job must run this way at N and 4N executors).
+# Run the KG pipeline via spark-submit (north rule: the job must run this
+# way at N and 4N executors).  job.py finds the package from its own
+# checkout and build_session ships it to the Python workers.
 #
 # Usage: bench/submit.sh <pages_parquet> <out_dir> <snapshot_id> [cores]
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 PAGES="$1"; OUT="$2"; SNAP="$3"; CORES="${4:-32}"
 
-ZIP="$(mktemp -d)/ffp_spark.zip"
-(cd "$REPO" && zip -qr "$ZIP" ffp_spark -x '*__pycache__*')
-
 exec spark-submit \
   --master "local[$CORES]" \
-  --py-files "$ZIP" \
   --conf spark.sql.shuffle.partitions="$CORES" \
   --conf spark.sql.session.timeZone=UTC \
   --conf spark.sql.adaptive.enabled=true \

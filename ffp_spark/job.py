@@ -1,15 +1,23 @@
 """spark-submit entry point for the KG-construction pipeline.
 
-    spark-submit --master local[32] \
-        --py-files ffp_spark.zip \
-        ffp_spark/job.py \
+    spark-submit --master local[4] /path/to/repo/ffp_spark/job.py \
         --pages /path/to/pages_parquet \
         --out   /path/to/kg_tables \
         --snapshot-id 1 \
         [--n-parts 64] [--incremental-from 0] [--no-resume]
 
-On a real cluster the same invocation takes --master yarn/k8s and the
-same --py-files zip; everything else is identical (north rule K12).
+It runs from any working directory with no PYTHONPATH: run as a file,
+job.py puts its own checkout on the driver's path, and build_session
+ships the package to the Python workers (pipeline.ship_package).  On a
+real cluster the same invocation takes --master yarn/k8s in client
+deploy mode (north rule K12).  Cluster deploy mode ships only job.py to
+the driver, so it also needs the package as --py-files:
+
+    (cd /path/to/repo && zip -qr /tmp/ffp_spark.zip ffp_spark -x '*__pycache__*')
+    spark-submit --master yarn --deploy-mode cluster \
+        --py-files /tmp/ffp_spark.zip /path/to/repo/ffp_spark/job.py ...
+
+(ship_package does nothing when the package is imported from a zip.)
 
 A snapshot is committed when its lineage manifest is written, after
 every other table; until then reads serve the previous committed
@@ -25,6 +33,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from pathlib import Path
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -59,4 +68,6 @@ def main(argv: list[str] | None = None) -> None:
 
 
 if __name__ == "__main__":
+    if not __package__:  # run as a file: its checkout, not ffp_spark/, goes on the path
+        sys.path[0] = str(Path(__file__).resolve().parents[1])
     main()

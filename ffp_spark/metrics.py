@@ -1,7 +1,8 @@
 """Lineage + quality metrics (operator K10).
 
 * one small aggregate per snapshot (:func:`snapshot_counts`): pages,
-  entries and triples per (part_id, error_class), folded on the driver
+  entries and triples (``emit_triples``' own rule, counted per page, no
+  explode) per (part_id, error_class) of the parse, folded on the driver
   into the per-partition lineage rows, the error-class histogram
   (reference S11's error taxonomy) and the page count,
 * the DataFrame forms of lineage and the histogram, kept as the
@@ -18,32 +19,28 @@ from collections import Counter, defaultdict
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
+from .triples import page_triple_count
 
-def snapshot_counts(
-    parsed: DataFrame, triples: DataFrame, snapshot_id: int
-) -> tuple[pa.Table, dict[str, int], int]:
+
+def snapshot_counts(parsed: DataFrame, snapshot_id: int) -> tuple[pa.Table, dict[str, int], int]:
     """(lineage, error histogram, page count) of one snapshot's parse.
 
-    One grouped aggregate sums pages, entries and triples per
-    (part_id, error_class) over ``parsed`` unioned with ``triples``
-    (one row per triple, with the ``part_id`` of its page); the driver
-    collects its at most n_parts x error classes rows and folds them.
-    ``udfs`` sets ``error`` and ``error_class`` together, so a null class
-    is a parsed page.  Lineage is an Arrow table with one row per part
-    of ``parsed``: part_id, n_pages, n_parsed, n_errors, n_entries,
-    n_triples, snapshot_id, status."""
-    zero = F.lit(0)
+    One grouped aggregate over ``parsed`` (with its pages' ``part_id``)
+    sums pages, entries and triples per (part_id, error_class), a page's
+    triples by :func:`triples.page_triple_count`, the rule
+    ``emit_triples`` explodes; the driver collects its at most n_parts x
+    error classes rows and folds them.  ``udfs`` sets ``error`` and
+    ``error_class`` together, so a null class is a parsed page.  Lineage
+    is an Arrow table with one row per part of ``parsed``: part_id,
+    n_pages, n_parsed, n_errors, n_entries, n_triples, snapshot_id,
+    status."""
     rows = (
-        parsed.select(
-            "part_id", "error_class", F.lit(1).alias("pages"),
-            F.coalesce(F.size("entries"), zero).alias("entries"), zero.alias("triples"),
+        parsed.groupBy("part_id", "error_class")
+        .agg(
+            F.count(F.lit(1)).alias("pages"),
+            F.sum(F.coalesce(F.size("entries"), F.lit(0))).alias("entries"),
+            F.sum(page_triple_count()).alias("triples"),
         )
-        .unionByName(triples.select(
-            "part_id", F.lit(None).cast("string").alias("error_class"),
-            zero.alias("pages"), zero.alias("entries"), F.lit(1).alias("triples"),
-        ))
-        .groupBy("part_id", "error_class")
-        .agg(*(F.sum(c).alias(c) for c in ("pages", "entries", "triples")))
         .collect()
     )
     parts: dict[int, Counter] = defaultdict(Counter)

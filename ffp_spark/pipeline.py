@@ -22,14 +22,14 @@ Scale design notes (100 TB / 1000 executors):
   the snapshot's whole triple set (this run's plus the committed ones it
   keeps, restamped), so a fresh and an incremental run commit the same
   graph: a set of edges and one least-labelled row per node;
-* meta-refresh resolution is one job when no page redirects; otherwise
-  it parses only the target pages and walks the chains on the driver;
-* per-stage caching is limited to the raw parse, the redirect targets'
-  parse and one checkpoint of the redirect-resolved parse, which the
-  triple, linking and count branches consume;
+* the parse is held once, in the local checkpoint every later job
+  reads; meta-refresh resolution is one job over it when no page
+  redirects; otherwise it parses only the target pages, walks the chains
+  on the driver and checkpoints only the rewritten redirecting rows;
 * lineage, the error histogram and the page count come from one small
   grouped aggregate of that checkpoint, folded on the driver
-  (:func:`metrics.snapshot_counts`); it runs beside the data commits;
+  (:func:`metrics.snapshot_counts`, which counts triples by
+  ``emit_triples``' own rule); it runs beside the data commits;
 * ``run_snapshot`` is one straight-line function: the data tables
   commit concurrently, under the caller's job group, lineage last (the
   completion marker).  A committed snapshot is final: a resumed re-run
@@ -41,13 +41,17 @@ Scale design notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import logging
+import tempfile
 import time
+import zipfile
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 from functools import reduce
+from pathlib import Path
 from typing import Any, Optional
 
 import pyarrow as pa
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
@@ -185,6 +189,27 @@ def warm_python_workers(spark: SparkSession) -> None:
     spark._ffp_workers_warm = True
 
 
+def ship_package(spark: SparkSession) -> None:
+    """Ship the ``ffp_spark`` package this driver imported to the Python
+    workers (``addPyFile`` of a zip of its ``.py`` files), so a driver
+    that finds the package through its own ``sys.path`` alone (no
+    ``PYTHONPATH``, a cwd outside the repo) runs workers that import the
+    same code.  The zip is written under the session's file root, which
+    Spark removes at stop.  A package imported from a zip (``--py-files``)
+    reaches the workers that way already."""
+    pkg = Path(__file__).resolve().parent
+    if getattr(spark, "_ffp_shipped", False) or not pkg.is_dir():
+        return
+    # its own name: Spark refuses a second added file named like a
+    # --py-files ffp_spark.zip with other bytes
+    path = Path(tempfile.mkdtemp(dir=SparkFiles.getRootDirectory())) / f"{pkg.name}-shipped.zip"
+    with zipfile.ZipFile(path, "w") as z:
+        for f in sorted(pkg.rglob("*.py")):
+            z.write(f, f.relative_to(pkg.parent))
+    spark.sparkContext.addPyFile(str(path))
+    spark._ffp_shipped = True
+
+
 def build_session(app: str, master: Optional[str] = None, shuffle_partitions: int = 64) -> SparkSession:
     import os
 
@@ -216,6 +241,7 @@ def build_session(app: str, master: Optional[str] = None, shuffle_partitions: in
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    ship_package(spark)
     warm_collation(spark)
     try:
         warm_python_workers(spark)
@@ -245,10 +271,15 @@ def resolve_meta_refresh(
     Eager: one job collects the redirect targets; with none, ``parsed``
     comes back as is.  Each hop parses the corpus pages of the targets
     not yet probed (broadcast semi-join) into a cache (``cache_registry``)
-    and collects their own targets; the driver walks the chains, and one
-    broadcast join rewrites the redirecting rows.  The driver holds one
-    url per redirecting row and two per parsed target page, and the
-    target pages' parse rows are broadcast to that join.
+    and collects their own targets; the driver walks the chains, and
+    broadcast joins give each redirecting row that reaches a corpus page
+    its chain end's payload; it keeps its columns outside the payload
+    (``part_id`` too).  Only the redirecting rows are checkpointed (then
+    the targets' caches are released); the result is the other rows of
+    ``parsed`` (a filter) plus that checkpoint, so ``parsed`` stays the
+    one full copy of the parse and later jobs run no join.  The driver
+    holds one url per redirecting row and two per parsed target page,
+    and the target pages' parse rows are broadcast.
     """
     redirect = F.col("error_class") == "meta_refresh"
     next_url = F.expr("substring(error, 14)")
@@ -284,14 +315,24 @@ def resolve_meta_refresh(
         "first_url": pa.array(list(ends), pa.string()),
         "end_url": pa.array(list(ends.values()), pa.string()),
     })))
-    ended = redirect & (next_url == F.col("first_url"))
-    target_rows = reduce(DataFrame.unionByName, targets).withColumnRenamed("url", "end_url")
+    payload = ["feed_type", "feed", "entries", "error", "error_class"]
+    ends_rows = F.broadcast(reduce(DataFrame.unionByName, targets).select(
+        F.col("url").alias("end_url"), *(F.col(c).alias(f"end_{c}") for c in payload)
+    ))
     moved = (
-        parsed.join(end_of, ended)
-        .select("url", "warc_ts", "lang", "end_url")
-        .join(F.broadcast(target_rows.drop("warc_ts", "lang")), "end_url")
+        parsed.where(redirect)
+        .join(end_of, next_url == F.col("first_url"), "left")
+        .join(ends_rows, "end_url", "left")
+        .select(*(
+            F.when(F.col("end_url").isNull(), F.col(c)).otherwise(F.col(f"end_{c}")).alias(c)
+            if c in payload else c
+            for c in parsed.columns
+        ))
+        .localCheckpoint(eager=True)
     )
-    return parsed.join(end_of, ended, "left_anti").unionByName(moved.select(*parsed.columns))
+    for t in targets:  # read by nothing after the checkpoint
+        t.unpersist()
+    return parsed.where(~F.col("error_class").eqNullSafe("meta_refresh")).unionByName(moved)
 
 
 def _snapshot_triples(parsed: DataFrame, kept: Optional[DataFrame] = None) -> DataFrame:
@@ -439,12 +480,14 @@ def run_snapshot(
     kept.  Kept triples are re-linked and re-materialized with this run's,
     so the committed tables equal a full build's; lineage records only
     the parts this run parsed.
+    The parse runs once, into a local checkpoint: every later job (the
+    redirect-target collect too) reads a local checkpoint, so a lost
+    executor fails the run rather than re-parsing; a re-run re-derives.
     Pass ``stage_timings={}`` to collect per-stage wall seconds:
-    ``parse_sec`` (the raw parse and the redirect resolution, which
-    parses the redirect targets), ``link_cc_sec`` (checkpointing the
-    resolved parse, linking and CC) and ``write_sec`` (the commits and,
-    beside them, the lineage and error-histogram aggregate; lineage
-    last)."""
+    ``parse_sec`` (the parse checkpoint and the redirect resolution,
+    which parses the redirect targets), ``link_cc_sec`` (linking and CC)
+    and ``write_sec`` (the commits and, beside them, the lineage and
+    error-histogram aggregate; lineage last)."""
     if resume and snapshot_id in snapshots_of(out_root, "lineage"):
         rows = {t: read_manifest(out_root, t, snapshot_id)["row_count"]
                 for t in ("triples", "nodes", "edges", "lineage")}
@@ -478,22 +521,19 @@ def run_snapshot(
     # explicit url-hash partitioning before the Python stage (K11)
     todo = pages.repartition(n_parts, "part_id")
 
-    # cache the RAW parse (the expensive Python stage) — the redirect
-    # resolution re-reads this cache, never re-runs the parse
-    raw = parse_pages(todo).cache()
-    caches: list = [raw]
+    caches: list = []
     try:
         t0 = time.perf_counter()
-        # eager: collecting the redirect targets fills the raw cache
-        resolved = resolve_meta_refresh(raw, pages_full, cache_registry=caches)
+        # the one copy of the parse (the expensive Python stage), which
+        # every later job scans; redirects add only a checkpoint of their rows
+        parsed = resolve_meta_refresh(
+            add_part_id(parse_pages(todo), n_parts).localCheckpoint(eager=True),
+            pages_full, cache_registry=caches,
+        )
         if stage_timings is not None:
             stage_timings["parse_sec"] = round(time.perf_counter() - t0, 3)
 
         t0 = time.perf_counter()
-        # materialize the redirect-resolved PARSED table ONCE: every
-        # downstream job (linking/CC, the counts, the commits) scans it,
-        # and Spark would otherwise re-evaluate the resolve union per job
-        parsed = add_part_id(resolved, n_parts).localCheckpoint(eager=True)
         # link_and_canonicalize links eagerly and returns a driver-local
         # mapping (the broadcast dimension of the author join)
         canon = link_and_canonicalize(parsed, kept_triples=kept_triples)
@@ -528,10 +568,7 @@ def run_snapshot(
                 return pool.submit(inheritable_thread_target(spark)(fn), *args, **kwargs)
 
             # lineage counts only this run's triples, not the kept ones
-            f_counts = submit(
-                snapshot_counts, parsed,
-                add_part_id(emit_triples(parsed), n_parts, "src_url"), snapshot_id,
-            )
+            f_counts = submit(snapshot_counts, parsed, snapshot_id)
             f_triples = submit(
                 write_snapshot, triples, out_root, "triples", snapshot_id,
                 partition_by=["part_id"],

@@ -166,20 +166,44 @@ class TestSnapshots:
 
 
 class TestPipeline:
-    def test_run_snapshot_end_to_end(self, spark, tmp_path):
+    def test_run_snapshot_end_to_end(self, spark, tmp_path, monkeypatch):
+        from ffp_spark import pipeline
+
         pages = synth_pages(spark, 120, seed=3)
         tables = {t.name for t in spark.catalog.listTables()}
-        report = run_snapshot(spark, pages, str(tmp_path), snapshot_id=1, n_parts=8)
+
+        # the sizes of the storage RDDs a run has created when linking starts
+        def stored():
+            return {i.id(): i.memSize() + i.diskSize()
+                    for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+        before, held = stored(), []
+        link = pipeline.link_and_canonicalize
+
+        def recording_link(*args, **kwargs):
+            held.append(sorted(b for i, b in stored().items() if i not in before))
+            return link(*args, **kwargs)
+
+        monkeypatch.setattr(pipeline, "link_and_canonicalize", recording_link)
+        report = run_snapshot(spark, pages, str(tmp_path / "kg"), snapshot_id=1, n_parts=8)
+        # a redirect-free run holds one copy of the parse: its checkpoint
+        assert [len(sizes) for sizes in held] == [1], held
+        # with redirects, that copy and the checkpoint of the few rewritten
+        # rows; the redirect targets' caches are released
+        before, held = stored(), []
+        run_snapshot(spark, pages.unionByName(_redirects(spark)), str(tmp_path / "redirects"),
+                     snapshot_id=1, n_parts=8)
+        assert [len(sizes) for sizes in held] == [2] and held[0][0] * 20 < held[0][1], held
         # a run registers nothing in the session catalog
         assert {t.name for t in spark.catalog.listTables()} == tables
         assert report["pages"] == 120
         assert report["triples"] > 0
         assert report["nodes"] > 0
         assert report["edges"] > 0
-        triples = read_snapshot(spark, tmp_path, "triples")
+        triples = read_snapshot(spark, tmp_path / "kg", "triples")
         preds = {r.pred for r in triples.select("pred").distinct().collect()}
         assert preds == {"publishedAt", "author", "partOfFeed", "hasEntry"}
-        lineage = read_snapshot(spark, tmp_path, "lineage")
+        lineage = read_snapshot(spark, tmp_path / "kg", "lineage")
         assert lineage.filter("status = 'done'").count() == report["lineage_rows"]
         # lineage totals reconcile with the page count
         assert (
@@ -519,20 +543,43 @@ class TestPipeline:
         """The one counts aggregate, folded on the driver, equals
         partition_lineage joined to the per-part emit_triples count, and
         error_histogram: on a corpus with a redirect chain and a missing
-        redirect target, an empty corpus and an all-error corpus, at
-        any n_parts."""
+        redirect target, an empty corpus, an all-error corpus and a
+        corpus of sparse entries, at any n_parts."""
         from ffp_spark.metrics import error_histogram, partition_lineage, snapshot_counts
         from ffp_spark.pipeline import resolve_meta_refresh
         from ffp_spark.triples import emit_triples
         from ffp_spark.udfs import parse_pages
 
+        # entries without id, author or published, in a feed with neither
+        # id nor link (no feed node) and in one with an id
+        rss = (
+            b'<?xml version="1.0"?><rss version="2.0"><channel><title>No node</title>'
+            b"<item><title>a</title><guid>urn:a</guid>"
+            b"<pubDate>Mon, 06 Sep 2021 16:45:00 +0000</pubDate></item>"
+            b"<item><title>b</title><link>https://x.example/b</link>"
+            b"<author>bob@example.com (Bob)</author></item>"
+            b"<item><title>c</title><description>no id, no link</description></item>"
+            b"</channel></rss>"
+        )
+        atom = (
+            b'<?xml version="1.0"?><feed xmlns="http://www.w3.org/2005/Atom">'
+            b"<title>t</title><id>urn:feed:sparse</id>"
+            b"<entry><title>x</title><id>urn:e1</id></entry>"
+            b'<entry><title>y</title><link href="https://y.example/2"/>'
+            b"<author><name>Ann</name></author></entry></feed>"
+        )
         pages = synth_pages(spark, 40, seed=3)
         corpora = {
             "redirects": pages.unionByName(_redirects(spark)),
             "empty": pages.limit(0),
             "all_error": pages.withColumn("html", F.lit(b"plain bytes, not a feed")),
+            "sparse": spark.createDataFrame(
+                [(f"https://sparse{i}.example/", None, body, None, "en")
+                 for i, body in enumerate([rss, atom] * 3)],
+                PAGES_SCHEMA,
+            ),
         }
-        histograms = {}
+        histograms, entries_triples = {}, {}
         for name, corpus in corpora.items():
             raw = parse_pages(corpus).cache()
             try:
@@ -540,7 +587,7 @@ class TestPipeline:
                 for n_parts in (1, 7, 64):
                     parsed = add_part_id(resolved, n_parts)
                     triples = add_part_id(emit_triples(parsed), n_parts, "src_url")
-                    lineage, errors, n_pages = snapshot_counts(parsed, triples, 5)
+                    lineage, errors, n_pages = snapshot_counts(parsed, 5)
                     want = (
                         partition_lineage(parsed, 5)
                         .join(triples.groupBy("part_id").agg(F.count("*").alias("n_triples")),
@@ -557,12 +604,16 @@ class TestPipeline:
                     }, (name, n_parts)
                     assert n_pages == corpus.count(), (name, n_parts)
                     histograms[name] = errors
+                    entries_triples[name] = want.agg(F.sum("n_entries"), F.sum("n_triples")).first()
             finally:
                 raw.unpersist()
         # the corpora reach the error paths they are named for
         assert histograms["redirects"].get("meta_refresh") == 1
         assert histograms["empty"] == {}
         assert sum(histograms["all_error"].values()) == 40
+        # fewer than four triples per entry: 2 from each rss page's three
+        # entries and 5 from each atom page's two
+        assert tuple(entries_triples["sparse"]) == (15, 21)
 
     def test_deterministic_triples_across_runs(self, spark, tmp_path):
         pages = synth_pages(spark, 80, seed=5)
@@ -619,6 +670,38 @@ def test_build_session_survives_failed_worker_warmup(spark, monkeypatch, caplog)
                     spark.conf.unset(k)
     assert session.range(3).count() == 3
     assert "warm-up failed" in caplog.text
+
+
+def test_workers_import_the_package_the_driver_found(tmp_path):
+    """A driver that finds ffp_spark through its own sys.path alone (no
+    PYTHONPATH, a cwd outside the repo) parses: build_session ships the
+    package to the Python workers."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    driver = tmp_path / "driver.py"
+    driver.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {str(repo)!r})\n"
+        "from pyspark.sql import functions as F\n"
+        "from ffp_spark.datagen import synth_pages\n"
+        "from ffp_spark.pipeline import build_session\n"
+        "from ffp_spark.udfs import parse_pages\n"
+        "spark = build_session('ship-package', 'local[2]', shuffle_partitions=2)\n"
+        "parsed = parse_pages(synth_pages(spark, 5)).where(F.col('error').isNull())\n"
+        "print('parsed', parsed.count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["FFP_DRIVER_MEM"] = "1g"
+    run = subprocess.run(
+        [sys.executable, str(driver)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0 and "parsed 5" in run.stdout, run.stderr[-3000:]
 
 
 def test_job_main_builds_its_session_through_build_session(monkeypatch):
