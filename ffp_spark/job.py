@@ -37,17 +37,17 @@ from pathlib import Path
 
 
 def main(argv: list[str] | None = None) -> None:
+    from ffp_spark.pipeline import DEFAULT_PARTS, build_session, run_snapshot
+
     p = argparse.ArgumentParser(description="ffp-spark KG pipeline")
     p.add_argument("--pages", required=True, help="PAGES parquet path")
     p.add_argument("--out", required=True, help="output table root")
     p.add_argument("--snapshot-id", type=int, required=True)
-    p.add_argument("--n-parts", type=int, default=64)
+    p.add_argument("--n-parts", type=int, default=DEFAULT_PARTS)
     p.add_argument("--incremental-from", type=int, default=None)
     p.add_argument("--no-resume", action="store_true",
                    help="recompute and overwrite a committed snapshot")
     args = p.parse_args(argv)
-
-    from ffp_spark.pipeline import build_session, run_snapshot
 
     # the master comes from spark-submit; build_session adds the UTC
     # session time zone the lineage stamps assume, AQE skew join, the

@@ -23,9 +23,10 @@ Scale design notes (100 TB / 1000 executors):
   keeps, restamped), so a fresh and an incremental run commit the same
   graph: a set of edges and one least-labelled row per node;
 * the parse is held once, in the local checkpoint every later job
-  reads; meta-refresh resolution is one job over it when no page
-  redirects; otherwise it parses only the target pages, walks the chains
-  on the driver and checkpoints only the rewritten redirecting rows;
+  reads: the only data Spark holds in a run.  Meta-refresh resolution is
+  one job over it when no page redirects; otherwise the driver collects
+  the redirecting rows and the parsed target pages as Arrow, walks the
+  chains and adds the rewritten rows back as one local relation;
 * lineage, the error histogram and the page count come from one small
   grouped aggregate of that checkpoint, folded on the driver
   (:func:`metrics.snapshot_counts`, which counts triples by
@@ -257,6 +258,13 @@ def build_session(app: str, master: Optional[str] = None, shuffle_partitions: in
 REDIRECT_HOPS = 3
 
 
+def _redirect_target(row: dict) -> Optional[str]:
+    """The url a parsed row's meta refresh names, or None."""
+    if row["error_class"] != "meta_refresh":
+        return None
+    return row["error"][len("meta_refresh:"):]
+
+
 def resolve_meta_refresh(
     parsed: DataFrame, pages: DataFrame, cache_registry: Optional[list] = None
 ) -> DataFrame:
@@ -266,73 +274,58 @@ def resolve_meta_refresh(
     (fastfeedparser ``main.py:877-893``): a row with
     ``error='meta_refresh:<url>'`` takes, under its own url, the parse of
     the last corpus page its chain reaches within ``REDIRECT_HOPS`` hops;
-    a target missing from the corpus leaves the row naming it.
+    a target missing from the corpus leaves the row naming it.  A url
+    the corpus holds several captures of resolves to one: the newest
+    ``warc_ts``, a tie broken by a total order on the parsed row.
 
-    Eager: one job collects the redirect targets; with none, ``parsed``
-    comes back as is.  Each hop parses the corpus pages of the targets
-    not yet probed (broadcast semi-join) into a cache (``cache_registry``)
-    and collects their own targets; the driver walks the chains, and
-    broadcast joins give each redirecting row that reaches a corpus page
-    its chain end's payload; it keeps its columns outside the payload
-    (``part_id`` too).  Only the redirecting rows are checkpointed (then
-    the targets' caches are released); the result is the other rows of
-    ``parsed`` (a filter) plus that checkpoint, so ``parsed`` stays the
-    one full copy of the parse and later jobs run no join.  The driver
-    holds one url per redirecting row and two per parsed target page,
-    and the target pages' parse rows are broadcast.
+    Eager, on the driver: one job collects the redirecting rows as Arrow;
+    with none, ``parsed`` comes back as is.  Each hop parses the corpus
+    pages of the targets not yet probed (a broadcast semi-join, which
+    still scans the whole ``pages`` frame) and collects them as Arrow.
+    The driver walks the chains and gives each redirecting row that
+    reaches a corpus page its chain end's payload (``feed_type``,
+    ``feed``, ``entries``, ``error``, ``error_class``); it keeps its
+    other columns, ``part_id`` too.  The result is the other rows of
+    ``parsed`` (a filter) plus one Arrow local relation of the rewritten
+    rows, so ``parsed`` stays the only data Spark holds and later jobs
+    run no join.  The driver holds every redirecting row plus the parsed
+    rows of the target pages.
+
+    ``cache_registry`` is kept for ``perfbench/replay.py``'s call and
+    nothing is registered in it; it goes with the replay (ROADMAP
+    Direction 1).
     """
-    redirect = F.col("error_class") == "meta_refresh"
-    next_url = F.expr("substring(error, 14)")
-    firsts = {r[0] for r in parsed.where(redirect).select(next_url).collect()}
-    if not firsts:
+    moved = parsed.where(F.col("error_class") == "meta_refresh").toArrow()
+    if not moved.num_rows:
         return parsed
     spark = parsed.sparkSession
-    hop: dict[str, Optional[str]] = {}  # parsed target -> its own target
-    targets: list[DataFrame] = []
-    probed: set[str] = set()
-    todo = firsts
-    while todo and len(targets) < REDIRECT_HOPS:
+    rows = moved.to_pylist()
+    captures: dict[str, dict] = {}  # parsed target url -> its newest capture
+    todo, probed = {_redirect_target(r) for r in rows}, set()
+    for _ in range(REDIRECT_HOPS):
+        if not todo:
+            break
         probed |= todo
         urls = spark.createDataFrame(pa.table({"url": pa.array(sorted(todo), pa.string())}))
-        # dropDuplicates: a re-crawled target is parsed once
-        targets.append(parse_pages(
-            pages.join(F.broadcast(urls), "url", "left_semi").dropDuplicates(["url"])
-        ).cache())
-        if cache_registry is not None:
-            cache_registry.append(targets[-1])
-        found = dict(targets[-1].select("url", F.when(redirect, next_url)).collect())
-        hop.update(found)
-        todo = {u for u in found.values() if u} - probed
+        found = parse_pages(pages.join(F.broadcast(urls), "url", "left_semi")).toArrow()
+        # sorted oldest warc_ts first (a null one before any), so each url
+        # keeps its newest capture; a tie goes by the row's repr, a total order
+        hop = {r["url"]: r for r in sorted(found.to_pylist(), key=lambda r: (
+            r["warc_ts"] is not None, r["warc_ts"] or datetime.min, repr(r)))}
+        captures.update(hop)
+        todo = {_redirect_target(r) for r in hop.values()} - {None} - probed
 
-    ends = {}  # first target -> last corpus page its chain reaches
-    for first in firsts:
-        nxt = first
+    for row in rows:
+        end, nxt = None, _redirect_target(row)
         for _ in range(REDIRECT_HOPS):
-            if nxt not in hop:
+            if nxt not in captures:
                 break
-            ends[first], nxt = nxt, hop[nxt]
-    end_of = F.broadcast(spark.createDataFrame(pa.table({
-        "first_url": pa.array(list(ends), pa.string()),
-        "end_url": pa.array(list(ends.values()), pa.string()),
-    })))
-    payload = ["feed_type", "feed", "entries", "error", "error_class"]
-    ends_rows = F.broadcast(reduce(DataFrame.unionByName, targets).select(
-        F.col("url").alias("end_url"), *(F.col(c).alias(f"end_{c}") for c in payload)
-    ))
-    moved = (
-        parsed.where(redirect)
-        .join(end_of, next_url == F.col("first_url"), "left")
-        .join(ends_rows, "end_url", "left")
-        .select(*(
-            F.when(F.col("end_url").isNull(), F.col(c)).otherwise(F.col(f"end_{c}")).alias(c)
-            if c in payload else c
-            for c in parsed.columns
-        ))
-        .localCheckpoint(eager=True)
-    )
-    for t in targets:  # read by nothing after the checkpoint
-        t.unpersist()
-    return parsed.where(~F.col("error_class").eqNullSafe("meta_refresh")).unionByName(moved)
+            end = captures[nxt]
+            nxt = _redirect_target(end)
+        if end is not None:
+            row.update({c: end[c] for c in ("feed_type", "feed", "entries", "error", "error_class")})
+    resolved = spark.createDataFrame(pa.Table.from_pylist(rows, schema=moved.schema), parsed.schema)
+    return parsed.where(~F.col("error_class").eqNullSafe("meta_refresh")).unionByName(resolved)
 
 
 def _snapshot_triples(parsed: DataFrame, kept: Optional[DataFrame] = None) -> DataFrame:
@@ -480,12 +473,15 @@ def run_snapshot(
     kept.  Kept triples are re-linked and re-materialized with this run's,
     so the committed tables equal a full build's; lineage records only
     the parts this run parsed.
-    The parse runs once, into a local checkpoint: every later job (the
-    redirect-target collect too) reads a local checkpoint, so a lost
-    executor fails the run rather than re-parsing; a re-run re-derives.
+    The parse runs once, into a local checkpoint, the only data Spark
+    holds in the run: every later job (the redirecting rows' collect too)
+    reads it, so a lost executor fails the run rather than re-parsing; a
+    re-run re-derives.  The rewritten redirecting rows live on the
+    driver, as a local relation.
     Pass ``stage_timings={}`` to collect per-stage wall seconds:
-    ``parse_sec`` (the parse checkpoint and the redirect resolution,
-    which parses the redirect targets), ``link_cc_sec`` (linking and CC)
+    ``parse_sec`` (the parse checkpoint and the redirect resolution: the
+    redirecting rows' collect and, per hop, a parse of the target pages,
+    which scans the whole input), ``link_cc_sec`` (linking and CC)
     and ``write_sec`` (the commits and, beside them, the lineage and
     error-histogram aggregate; lineage last)."""
     if resume and snapshot_id in snapshots_of(out_root, "lineage"):
@@ -521,79 +517,73 @@ def run_snapshot(
     # explicit url-hash partitioning before the Python stage (K11)
     todo = pages.repartition(n_parts, "part_id")
 
-    caches: list = []
-    try:
-        t0 = time.perf_counter()
-        # the one copy of the parse (the expensive Python stage), which
-        # every later job scans; redirects add only a checkpoint of their rows
-        parsed = resolve_meta_refresh(
-            add_part_id(parse_pages(todo), n_parts).localCheckpoint(eager=True),
-            pages_full, cache_registry=caches,
+    t0 = time.perf_counter()
+    # the one copy of the parse (the expensive Python stage), which
+    # every later job scans; redirects add only a local relation of their rows
+    parsed = resolve_meta_refresh(
+        add_part_id(parse_pages(todo), n_parts).localCheckpoint(eager=True), pages_full
+    )
+    if stage_timings is not None:
+        stage_timings["parse_sec"] = round(time.perf_counter() - t0, 3)
+
+    t0 = time.perf_counter()
+    # link_and_canonicalize links eagerly and returns a driver-local
+    # mapping (the broadcast dimension of the author join)
+    canon = link_and_canonicalize(parsed, kept_triples=kept_triples)
+    triples, nodes, edges = materialize_graph(
+        parsed, canon, snapshot_id, n_parts, kept_triples, kept_nodes
+    )
+    if stage_timings is not None:
+        stage_timings["link_cc_sec"] = round(time.perf_counter() - t0, 3)
+
+    # the seen-url set comes off the MATERIALIZED parsed table
+    # (row-identical to the source: one row per input page, same
+    # url-hash part_id) — re-scanning a generated/WARC source would
+    # re-run its Python ingest.  The anti-join made the delta's urls
+    # disjoint from the parent's, so the union keeps, as a full build
+    # does, one row per crawled page
+    seen = parsed.select("url", "part_id")
+    if prior_seen is not None:
+        seen = seen.unionByName(add_part_id(prior_seen.select("url"), n_parts))
+
+    # commit protocol: data tables first, lineage LAST — the lineage
+    # commit marks this snapshot final, so a crash anywhere earlier
+    # leaves every default read on the previous snapshot and
+    # re-derives everything on the next run.
+    # The data tables and the counts aggregate run CONCURRENTLY
+    # (independent dirs and jobs): overlapping them hides per-job
+    # latency.  Each worker thread gets its own copy of the caller's
+    # local properties (job group, description): one shared copy
+    # would carry one thread's call site into another's jobs.
+    t0 = time.perf_counter()
+    with ThreadPoolExecutor(max_workers=5) as pool:
+        def submit(fn, *args, **kwargs):
+            return pool.submit(inheritable_thread_target(spark)(fn), *args, **kwargs)
+
+        # lineage counts only this run's triples, not the kept ones
+        f_counts = submit(snapshot_counts, parsed, snapshot_id)
+        f_triples = submit(
+            write_snapshot, triples, out_root, "triples", snapshot_id,
+            partition_by=["part_id"],
         )
-        if stage_timings is not None:
-            stage_timings["parse_sec"] = round(time.perf_counter() - t0, 3)
-
-        t0 = time.perf_counter()
-        # link_and_canonicalize links eagerly and returns a driver-local
-        # mapping (the broadcast dimension of the author join)
-        canon = link_and_canonicalize(parsed, kept_triples=kept_triples)
-        triples, nodes, edges = materialize_graph(
-            parsed, canon, snapshot_id, n_parts, kept_triples, kept_nodes
-        )
-        if stage_timings is not None:
-            stage_timings["link_cc_sec"] = round(time.perf_counter() - t0, 3)
-
-        # the seen-url set comes off the MATERIALIZED parsed table
-        # (row-identical to the source: one row per input page, same
-        # url-hash part_id) — re-scanning a generated/WARC source would
-        # re-run its Python ingest.  The anti-join made the delta's urls
-        # disjoint from the parent's, so the union keeps, as a full build
-        # does, one row per crawled page
-        seen = parsed.select("url", "part_id")
-        if prior_seen is not None:
-            seen = seen.unionByName(add_part_id(prior_seen.select("url"), n_parts))
-
-        # commit protocol: data tables first, lineage LAST — the lineage
-        # commit marks this snapshot final, so a crash anywhere earlier
-        # leaves every default read on the previous snapshot and
-        # re-derives everything on the next run.
-        # The data tables and the counts aggregate run CONCURRENTLY
-        # (independent dirs and jobs): overlapping them hides per-job
-        # latency.  Each worker thread gets its own copy of the caller's
-        # local properties (job group, description): one shared copy
-        # would carry one thread's call site into another's jobs.
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=5) as pool:
-            def submit(fn, *args, **kwargs):
-                return pool.submit(inheritable_thread_target(spark)(fn), *args, **kwargs)
-
-            # lineage counts only this run's triples, not the kept ones
-            f_counts = submit(snapshot_counts, parsed, snapshot_id)
-            f_triples = submit(
-                write_snapshot, triples, out_root, "triples", snapshot_id,
-                partition_by=["part_id"],
-            )
-            f_nodes = submit(write_snapshot, nodes, out_root, "nodes", snapshot_id)
-            f_edges = submit(write_snapshot, edges, out_root, "edges", snapshot_id)
-            f_seen = submit(write_snapshot, seen, out_root, "pages_seen", snapshot_id)
-            m_triples = f_triples.result()
-            m_nodes = f_nodes.result()
-            m_edges = f_edges.result()
-            f_seen.result()
-            lineage, errors, n_pages = f_counts.result()
-        # one file for a row per part; one job, the last of the run
-        m_lineage = write_snapshot(
-            spark.createDataFrame(lineage).coalesce(1)
-            .withColumn("started_ts", F.lit(started_ts))
-            .withColumn("finished_ts", F.lit(_utc_now())),
-            out_root, "lineage", snapshot_id,
-            extra={"n_pages": n_pages, "errors": errors},
-        )
-        if stage_timings is not None:
-            stage_timings["write_sec"] = round(time.perf_counter() - t0, 3)
-    finally:
-        for df in caches:
-            df.unpersist()
+        f_nodes = submit(write_snapshot, nodes, out_root, "nodes", snapshot_id)
+        f_edges = submit(write_snapshot, edges, out_root, "edges", snapshot_id)
+        f_seen = submit(write_snapshot, seen, out_root, "pages_seen", snapshot_id)
+        m_triples = f_triples.result()
+        m_nodes = f_nodes.result()
+        m_edges = f_edges.result()
+        f_seen.result()
+        lineage, errors, n_pages = f_counts.result()
+    # one file for a row per part; one job, the last of the run
+    m_lineage = write_snapshot(
+        spark.createDataFrame(lineage).coalesce(1)
+        .withColumn("started_ts", F.lit(started_ts))
+        .withColumn("finished_ts", F.lit(_utc_now())),
+        out_root, "lineage", snapshot_id,
+        extra={"n_pages": n_pages, "errors": errors},
+    )
+    if stage_timings is not None:
+        stage_timings["write_sec"] = round(time.perf_counter() - t0, 3)
     return {
         "snapshot_id": snapshot_id,
         "pages": n_pages,

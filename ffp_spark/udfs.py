@@ -172,8 +172,8 @@ def parse_page_rows(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatc
                 rec["error"] = str(exc)[:500]
                 rec["error_class"] = _classify_error(exc)
                 # offline analogue of the reference's meta-refresh retry
-                # (main.py:877-893): record the redirect target so a later
-                # self-join on url == redirect can resolve it (SURVEY S3)
+                # (main.py:877-893): record the redirect target so
+                # pipeline.resolve_meta_refresh can resolve it (SURVEY S3)
                 if rec["error_class"] == "html_page":
                     try:
                         from .feedparse import meta_refresh_url

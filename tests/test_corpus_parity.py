@@ -217,14 +217,48 @@ class TestMetaRefreshResolution:
         )
         assert rows == [(_u(name), *rest) for name, *rest in expected]
 
-    def test_redirect_free_parse_runs_at_most_one_job(self, spark):
-        from ffp_spark.datagen import synth_pages
+    def test_recrawled_target_resolves_to_its_newest_capture(self, spark):
+        from datetime import datetime
+
+        from ffp_spark.pipeline import resolve_meta_refresh
+
+        def capture(year, title):
+            return (_u("t"), datetime(year, 1, 1), bytearray(_RSS.replace(b"Target Feed", title)),
+                    None, "en")
+
+        origin = (_u("o"), datetime(2023, 5, 6, 7, 8, 9, 123456),
+                  bytearray(_redirect_html(_u("t"))), None, "de")
+
+        def resolve(captures):
+            pages = spark.createDataFrame([origin, *captures], _PAGES_DDL)
+            return next(r for r in resolve_meta_refresh(parse_pages(pages), pages).collect()
+                        if r.url == _u("o"))
+
+        old, new = capture(2020, b"Old"), capture(2024, b"New")
+        for captures in ([old, new], [new, old]):
+            row = resolve(captures)
+            # the newest capture's feed, whatever the input order
+            assert row.feed.title == "New", captures
+            # the redirecting row keeps its own columns outside the payload
+            assert (row.url, row.warc_ts, row.lang) == (origin[0], origin[1], origin[4])
+        # captures tied on warc_ts: one pick, the same in both orders
+        tied = [capture(2024, b"Left"), capture(2024, b"Right")]
+        assert resolve(tied) == resolve(tied[::-1])
+
+    @pytest.mark.parametrize("redirects", [0, 1], ids=["redirect-free", "one-hop"])
+    def test_resolution_runs_one_job_plus_two_per_hop(self, spark, redirects):
+        from ffp_spark.datagen import synth_page, synth_pages
         from ffp_spark.pipeline import resolve_meta_refresh
 
         pages = synth_pages(spark, 40)
+        if redirects:  # one refresh page to a corpus feed: one hop
+            pages = pages.unionByName(spark.createDataFrame(
+                [(_u("o"), None, bytearray(_redirect_html(synth_page(42, 7)["url"])), None, "en")],
+                _PAGES_DDL,
+            ))
         parsed = parse_pages(pages).cache()
         try:
-            assert parsed.where("error_class = 'meta_refresh'").count() == 0
+            assert parsed.where("error_class = 'meta_refresh'").count() == redirects
             sc = spark.sparkContext
 
             def jobs(group, run):
@@ -236,10 +270,13 @@ class TestMetaRefreshResolution:
                 sc._jsc.sc().listenerBus().waitUntilEmpty()
                 return len(sc.statusTracker().getJobIdsForGroup(group))
 
-            # the jobs resolve_meta_refresh adds to reading its input
-            plain = jobs("parse-only", lambda: parsed.collect())
-            resolved = jobs("resolve", lambda: resolve_meta_refresh(parsed, pages).collect())
-            assert resolved - plain <= 1, (plain, resolved)
+            # the jobs resolve_meta_refresh adds to reading its input: the
+            # redirecting rows' collect, then per hop two, the broadcast of
+            # the target urls (one task) and the targets' parse
+            plain = jobs(f"parse-only-{redirects}", lambda: parsed.collect())
+            resolved = jobs(f"resolve-{redirects}",
+                            lambda: resolve_meta_refresh(parsed, pages).collect())
+            assert resolved - plain <= 1 + 2 * redirects, (plain, resolved)
         finally:
             parsed.unpersist()
 
